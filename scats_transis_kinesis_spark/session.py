@@ -15,6 +15,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+WORKER_DAEMON_MODULE = "scats_transis_kinesis_spark.worker_daemon"
 
 
 def get_session(
@@ -70,6 +71,10 @@ def get_session(
         # accumulate across a 160-query gate/bench run.  5min bounds the
         # accumulation window at negligible GC cost.
         .config("spark.cleaner.periodicGC.interval", "5min")
+        # Python workers fork from the engine's daemon, which stops each
+        # task from re-reading pyspark.zip and the Spark jar (about
+        # 200 ms per task below CPython 3.13; see worker_daemon.py).
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -20,6 +20,10 @@ Engine-side differences (deliberate):
   deployment dedupes replayed batches on (batchId, partition_key,
   sequence) downstream, upgrading the reference's at-least-once
   double-send on retry-after-partial-write (SURVEY.md §7.4).
+- A record still not accepted after the throttle retry, or rejected
+  with any other error code, fails the batch (the reference drops
+  non-throttle failures silently), so a partly delivered batch is never
+  marked committed.
 
 Rows are collected per micro-batch partition via ``foreachPartition``
 (each executor ships its own partition to the stream — the put calls
@@ -29,6 +33,7 @@ parallelize across the cluster; nothing funnels through the driver).
 from __future__ import annotations
 
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -45,7 +50,9 @@ class ThrottlingKinesisStub:
 
     Throttles any record whose data contains ``fail_marker`` on the
     first attempt, succeeding on retry — the same trick as the
-    reference's own mock (reference: tests.py:156-169).
+    reference's own mock (reference: tests.py:156-169).  ``error_code``
+    swaps the throttle for another per-record failure.  Like Kinesis, it
+    rejects a call with an empty ``Records`` list.
 
     With ``state_dir`` set, attempt-tracking and the sent log live on
     the filesystem, so the stub works *across process boundaries* —
@@ -56,6 +63,7 @@ class ThrottlingKinesisStub:
     state_dir: str | None = None
     fail_marker: bytes = b'"__throttle__"'
     fail_always: bool = False
+    error_code: str = THROTTLE_ERROR
     sent: list[dict] = field(default_factory=list)
     n_calls: int = 0
     _seen: set = field(default_factory=set)
@@ -103,6 +111,8 @@ class ThrottlingKinesisStub:
     def put_records(self, StreamName: str, Records: list[dict]) -> dict:  # noqa: N803
         import hashlib
 
+        if not Records:
+            raise ValueError("put_records: Records must hold at least 1 entry")
         self.n_calls += 1
         entries = []
         n_failed = 0
@@ -111,7 +121,7 @@ class ThrottlingKinesisStub:
             marked = self.fail_marker in rec["Data"]
             if marked and (self.fail_always or self._first_attempt(key)):
                 n_failed += 1
-                entries.append({"ErrorCode": THROTTLE_ERROR, "ErrorMessage": "throttled"})
+                entries.append({"ErrorCode": self.error_code, "ErrorMessage": "rejected"})
             else:
                 self._log_sent(rec)
                 entries.append({"SequenceNumber": str(self.n_calls), "ShardId": "shard-0"})
@@ -124,14 +134,36 @@ def _chunks(seq: list, n: int):
         yield seq[i : i + n]
 
 
-def _failed_subset(records: list[dict], response: dict) -> list[dict]:
-    """K4 — positional zip, keep throttled entries only
-    (reference: kinesis_producer.py:87-98)."""
+def _rejected(records: list[dict], response: dict) -> list[tuple[dict, str]]:
+    """K4 — positional zip of a put_records request with its response
+    entries (reference: kinesis_producer.py:87-98), keeping every record
+    the stream did not accept together with its error code."""
     return [
-        rec
-        for rec, entry in zip(records, response["Records"])
-        if entry.get("ErrorCode") == THROTTLE_ERROR
+        (rec, entry["ErrorCode"])
+        for rec, entry in zip(records, response["Records"], strict=True)
+        if entry.get("ErrorCode")
     ]
+
+
+def _put_chunk(client, stream_name: str, chunk: list[dict], backoff_s: float, batch_id: int) -> None:
+    """Send one chunk; retry its throttled subset once after ``backoff_s``
+    (reference parity) and raise if any record is still not accepted,
+    naming each error code with its record count."""
+    rejected = _rejected(chunk, client.put_records(StreamName=stream_name, Records=chunk))
+    throttled = [rec for rec, code in rejected if code == THROTTLE_ERROR]
+    if throttled:
+        time.sleep(backoff_s)
+        retry = client.put_records(StreamName=stream_name, Records=throttled)
+        rejected = [r for r in rejected if r[1] != THROTTLE_ERROR] + _rejected(throttled, retry)
+    if rejected:
+        codes = Counter(code for _, code in rejected)
+        detail = ", ".join(
+            f"{n} still throttled after retry ({code})" if code == THROTTLE_ERROR else f"{n} {code}"
+            for code, n in sorted(codes.items())
+        )
+        raise RuntimeError(
+            f"kinesis sink: {len(rejected)} records not accepted (batch {batch_id}): {detail}"
+        )
 
 
 class KinesisBatchWriter:
@@ -202,17 +234,7 @@ class KinesisBatchWriter:
                 {"PartitionKey": r["partition_key"], "Data": bytes(r["data"])} for r in rows
             ]
             for chunk in _chunks(records, batch_size):
-                resp = client.put_records(StreamName=stream_name, Records=chunk)
-                if resp.get("FailedRecordCount", 0):
-                    failed = _failed_subset(chunk, resp)
-                    time.sleep(backoff_s)
-                    retry_resp = client.put_records(StreamName=stream_name, Records=failed)
-                    if retry_resp.get("FailedRecordCount", 0):
-                        still = _failed_subset(failed, retry_resp)
-                        raise RuntimeError(
-                            f"kinesis sink: {len(still)} records still throttled "
-                            f"after retry (batch {batch_id})"
-                        )
+                _put_chunk(client, stream_name, chunk, backoff_s, batch_id)
 
         enveloped.foreachPartition(send_partition)
         self._mark_committed(batch_id)

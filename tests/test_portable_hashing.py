@@ -89,71 +89,3 @@ def test_epoch_conversion_fixed_points(spark, iso, epoch):
     df = spark.createDataFrame([(iso,)], "s string")
     [row] = df.select(epoch_from_iso8601("s").alias("e")).collect()
     assert row["e"] == epoch
-
-
-# --- XML parser-path equivalence ------------------------------------------
-# parse_transis_documents has two implementations (JVM from_xml and the
-# Arrow ElementTree fallback); they must emit identical rows for any
-# document, or a Spark build without XML support silently changes
-# semantics.
-
-SITE_ID = st.integers(min_value=0, max_value=99999)
-COUNT = st.one_of(st.none(), st.integers(min_value=0, max_value=500))
-
-
-@st.composite
-def transis_doc(draw):
-    n_sites = draw(st.integers(min_value=0, max_value=4))
-    sites = []
-    for _ in range(n_sites):
-        dets = draw(st.lists(st.tuples(SITE_ID, COUNT), max_size=5))
-        det_xml = "".join(
-            f'<Detector Did="{d}"' + (f' count="{c}"' if c is not None else "") + "/>"
-            for d, c in dets
-        )
-        sid = draw(SITE_ID)
-        sites.append(
-            f'<DetectorCountMessage reg="R{sid % 7}" Sid="{sid}" '
-            f'date="2019-10-03T15:43:00+10:00">'
-            f"<Detectors>{det_xml}</Detectors></DetectorCountMessage>"
-        )
-    body = f'<DetectorCountMessages>{"".join(sites)}</DetectorCountMessages>' if sites else ""
-    return f'<TransisResponse error="false">{body}</TransisResponse>'
-
-
-@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(st.lists(transis_doc(), min_size=1, max_size=4))
-def test_xml_parser_paths_agree(spark, docs):
-    from scats_transis_kinesis_spark.sources.xml import (
-        _parse_with_elementtree,
-        parse_transis_documents,
-    )
-
-    df = spark.createDataFrame([(d,) for d in docs], "value string")
-
-    def rows(parsed):
-        out = []
-        for r in parsed.collect():
-            msgs = r["messages"]
-            out.append(
-                (
-                    r["error"],
-                    r["error_msg"],
-                    None
-                    if msgs is None
-                    else tuple(
-                        (
-                            m["reg"],
-                            m["Sid"],
-                            m["date"],
-                            None
-                            if m["detectors"] is None
-                            else tuple((d["Did"], d["count"]) for d in m["detectors"]),
-                        )
-                        for m in msgs
-                    ),
-                )
-            )
-        return sorted(out, key=repr)
-
-    assert rows(parse_transis_documents(df)) == rows(_parse_with_elementtree(df, "value"))

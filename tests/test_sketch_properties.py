@@ -18,9 +18,11 @@ audit can't:
    2.3σ across this sweep), so the tests are stable, while a
    mis-routed-parameter bug (effective lgK≤6 → RSE≥13%) still fails.
 2. **The accuracy parameter actually reaches the sketch**: at a scale
-   deep in estimation mode, different lgK / k values must produce
-   different estimates (they are deterministic for a fixed input, and
-   identical estimates across a 16× size change mean the knob is dead).
+   deep in estimation mode, different lgK values must produce different
+   HLL/theta estimates (they are hash-deterministic for a fixed input,
+   and identical estimates across a 16× size change mean the knob is
+   dead).  KLL estimates are random, so its k is checked through the
+   sketch's serialized size instead.
 3. **Mergeability is lossless where the algorithm guarantees it**: an
    HLL sketch is a max-per-bucket array and a theta sketch keeps the k
    smallest hashes, so the union of per-partition sketches is
@@ -126,6 +128,10 @@ def test_kll_rank_error_within_published_bounds_across_k(spark):
                     f"kll_sketch_agg_double(v, {k}), {q})"
                 ).alias(f"k{k}_q{int(q * 100)}")
             )
+    for k in (200, 800):
+        aggs.append(
+            F.expr(f"length(kll_sketch_agg_double(v, {k}))").alias(f"k{k}_bytes")
+        )
     row = df.agg(*aggs).first()
     for k, eps in KLL_EPS.items():
         for q in (0.5, 0.99):
@@ -137,9 +143,9 @@ def test_kll_rank_error_within_published_bounds_across_k(spark):
                 f"KLL k={k} q={q}: returned value {est} has rank error "
                 f"{abs(est / n - q):.5f} > published eps {eps}"
             )
-    # The k parameter must reach the sketch (16x size change moves the
-    # deterministic estimate).
-    assert row["k200_q50"] != row["k800_q50"]
+    # The k parameter must reach the sketch.  The estimates are random
+    # (equal medians across k happen by chance); the retained size is not.
+    assert row["k200_bytes"] != row["k800_bytes"]
 
 
 def test_union_of_partition_sketches_is_identical_to_whole(spark):

@@ -200,6 +200,78 @@ def test_kinesis_sink_raises_when_retry_exhausted(spark):
         assert "still throttled" in str(exc_info.value)
 
 
+def test_kinesis_sink_raises_on_non_throttle_failure_without_committing(spark):
+    # A record rejected with a non-throttle code must fail the batch: it
+    # is not retried, and the batch is never marked committed.
+    with tempfile.TemporaryDirectory() as d:
+        stub_dir = os.path.join(d, "stub")
+        os.makedirs(stub_dir)
+        commits = os.path.join(d, "commits")
+        writer = KinesisBatchWriter(
+            client_factory=lambda: ThrottlingKinesisStub(
+                state_dir=stub_dir, error_code="InternalFailure"
+            ),
+            stream_name="scats",
+            partition_key_col="region",
+            backoff_s=0.01,
+            committed_marker_dir=commits,
+        )
+        df = spark.createDataFrame(
+            [("ROZ", "ok"), ("ROZ", "__throttle__")], "region string, note string"
+        ).coalesce(1)
+        with pytest.raises(Exception) as exc_info:
+            writer.write_batch(df, batch_id=3)
+        assert "1 InternalFailure" in str(exc_info.value)
+        assert not os.path.exists(os.path.join(commits, "batch_3"))
+
+
+class _ScriptedKinesis:
+    """Answers each put_records call with the next list of per-record
+    error codes (None = accepted) and records the request sizes."""
+
+    def __init__(self, *replies):
+        self.replies = list(replies)
+        self.calls = []
+
+    def put_records(self, StreamName, Records):  # noqa: N803
+        self.calls.append(len(Records))
+        codes = self.replies.pop(0)
+        assert len(codes) == len(Records)
+        return {
+            "FailedRecordCount": sum(c is not None for c in codes),
+            "Records": [{"ErrorCode": c} if c else {"SequenceNumber": "1"} for c in codes],
+        }
+
+
+def test_kinesis_chunk_retries_throttles_once_and_names_other_codes():
+    from scats_transis_kinesis_spark.streaming.kinesis_sink import THROTTLE_ERROR, _put_chunk
+
+    chunk = [{"PartitionKey": "k", "Data": b"%d" % i} for i in range(4)]
+    client = _ScriptedKinesis(
+        [None, THROTTLE_ERROR, "InternalFailure", THROTTLE_ERROR], [None, THROTTLE_ERROR]
+    )
+    with pytest.raises(RuntimeError) as exc_info:
+        _put_chunk(client, "s", chunk, backoff_s=0.0, batch_id=5)
+    # One retry carrying only the throttled pair.
+    assert client.calls == [4, 2]
+    msg = str(exc_info.value)
+    assert "2 records not accepted (batch 5)" in msg
+    assert "1 InternalFailure" in msg
+    assert f"1 still throttled after retry ({THROTTLE_ERROR})" in msg
+
+
+def test_kinesis_chunk_never_sends_an_empty_retry():
+    from scats_transis_kinesis_spark.streaming.kinesis_sink import _put_chunk
+
+    chunk = [{"PartitionKey": "k", "Data": b"x"}]
+    client = _ScriptedKinesis(["InternalFailure"])
+    with pytest.raises(RuntimeError, match="1 InternalFailure"):
+        _put_chunk(client, "s", chunk, backoff_s=0.0, batch_id=0)
+    assert client.calls == [1]
+    with pytest.raises(ValueError):
+        ThrottlingKinesisStub().put_records(StreamName="s", Records=[])
+
+
 def test_audit_listener_lifecycle(spark):
     listener = JobAuditListener(job_name="test_job")
     spark.streams.addListener(listener)

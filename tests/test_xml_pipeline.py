@@ -3,8 +3,14 @@ consumer + response-model suites (reference: tests.py:17-118)."""
 
 from __future__ import annotations
 
+import re
+
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from scats_transis_kinesis_spark import schemas
+from scats_transis_kinesis_spark.operators.envelope import to_kinesis_envelope
 from scats_transis_kinesis_spark.operators.flatten import explode_messages
 from scats_transis_kinesis_spark.operators.projection import (
     assert_no_error_documents,
@@ -92,6 +98,120 @@ def test_is_empty_predicate(spark):
     msgs = explode_messages(_docs(spark, XML_TWO_SITES))
     flags = {r["Sid"]: r["is_empty"] for r in is_empty_message(msgs).collect()}
     assert flags == {"2087": False, "8": True}
+
+
+# --- from_xml against expected rows ---------------------------------------
+# Each generated document comes with the row parse_transis_documents must
+# emit: (error, error_msg, messages), where messages is None or a tuple of
+# (reg, Sid, date, detectors) and detectors is None or (Did, count) pairs.
+
+SITE_ID = st.integers(min_value=0, max_value=99999)
+COUNT = st.one_of(st.none(), st.integers(min_value=0, max_value=500))
+DATE = "2019-10-03T15:43:00+10:00"
+
+
+@st.composite
+def transis_doc(draw):
+    n_sites = draw(st.integers(min_value=0, max_value=4))
+    sites, messages = [], []
+    for _ in range(n_sites):
+        dets = draw(st.lists(st.tuples(SITE_ID, COUNT), max_size=5))
+        det_xml = "".join(
+            f'<Detector Did="{d}"' + (f' count="{c}"' if c is not None else "") + "/>"
+            for d, c in dets
+        )
+        sid = draw(SITE_ID)
+        sites.append(
+            f'<DetectorCountMessage reg="R{sid % 7}" Sid="{sid}" date="{DATE}">'
+            f"<Detectors>{det_xml}</Detectors></DetectorCountMessage>"
+        )
+        # An empty <Detectors> container parses as NULL, not [].
+        detectors = (
+            tuple((str(d), None if c is None else str(c)) for d, c in dets) if dets else None
+        )
+        messages.append((f"R{sid % 7}", str(sid), DATE, detectors))
+    body = f'<DetectorCountMessages>{"".join(sites)}</DetectorCountMessages>' if sites else ""
+    doc = f'<TransisResponse error="false">{body}</TransisResponse>'
+    return doc, ("false", None, tuple(messages) if messages else None)
+
+
+FIXED_DOCS = [
+    (
+        XML_TWO_SITES,
+        (
+            "false",
+            None,
+            (
+                ("ROZ", "2087", DATE, (("1", "5"), ("2", "3"), (None, "9"), ("18", "12"))),
+                ("ROZ", "8", DATE, None),
+            ),
+        ),
+    ),
+    (XML_EMPTY, (None, None, None)),
+    (XML_ERROR, ("true", "Invalid something", None)),
+    ('<TransisResponse error="true"><Errors></Errors></TransisResponse>', ("true", None, None)),
+    (
+        '<TransisResponse error="false"><DetectorCountMessages>'
+        '<DetectorCountMessage reg="ROZ" Sid="5" date="d"/>'
+        '<DetectorCountMessage reg="ROZ" Sid="6" date="d"><Detectors>'
+        '<Detector Did="7"/><Detector/></Detectors></DetectorCountMessage>'
+        "</DetectorCountMessages></TransisResponse>",
+        (
+            "false",
+            None,
+            (("ROZ", "5", "d", None), ("ROZ", "6", "d", (("7", None), (None, None)))),
+        ),
+    ),
+]
+
+
+def _parsed_rows(parsed):
+    out = []
+    for r in parsed.collect():
+        msgs = r["messages"]
+        out.append(
+            (
+                r["error"],
+                r["error_msg"],
+                None
+                if msgs is None
+                else tuple(
+                    (
+                        m["reg"],
+                        m["Sid"],
+                        m["date"],
+                        None
+                        if m["detectors"] is None
+                        else tuple((d["Did"], d["count"]) for d in m["detectors"]),
+                    )
+                    for m in msgs
+                ),
+            )
+        )
+    return sorted(out, key=repr)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(st.lists(transis_doc(), min_size=1, max_size=4))
+@example(FIXED_DOCS)
+def test_from_xml_matches_expected_rows(spark, cases):
+    """Empty containers parse as NULL, Did- or count-less Detector
+    children are kept with NULL fields (the projection drops them), and
+    error documents carry their first message."""
+    df = spark.createDataFrame([(doc,) for doc, _ in cases], "value string")
+    parsed = parse_transis_documents(df)
+    assert parsed.schema.simpleString() == schemas.TRANSIS_RESPONSE.simpleString()
+    assert _parsed_rows(parsed) == sorted((want for _, want in cases), key=repr)
+
+
+def test_sink_plan_parses_each_document_once(spark):
+    """The fail-stop and non-empty filters must read one parsed struct,
+    not re-run from_xml on the document text for every reference."""
+    from scats_transis_kinesis_spark.streaming.pipeline import scats_records
+
+    docs = spark.createDataFrame([(XML_TWO_SITES,), (XML_EMPTY,)], "value string")
+    plan = to_kinesis_envelope(scats_records(docs))._jdf.queryExecution().executedPlan()
+    assert len(re.findall(r"\bfrom_xml\(", plan.toString())) == 1
 
 
 def test_topology_xml_to_dimension_csvs(spark, tmp_path):
