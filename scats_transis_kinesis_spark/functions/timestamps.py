@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sqltext import sql_string
+
 SYDNEY_TZ = "Australia/Sydney"
 # ISO-8601 with numeric offset, e.g. 2019-10-03T15:43:00+10:00
 ISO_OFFSET_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
@@ -24,6 +26,11 @@ def epoch_from_iso8601(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_timestamp(F.to_timestamp(c, ISO_OFFSET_FMT)).alias("epoch")
+
+
+def epoch_from_iso8601_sql(expr: str) -> str:
+    """Spark SQL rendering of :func:`epoch_from_iso8601` over ``expr``."""
+    return f"unix_timestamp(to_timestamp({expr}, {sql_string(ISO_OFFSET_FMT)}))"
 
 
 def sydney_local(ts: Column | str) -> Column:

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_ident, sql_string
+
 
 def to_kinesis_envelope(
     df: DataFrame, partition_key_col: str | None = "region", literal_key: str | None = None
@@ -28,12 +30,11 @@ def to_kinesis_envelope(
     reference's literal-key behavior.
     """
     if literal_key is not None:
-        key = F.lit(literal_key)
+        key = sql_string(literal_key)
     else:
-        key = F.col(partition_key_col).cast("string")
-    return df.select(
-        key.alias("partition_key"),
-        F.to_json(F.struct(*df.columns)).cast("binary").alias("data"),
+        key = f"CAST({sql_ident(partition_key_col)} AS STRING)"
+    return df.selectExpr(
+        f"{key} AS partition_key", "CAST(to_json(struct(*)) AS BINARY) AS data"
     )
 
 

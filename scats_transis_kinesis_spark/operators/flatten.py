@@ -10,15 +10,16 @@ shuffle, no join, and it scales linearly with input size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..functions.sqltext import sql_ident
 
 
 def explode_messages(responses: DataFrame) -> DataFrame:
     """F1 — one network snapshot document → N per-site message rows
     (reference: transis_response_models.py:64-68)."""
-    return responses.select(
-        F.col("response_received_ts"), F.explode("messages").alias("m")
-    ).select("response_received_ts", "m.*")
+    return responses.selectExpr(
+        "response_received_ts", "explode(messages) AS m"
+    ).selectExpr("response_received_ts", "m.*")
 
 
 def explode_site_children(site_layouts: DataFrame, child: str) -> DataFrame:
@@ -29,18 +30,16 @@ def explode_site_children(site_layouts: DataFrame, child: str) -> DataFrame:
     behave like NULL (dropped by explode), matching ElementTree truthiness
     (SURVEY.md §1.4).
     """
-    return (
-        site_layouts.select(F.col("sId").alias("site_id"), F.explode(child).alias("c"))
-        .select("site_id", "c.*")
-    )
+    return site_layouts.selectExpr(
+        "sId AS site_id", f"explode({sql_ident(child)}) AS c"
+    ).selectExpr("site_id", "c.*")
 
 
 def explode_phases(site_layouts: DataFrame) -> DataFrame:
     """F4 — double unnest: site × phases × SGNos → (site_id, phase, sg_no)
     (reference: transis_response_models.py:194-197)."""
-    return (
-        site_layouts.select(F.col("sId").alias("site_id"), F.explode("phases").alias("p"))
-        .select("site_id", F.col("p.name").alias("phase"), F.explode("p.sgNos").alias("sg_no"))
+    return site_layouts.selectExpr("sId AS site_id", "explode(phases) AS p").selectExpr(
+        "site_id", "p.name AS phase", "explode(p.sgNos) AS sg_no"
     )
 
 

@@ -2,7 +2,8 @@
 
 Each operator is a pure ``DataFrame -> DataFrame`` function built from
 JVM-side column expressions (whole-stage codegen; no Python UDFs), so the
-same code runs unchanged on a batch read or a streaming source.
+same code runs unchanged on a batch read or a streaming source.  The
+SCATS operators are Spark SQL text (why: ``functions/sqltext.py``).
 """
 
 from __future__ import annotations
@@ -10,7 +11,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.timestamps import epoch_from_iso8601
+from ..functions.timestamps import epoch_from_iso8601_sql
+
+# Detector children carrying both ``Did`` and ``count`` (the reference
+# drops the others, reference: transis_response_models.py:41).
+_VALID_DETECTORS = "filter(detectors, d -> d.Did IS NOT NULL AND d.`count` IS NOT NULL)"
+# An empty detector list counts as absent (ElementTree truthiness).
+_NO_DETECTORS = "detectors IS NULL OR size(detectors) = 0"
+# A document without an ``error`` attribute is not an error document.
+_IS_ERROR = "coalesce(lower(error) = 'true', false)"
+_KEY_COLUMNS = (
+    "CAST(reg AS STRING) AS region",
+    "CAST(Sid AS STRING) AS site_id",
+)
+_EPOCH = f"{epoch_from_iso8601_sql('`date`')} AS collection_end_ts_plus_3m"
 
 
 def project_detector_count_record(
@@ -29,26 +43,18 @@ def project_detector_count_record(
     preserving the reference's ElementTree truthiness semantics
     (reference: transis_response_models.py:296-301; SURVEY.md §1.4).
     """
-    valid = F.filter(
-        F.col("detectors"), lambda d: d["Did"].isNotNull() & d["count"].isNotNull()
-    )
-    counts_map = F.when(
-        F.col("detectors").isNull() | (F.size(F.col("detectors")) == 0), F.lit(None)
-    ).otherwise(
-        F.map_from_entries(F.transform(valid, lambda d: F.struct(d["Did"], d["count"])))
-    )
     cols = [
-        F.col("reg").cast("string").alias("region"),
-        F.col("Sid").cast("string").alias("site_id"),
-        F.lit(300).alias("collection_interval_secs"),
-        epoch_from_iso8601("date").alias("collection_end_ts_plus_3m"),
-        counts_map.alias("detector_counts"),
+        *_KEY_COLUMNS,
+        "300 AS collection_interval_secs",
+        _EPOCH,
+        f"CASE WHEN {_NO_DETECTORS} THEN NULL ELSE map_from_entries("
+        f"transform({_VALID_DETECTORS}, d -> struct(d.Did, d.`count`))) END AS detector_counts",
     ]
     if keep_received_ts:
         # the receive-time stamp the reference attaches per response
         # (reference: transis_response_models.py:286)
-        cols.append(F.col("response_received_ts"))
-    return messages.select(*cols)
+        cols.append("response_received_ts")
+    return messages.selectExpr(*cols)
 
 
 def detector_counts_long(messages: DataFrame) -> DataFrame:
@@ -58,23 +64,14 @@ def detector_counts_long(messages: DataFrame) -> DataFrame:
     detector map unnested — the form declared queries use, since map
     columns need canonical ordering for value comparison (SURVEY.md §7.4).
     """
-    valid = F.filter(
-        F.col("detectors"), lambda d: d["Did"].isNotNull() & d["count"].isNotNull()
-    )
-    return (
-        messages.select(
-            F.col("reg").cast("string").alias("region"),
-            F.col("Sid").cast("string").alias("site_id"),
-            epoch_from_iso8601("date").alias("collection_end_ts_plus_3m"),
-            F.explode(valid).alias("d"),
-        )
-        .select(
-            "region",
-            "site_id",
-            "collection_end_ts_plus_3m",
-            F.col("d.Did").alias("detector_id"),
-            F.col("d.count").alias("count"),
-        )
+    return messages.selectExpr(
+        *_KEY_COLUMNS, _EPOCH, f"explode({_VALID_DETECTORS}) AS d"
+    ).selectExpr(
+        "region",
+        "site_id",
+        "collection_end_ts_plus_3m",
+        "d.Did AS detector_id",
+        "d.`count` AS `count`",
     )
 
 
@@ -82,17 +79,13 @@ def is_empty_message(messages: DataFrame) -> DataFrame:
     """P5 — the empty-site predicate as a column (dead code in the
     reference, implemented for parity; reference:
     transis_response_models.py:46-50)."""
-    return messages.withColumn(
-        "is_empty", F.col("detectors").isNull() | (F.size("detectors") == 0)
-    )
+    return messages.withColumn("is_empty", F.expr(_NO_DETECTORS))
 
 
 def non_empty_responses(responses: DataFrame) -> DataFrame:
     """P7 — drop empty fragments / docs without detector messages
     (reference: transis_consumer.py:89,137-138)."""
-    return responses.where(
-        F.col("messages").isNotNull() & (F.size("messages") > 0)
-    )
+    return responses.where("messages IS NOT NULL AND size(messages) > 0")
 
 
 def assert_no_error_documents(responses: DataFrame) -> DataFrame:
@@ -100,20 +93,18 @@ def assert_no_error_documents(responses: DataFrame) -> DataFrame:
 
     The reference raises and kills the pipeline on an error document
     (reference: transis_response_models.py:312-317,
-    transis_consumer.py:134-136, main.py:31-37).  Here the assert is a
-    ``raise_error`` column evaluated inside the plan — any executor that
+    transis_consumer.py:134-136, main.py:31-37).  Here the assert is an
+    ``assert_true`` evaluated inside the plan — any executor that
     sees a poison document fails the job, preserving fail-stop without a
     driver-side collect.
     """
-    is_err = F.lower(F.col("error")) == F.lit("true")
     # assert_true lives inside a filter predicate so Catalyst cannot
     # prune it away (a raise_error projection column that nothing reads
     # gets column-pruned and silently never fires).
-    check = F.assert_true(
-        ~F.coalesce(is_err, F.lit(False)),
-        F.concat(F.lit("Transis error document: "), F.coalesce(F.col("error_msg"), F.lit(""))),
+    return responses.where(
+        f"assert_true(NOT {_IS_ERROR}, "
+        "concat('Transis error document: ', coalesce(error_msg, ''))) IS NULL"
     )
-    return responses.where(check.isNull())
 
 
 def kv_lookup(json_array_col: Column | str, key: str) -> Column:
@@ -138,5 +129,4 @@ def split_error_documents(responses: DataFrame) -> tuple[DataFrame, DataFrame]:
     the poison stream lands in a dead-letter sink for inspection.  Both
     filters push to the same scan — Catalyst evaluates the predicate
     once per branch, no extra pass over the data."""
-    is_err = F.coalesce(F.lower(F.col("error")) == F.lit("true"), F.lit(False))
-    return responses.where(~is_err), responses.where(is_err)
+    return responses.where(f"NOT {_IS_ERROR}"), responses.where(_IS_ERROR)

@@ -9,9 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.pairs import pack_pair, unpack_pair
 from ..operators.envelope import THROTTLE_ERROR, failed_subset
 from ..operators.multimodal import extract_features, sample_frames
-
 from ..sources.loaders import load_table
 from .registry import register
 
@@ -473,7 +473,8 @@ def fuzzy_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   dropDuplicates paid for them),
     # - u < v candidate pairs come from chained posexplode/slice
     #   generators (no join, no second exchange) PACKED into one long
-    #   (custkeys fit 32 bits at any TPC-H SF), so the dedup exchange
+    #   by pack_pair (custkeys fit 31 bits at any TPC-H SF; a larger
+    #   one fails the job), so the dedup exchange
     #   carries 8 bytes per occurrence instead of two ids + two names,
     # - names re-attach AFTER the dedup via two equi-joins against the
     #   customer projection (AQE broadcasts them at gate scale; at
@@ -492,13 +493,11 @@ def fuzzy_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("slice(ids, i + 2, size(ids) - i - 1)")
             ).alias("b"),
         )
-        .select(F.shiftleft(F.col("a"), 32).bitwiseOR(F.col("b")).alias("uv"))
+        .select(pack_pair("a", "b").alias("uv"))
         .distinct()
     )
-    cand = pairs.select(
-        F.shiftrightunsigned(F.col("uv"), 32).alias("id_a"),
-        F.col("uv").bitwiseAND(F.lit(0xFFFFFFFF)).alias("id_b"),
-    )
+    id_a, id_b = unpack_pair("uv")
+    cand = pairs.select(id_a.alias("id_a"), id_b.alias("id_b"))
     return (
         cand.join(
             c.select(F.col("id").alias("id_a"), F.col("name").alias("name_a")),

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.pairs import pack_pair, unpack_pair
 from ..sources.loaders import load_table
 from .registry import register
 
@@ -713,8 +714,8 @@ def association_rules_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_list("pk")).alias("ps")
     ).localCheckpoint(eager=True)
     # The within-basket u < v pairs, NARROW (ok + the pair packed into
-    # one long — partkeys fit in 32 bits at any TPC-H scale factor, and
-    # the sf-boundary property sweep would catch a violation).  One
+    # one long by pack_pair — partkeys fit in 31 bits at any TPC-H scale
+    # factor, and a larger one fails the job).  One
     # generate feeds both the L2 count (pruned to just the packed key —
     # the 13M-row shuffle carries ONE long per pair instead of two) and
     # the candidate filter (pruned to ok + key).  Round-10 session 2:
@@ -729,10 +730,7 @@ def association_rules_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             "u",
             F.explode(F.expr("slice(ps, i + 2, size(ps) - i - 1)")).alias("v"),
         )
-        .select(
-            "ok",
-            (F.shiftleft(F.col("u").cast("long"), 32) + F.col("v")).alias("uv"),
-        )
+        .select("ok", pack_pair("u", "v").alias("uv"))
     )
     pc = bp.groupBy("uv").agg(
         F.count(F.lit(1)).cast("long").alias("c_ab")
@@ -752,10 +750,9 @@ def association_rules_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # {w ∈ basket : w > v} (guide §8 — decide with small rows, move the
     # heavy arrays once).  Both closing sub-pairs then semi-join f2 as
     # before.
+    u, v = unpack_pair("uv")
     cand = bp.join(F.broadcast(f2), "uv", "left_semi").select(
-        "ok",
-        F.shiftright("uv", 32).alias("u"),
-        F.col("uv").bitwiseAND(F.lit((1 << 32) - 1)).alias("v"),
+        "ok", u.alias("u"), v.alias("v")
     )
     ext = (
         fb.join(F.broadcast(cand), "ok")
@@ -770,13 +767,11 @@ def association_rules_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ext = ext.join(
         F.broadcast(f2.select(F.col("uv").alias("uv_vw"))),
-        F.shiftleft(F.col("v").cast("long"), 32) + F.col("w")
-        == F.col("uv_vw"),
+        pack_pair("v", "w") == F.col("uv_vw"),
         "left_semi",
     ).join(
         F.broadcast(f2.select(F.col("uv").alias("uv_uw"))),
-        F.shiftleft(F.col("u").cast("long"), 32) + F.col("w")
-        == F.col("uv_uw"),
+        pack_pair("u", "w") == F.col("uv_uw"),
         "left_semi",
     )
     tri = (

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.pairs import pack_pair, unpack_pair
 from ..operators.relational import bucketed_prefix_sums
 from ..sources.loaders import load_table
 from .pipeline_queries5 import _COPURCHASE_EDGE_CTES, _copurchase_edges
@@ -502,8 +503,8 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = nbrs.select(F.col("w").alias("vertex"), F.col("d"))
     # The wedge aggregate shuffles one PACKED long per wedge instead of
-    # the (u, v) pair (the Apriori change-12 pattern — partkeys fit in
-    # 32 bits at any SF), and the existing-edge anti-join probes the
+    # the (u, v) pair (pack_pair — partkeys fit in 31 bits at any SF,
+    # and a larger one fails the job), and the existing-edge anti-join probes the
     # same packed key; u and v unpack on the aggregated (small) frame.
     cn = (
         nbrs.select(
@@ -522,27 +523,21 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("slice(ns, i + 2, size(ns) - i - 1)")
             ).alias("nv"),
         )
-        .select(
-            (
-                F.shiftleft(F.col("nu").cast("long"), 32) + F.col("nv")
-            ).alias("uv"),
-            "aa_term",
-        )
+        .select(pack_pair("nu", "nv").alias("uv"), "aa_term")
         .groupBy("uv")
         .agg(
             F.count("*").cast("long").alias("common_n"),
             F.sum("aa_term").cast("long").alias("aa_micros"),
         )
     )
+    u, v = unpack_pair("uv")
     ne = cn.join(
-        edges.select(
-            (F.shiftleft(F.col("u").cast("long"), 32) + F.col("v")).alias("uv")
-        ),
+        edges.select(pack_pair("u", "v").alias("uv")),
         "uv",
         "left_anti",
     ).select(
-        F.shiftright("uv", 32).alias("u"),
-        F.col("uv").bitwiseAND(F.lit((1 << 32) - 1)).alias("v"),
+        u.alias("u"),
+        v.alias("v"),
         "common_n",
         "aa_micros",
     )

@@ -13,15 +13,22 @@ Here:
 
 Semantics preserved (SURVEY.md §1.4): empty ``DetectorCountMessages``
 containers → NULL, malformed ``Detector`` children dropped, ``error``
-attribute carried through for the fail-stop assert.
+attribute carried through for the fail-stop assert.  A Transis document
+that is not well-formed XML fails the job, as the reference's
+ElementTree parse raises on it.
+
+Columns are Spark SQL text (why: ``functions/sqltext.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..functions.sqltext import sql_ident, sql_string
 
 NULL_DELIM = "\x00"
+# Empty fragments (e.g. after a trailing delimiter) are not documents.
+_NON_BLANK = "length(trim(value)) > 0"
 
 
 def read_null_delimited(spark: SparkSession, path: str) -> DataFrame:
@@ -33,7 +40,7 @@ def read_null_delimited(spark: SparkSession, path: str) -> DataFrame:
     transis_consumer.py:89).
     """
     docs = spark.read.option("lineSep", NULL_DELIM).text(path)
-    return docs.where(F.length(F.trim(F.col("value"))) > 0)
+    return docs.where(_NON_BLANK)
 
 
 def read_null_delimited_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -41,16 +48,15 @@ def read_null_delimited_stream(spark: SparkSession, path: str) -> DataFrame:
     :func:`read_null_delimited`; in production the same option set goes
     on a Kinesis/Kafka source and ``split_documents`` handles blobs."""
     docs = spark.readStream.option("lineSep", NULL_DELIM).text(path)
-    return docs.where(F.length(F.trim(F.col("value"))) > 0)
+    return docs.where(_NON_BLANK)
 
 
 def split_documents(col_df: DataFrame, column: str = "value") -> DataFrame:
     """S2 (column form) — split a pre-batched blob column on the null
     delimiter and explode to one row per document."""
-    return (
-        col_df.select(F.explode(F.split(F.col(column), NULL_DELIM)).alias("value"))
-        .where(F.length(F.trim("value")) > 0)
-    )
+    return col_df.selectExpr(
+        f"explode(split({sql_ident(column)}, {sql_string(NULL_DELIM)})) AS value"
+    ).where(_NON_BLANK)
 
 
 # from_xml schema for a <TransisResponse> document: attributes carry the
@@ -76,27 +82,23 @@ def parse_transis_documents(docs: DataFrame, column: str = "value") -> DataFrame
     filters on it below the generator, so the fail-stop and non-empty
     filters downstream read one parsed struct instead of each
     re-evaluating ``from_xml`` on the document text.
+
+    ``FAILFAST`` makes a document that is not well-formed XML fail the
+    job; the default ``PERMISSIVE`` mode would parse it to an all-NULL
+    struct that passes the fail-stop assert and is then dropped as empty.
     """
-    parsed = docs.select(
-        F.explode(F.array(F.from_xml(F.col(column), TRANSIS_XML_SCHEMA))).alias("r")
+    parsed = docs.selectExpr(
+        f"explode(array(from_xml({sql_ident(column)}, {sql_string(TRANSIS_XML_SCHEMA)}, "
+        "map('mode', 'FAILFAST')))) AS r"
     )
-    messages = F.transform(
-        F.col("r.DetectorCountMessages.DetectorCountMessage"),
-        lambda m: F.struct(
-            m["_reg"].alias("reg"),
-            m["_Sid"].alias("Sid"),
-            m["_date"].alias("date"),
-            F.transform(
-                m["Detectors"]["Detector"],
-                lambda d: F.struct(d["_Did"].alias("Did"), d["_count"].alias("count")),
-            ).alias("detectors"),
-        ),
-    )
-    return parsed.select(
-        F.col("r._error").alias("error"),
-        F.col("r.Errors.Error")[0]["_msg"].alias("error_msg"),
-        messages.alias("messages"),
-        F.lit(None).cast("string").alias("response_received_ts"),
+    return parsed.selectExpr(
+        "r._error AS error",
+        "r.Errors.Error[0]._msg AS error_msg",
+        "transform(r.DetectorCountMessages.DetectorCountMessage, m -> struct("
+        "m._reg AS reg, m._Sid AS Sid, m._date AS `date`, "
+        "transform(m.Detectors.Detector, d -> struct(d._Did AS Did, d._count AS `count`))"
+        " AS detectors)) AS messages",
+        "CAST(NULL AS STRING) AS response_received_ts",
     )
 
 
@@ -125,31 +127,19 @@ def parse_site_layouts(docs: DataFrame, column: str = "value") -> DataFrame:
     reference's ElementTree truthiness semantics (empty container ==
     absent, reference: transis_response_models.py:139-152; SURVEY.md
     §1.4)."""
-    parsed = docs.select(F.from_xml(F.col(column), TOPOLOGY_XML_SCHEMA).alias("r"))
-    site = F.explode(F.col("r.SiteLayouts.SiteLayout")).alias("s")
-    return parsed.select(site).select(
-        F.col("s._sId").alias("sId"),
-        F.col("s._region").alias("region"),
-        F.transform(
-            "s.Arms.Arm",
-            lambda a: F.struct(a["_aId"].alias("aId"), a["_name"].alias("name")),
-        ).alias("arms"),
-        F.transform(
-            "s.Detectors.Detector",
-            lambda d: F.struct(d["_dId"].alias("dId"), d["_arm"].alias("arm")),
-        ).alias("detectors"),
-        F.transform(
-            "s.Streets.Street",
-            lambda st: F.struct(st["_name"].alias("name"), st["_suburb"].alias("suburb")),
-        ).alias("streets"),
-        F.transform(
-            "s.SGs.SG",
-            lambda g: F.struct(g["_sgNo"].alias("sgNo"), g["_type"].alias("type")),
-        ).alias("sgs"),
-        F.transform(
-            "s.Phases.Phase",
-            lambda p: F.struct(p["_name"].alias("name"), p["SGNos"]["SGNo"].alias("sgNos")),
-        ).alias("phases"),
+    parsed = docs.selectExpr(
+        f"from_xml({sql_ident(column)}, {sql_string(TOPOLOGY_XML_SCHEMA)}) AS r"
+    )
+    return parsed.selectExpr("explode(r.SiteLayouts.SiteLayout) AS s").selectExpr(
+        "s._sId AS sId",
+        "s._region AS region",
+        "transform(s.Arms.Arm, a -> struct(a._aId AS aId, a._name AS name)) AS arms",
+        "transform(s.Detectors.Detector, d -> struct(d._dId AS dId, d._arm AS arm)) AS detectors",
+        "transform(s.Streets.Street, st -> struct(st._name AS name, st._suburb AS suburb))"
+        " AS streets",
+        "transform(s.SGs.SG, g -> struct(g._sgNo AS sgNo, g._type AS type)) AS sgs",
+        "transform(s.Phases.Phase, p -> struct(p._name AS name, p.SGNos.SGNo AS sgNos))"
+        " AS phases",
     )
 
 

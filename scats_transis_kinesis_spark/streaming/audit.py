@@ -20,10 +20,7 @@ import threading
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-try:  # Spark ≥ 3.4 exposes the Python listener API
-    from pyspark.sql.streaming import StreamingQueryListener
-except ImportError:  # pragma: no cover
-    StreamingQueryListener = object  # type: ignore[assignment,misc]
+from pyspark.sql.streaming import StreamingQueryListener
 
 
 @dataclass

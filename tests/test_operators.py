@@ -79,6 +79,17 @@ def test_envelope_keyed_by_column_and_literal(spark):
     assert {r["partition_key"] for r in literal} == {"region"}
 
 
+def test_envelope_quotes_odd_names_and_keys(spark):
+    # Column names and literal keys reach SQL text: quotes, backticks,
+    # dots and backslashes must arrive unchanged.
+    df = spark.createDataFrame([("ROZ", 1)], "a string, n int").toDF("re`gion.a", "n")
+    [keyed] = to_kinesis_envelope(df, partition_key_col="re`gion.a").collect()
+    assert keyed["partition_key"] == "ROZ"
+    assert json.loads(bytes(keyed["data"])) == {"re`gion.a": "ROZ", "n": 1}
+    [literal] = to_kinesis_envelope(df, literal_key="it's a \\ key").collect()
+    assert literal["partition_key"] == "it's a \\ key"
+
+
 def test_failed_subset_positional(spark):
     # K4 — keep only the throttled subset by position (reference:
     # kinesis_producer.py:87-98; mirrors tests.py:128-147).

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -212,6 +213,44 @@ def test_sink_plan_parses_each_document_once(spark):
     docs = spark.createDataFrame([(XML_TWO_SITES,), (XML_EMPTY,)], "value string")
     plan = to_kinesis_envelope(scats_records(docs))._jdf.queryExecution().executedPlan()
     assert len(re.findall(r"\bfrom_xml\(", plan.toString())) == 1
+
+
+@pytest.mark.parametrize(
+    "doc",
+    [
+        XML_ERROR[: -len("</TransisResponse>")],  # truncated error document
+        "not xml at all",
+    ],
+)
+def test_malformed_document_fails_stop(spark, doc):
+    """A document that is not well-formed XML stops the job, like the
+    reference's ElementTree parse; it must not parse to an all-NULL row
+    that passes fail-stop and is dropped as empty."""
+    from scats_transis_kinesis_spark.streaming.pipeline import scats_records
+
+    docs = spark.createDataFrame([(XML_TWO_SITES,), (doc,)], "value string")
+    with pytest.raises(Exception, match="(?i)malformed"):
+        scats_records(docs).collect()
+
+
+def test_record_plan_builds_in_few_py4j_calls(spark, monkeypatch):
+    """The SCATS spine is SQL text, analysed in the JVM one step per
+    call; built from ``pyspark.sql.functions`` the same plan takes about
+    1,050 Py4J round trips on the driver for every replay job."""
+    from scats_transis_kinesis_spark.streaming.pipeline import scats_records
+
+    docs = spark.createDataFrame([(XML_TWO_SITES,)], "value string")
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting_send(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting_send)
+    to_kinesis_envelope(scats_records(docs))
+    monkeypatch.undo()
+    assert len(calls) <= 150, len(calls)
 
 
 def test_topology_xml_to_dimension_csvs(spark, tmp_path):
