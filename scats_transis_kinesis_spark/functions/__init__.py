@@ -1,5 +1,5 @@
 from .timestamps import (
-    epoch_from_iso8601,
+    epoch_from_iso8601_sql,
     formatted_current_timestamp,
     sydney_local,
 )
@@ -13,7 +13,7 @@ from .hashing import (
 )
 
 __all__ = [
-    "epoch_from_iso8601",
+    "epoch_from_iso8601_sql",
     "formatted_current_timestamp",
     "sydney_local",
     "portable_hash64",

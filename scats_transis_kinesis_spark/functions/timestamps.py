@@ -1,6 +1,6 @@
 """Timestamp scalar functions (operators P3/P4 in SURVEY.md §2.2).
 
-All JVM-side column expressions — no Python UDFs — so they stay inside
+All JVM-side expressions — no Python UDFs — so they stay inside
 whole-stage codegen at any scale.
 """
 
@@ -16,20 +16,15 @@ SYDNEY_TZ = "Australia/Sydney"
 ISO_OFFSET_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
 
 
-def epoch_from_iso8601(col: Column | str) -> Column:
-    """ISO-8601 string with offset → integer Unix epoch seconds.
+def epoch_from_iso8601_sql(expr: str) -> str:
+    """Spark SQL text: the ISO-8601 string (with offset) ``expr`` as
+    integer Unix epoch seconds.
 
     Parity with the reference's strptime('%Y-%m-%dT%H:%M:%S%z') →
     ``int(timestamp())`` conversion (reference: utils.py:21-31), applied
     to the collection-end timestamp (reference:
     transis_response_models.py:38).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_timestamp(F.to_timestamp(c, ISO_OFFSET_FMT)).alias("epoch")
-
-
-def epoch_from_iso8601_sql(expr: str) -> str:
-    """Spark SQL rendering of :func:`epoch_from_iso8601` over ``expr``."""
     return f"unix_timestamp(to_timestamp({expr}, {sql_string(ISO_OFFSET_FMT)}))"
 
 

@@ -9,7 +9,7 @@ import json
 from pyspark.sql import functions as F
 
 from scats_transis_kinesis_spark.functions.timestamps import (
-    epoch_from_iso8601,
+    epoch_from_iso8601_sql,
     formatted_current_timestamp,
 )
 from scats_transis_kinesis_spark.operators.envelope import failed_subset, to_kinesis_envelope
@@ -110,7 +110,8 @@ def test_failed_subset_positional(spark):
 
 def test_epoch_from_iso8601(spark):
     df = spark.createDataFrame([("2019-10-03T15:43:00+10:00",)], "date string")
-    assert df.select(epoch_from_iso8601("date").alias("e")).collect()[0]["e"] == 1570081380
+    [row] = df.selectExpr(f"{epoch_from_iso8601_sql('date')} AS e").collect()
+    assert row["e"] == 1570081380
 
 
 def test_formatted_current_timestamp_offset_has_colon(spark):

@@ -84,8 +84,8 @@ def test_minhash_permutation_matches_duckdb(spark, values, a, b):
     ],
 )
 def test_epoch_conversion_fixed_points(spark, iso, epoch):
-    from scats_transis_kinesis_spark.functions.timestamps import epoch_from_iso8601
+    from scats_transis_kinesis_spark.functions.timestamps import epoch_from_iso8601_sql
 
     df = spark.createDataFrame([(iso,)], "s string")
-    [row] = df.select(epoch_from_iso8601("s").alias("e")).collect()
+    [row] = df.selectExpr(f"{epoch_from_iso8601_sql('s')} AS e").collect()
     assert row["e"] == epoch
