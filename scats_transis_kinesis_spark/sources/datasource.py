@@ -1,29 +1,21 @@
-"""``format("transis_xml")`` — the reference's push-stream source as a
-first-class Spark data source (Python DataSource API, Spark 4).
+"""``format("transis_xml")`` — the reference's live push stream as a
+Spark streaming source (Python DataSource API, Spark 4).
 
 The reference consumes a long-lived HTTP stream, accumulates bytes, and
 splits records on the NUL byte (transis_consumer.py:115-151, delimiter
-split :123-139; batch variant :82-89).  This module gives that protocol
-a native Spark surface instead of a driver-side loop:
+split :123-139).  ``spark.readStream.format("transis_xml")
+.option("transport", "mypkg.http:open_stream").load()`` gives that
+protocol a native Spark surface instead of a driver-side loop: micro-
+batches drain an INJECTED long-lived byte stream (a chunked HTTP GET
+body in production, a mock in tests) through :class:`LiveStreamConsumer`,
+which carries the reference's full live protocol: NUL-delimited record
+split at arbitrary chunk boundaries and the bounded, reset-on-data
+reconnect budget of transis_consumer.py:141-148.
 
-- **batch**: ``spark.read.format("transis_xml").load(dir)`` — one input
-  partition PER FILE, so a directory of captured stream dumps scans in
-  parallel across executors; each task streams its file and splits on
-  ``\\x00`` exactly like the reference's tokenizer.
-- **streaming**: ``spark.readStream.format("transis_xml").load(dir)`` —
-  a file-arrival offset log (sorted directory listing), so each
-  micro-batch picks up newly landed stream captures; offsets make
-  replay deterministic (``readBetweenOffsets``), which is the
-  checkpoint-recovery story the reference's recursive reconnect loop
-  (transis_consumer.py:141-148) lacks.
-- **live streaming**: ``spark.readStream.format("transis_xml")
-  .option("transport", "mypkg.http:open_stream").load()`` — micro-
-  batches drain an INJECTED long-lived byte stream (a chunked HTTP GET
-  body in production, a mock in tests) through
-  :class:`LiveStreamConsumer`, which carries the reference's full live
-  protocol: NUL-delimited record split at arbitrary chunk boundaries
-  and the bounded, reset-on-data reconnect budget of
-  transis_consumer.py:141-148.
+Captured streams on disk are not read here: ``sources/xml.py``'s
+``read_null_delimited[_stream]`` scan them with the built-in text source
+(``lineSep='\\x00'``), whose file log tracks seen captures by path, and
+``df.write.option("lineSep", "\\x00").text(dir)`` writes them.
 
 Rows are ``value: string`` — one XML document per row, undecoded.
 Parsing stays in ``sources/xml.py`` (S3), so the source composes with
@@ -32,111 +24,17 @@ the existing pipeline operators unchanged.
 
 from __future__ import annotations
 
-import glob
 import os
 from typing import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StringType, StructField, StructType
 
-RECORD_DELIMITER = b"\x00"  # reference: transis_consumer.py:133
+from .xml import NULL_DELIM
+
+_NUL = NULL_DELIM.encode()  # reference: transis_consumer.py:133
 
 SCHEMA = StructType([StructField("value", StringType(), True)])
-
-
-def _split_file(path: str) -> Iterator[tuple[str]]:
-    """Split one capture file into documents on the NUL delimiter,
-    dropping empty fragments (reference keeps the same guard,
-    transis_consumer.py:137-138)."""
-    with open(path, "rb") as f:
-        data = f.read()
-    for doc in data.split(RECORD_DELIMITER):
-        if doc:
-            yield (doc.decode("utf-8"),)
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, path: str) -> None:
-        self.path = path
-
-
-def _list_captures(path: str) -> list[str]:
-    """Deterministic capture listing: every regular file under ``path``
-    (or the single file itself), sorted by name."""
-    if os.path.isdir(path):
-        return sorted(
-            p
-            for p in glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(p)
-        )
-    return sorted(glob.glob(path))
-
-
-class TransisXMLBatchReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("transis_xml: .load(path) is required")
-
-    def partitions(self) -> list[InputPartition]:
-        # One split per capture file: parallelism == number of files,
-        # the natural unit for dumped stream segments.
-        return [_FilePartition(p) for p in _list_captures(self.path)]
-
-    def read(self, partition: _FilePartition) -> Iterator[tuple[str]]:
-        yield from _split_file(partition.path)
-
-
-class TransisXMLStreamReader(SimpleDataSourceStreamReader):
-    """File-arrival streaming: the offset is the count of consumed
-    files from the sorted capture listing.  New files land at the end
-    of the listing (writers name captures monotonically — e.g.
-    zero-padded sequence numbers or timestamps), so ``read`` consumes
-    the suffix and advances the offset."""
-
-    def __init__(self, options: dict) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("transis_xml: .load(path) is required")
-        # Backpressure: cap how many newly landed captures one
-        # micro-batch consumes (same contract as the file source's
-        # maxFilesPerTrigger).  Unset = consume everything available,
-        # the reference's drain-the-stream behavior.
-        max_files = options.get("maxfilespertrigger") or options.get(
-            "maxFilesPerTrigger"
-        )
-        self.max_files = int(max_files) if max_files else None
-        if self.max_files is not None and self.max_files < 1:
-            raise ValueError("transis_xml: maxFilesPerTrigger must be >= 1")
-
-    def initialOffset(self) -> dict:
-        return {"n_files": 0}
-
-    def read(self, start: dict) -> tuple[Iterator[tuple[str]], dict]:
-        files = _list_captures(self.path)
-        consumed = start["n_files"]
-        new = files[consumed:]
-        if self.max_files is not None:
-            new = new[: self.max_files]
-        rows = [row for p in new for row in _split_file(p)]
-        return iter(rows), {"n_files": consumed + len(new)}
-
-    def readBetweenOffsets(
-        self, start: dict, end: dict
-    ) -> Iterator[tuple[str]]:
-        # Deterministic replay for checkpoint recovery: re-split the
-        # exact file range [start, end).
-        files = _list_captures(self.path)[start["n_files"] : end["n_files"]]
-        for p in files:
-            yield from _split_file(p)
 
 
 DEFAULT_MAX_RECONNECTS = 3  # reference: transis_consumer.py __max_reconnects
@@ -183,11 +81,9 @@ class LiveStreamConsumer:
                     if not chunk:
                         continue
                     self._buffer += chunk
-                    if RECORD_DELIMITER not in chunk:
+                    if _NUL not in chunk:
                         continue
-                    *complete, self._buffer = self._buffer.split(
-                        RECORD_DELIMITER
-                    )
+                    *complete, self._buffer = self._buffer.split(_NUL)
                     delivered = False
                     for doc in complete:
                         if doc:  # drop empty fragments, as the reference does
@@ -386,7 +282,7 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
                 if budget is not None and budget <= 0:
                     break
                 with open(path, "rb") as f:
-                    docs = f.read().split(RECORD_DELIMITER)[:-1]
+                    docs = f.read().split(_NUL)[:-1]
                 for i, doc in enumerate(docs):
                     off = f_lo + i
                     if off < start_off:
@@ -451,7 +347,7 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
         with open(tmp, "wb") as f:
             for (doc,) in rows:
                 f.write(doc.encode("utf-8"))
-                f.write(RECORD_DELIMITER)
+                f.write(_NUL)
         os.replace(tmp, path)
 
     def _spool_files(self) -> list[tuple[int, int, str]]:
@@ -482,7 +378,7 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
             if f_hi <= lo or f_lo >= hi:
                 continue
             with open(path, "rb") as f:
-                docs = f.read().split(RECORD_DELIMITER)[:-1]
+                docs = f.read().split(_NUL)[:-1]
             for i, doc in enumerate(docs):
                 off = f_lo + i
                 if lo <= off < hi:
@@ -520,195 +416,6 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
                 pass  # best-effort GC; an undeleted file stays correct
 
 
-class _WriteCommit(WriterCommitMessage):
-    def __init__(self, staged: str, final: str) -> None:
-        self.staged = staged
-        self.final = final
-
-
-class TransisXMLBatchWriter(DataSourceWriter):
-    """Batch write path: each partition renders its rows as one
-    NUL-delimited capture file (the reference's wire format, so a
-    written directory reads back through the same source —
-    ``_split_file`` drops the trailing empty fragment).
-
-    Two-phase commit: executors write into a hidden ``_staging``
-    SUBDIRECTORY (the reader's capture listing takes regular files
-    only, so in-flight or leaked staging files are invisible to reads
-    and to the streaming offset log); the driver renames the staged
-    set into place (and, for overwrite, clears prior captures) only
-    after EVERY task succeeded — a failed/aborted job leaves the
-    target untouched.  Final names carry a per-JOB unique token, so
-    append mode never collides with the capture files of a previous
-    write (deterministic ``part-00000`` names would silently clobber
-    them).  On a local filesystem the rename is atomic; an
-    object-store deployment swaps this for a manifest commit, the
-    same contract every file sink uses."""
-
-    def __init__(self, options, overwrite: bool) -> None:
-        import uuid
-
-        path = options.get("path")
-        if not path:
-            raise ValueError("transis_xml write needs a 'path' option")
-        self.path = path
-        self.overwrite = overwrite
-        # Generated once on the driver; the pickled writer carries it to
-        # every task, so all of one job's files share the token and two
-        # jobs never share a name.
-        self.job_token = uuid.uuid4().hex[:12]
-
-    def write(self, iterator) -> "_WriteCommit":
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        staging_dir = os.path.join(self.path, "_staging")
-        os.makedirs(staging_dir, exist_ok=True)
-        name = f"part-{self.job_token}-{pid:05d}.xml0"
-        final = os.path.join(self.path, name)
-        # Stage under the task ATTEMPT id, not the worker pid: a retried
-        # or speculative attempt of the same partition can land on the
-        # same reused Python worker process, and a pid-keyed name would
-        # let the two attempts interleave writes into one staged file
-        # and commit a corrupt capture.  Attempt ids are unique per
-        # attempt by contract; uuid covers the no-TaskContext case.
-        if ctx is not None:
-            attempt = f"a{ctx.taskAttemptId()}"
-        else:
-            import uuid
-
-            attempt = f"u{uuid.uuid4().hex[:12]}"
-        staged = os.path.join(staging_dir, f"{name}.{attempt}.tmp")
-        n = 0
-        with open(staged, "wb") as f:
-            for row in iterator:
-                doc = row[0]
-                if doc is None:
-                    continue
-                f.write(doc.encode("utf-8"))
-                f.write(RECORD_DELIMITER)
-                n += 1
-        if n == 0:
-            os.remove(staged)
-            return _WriteCommit("", "")
-        return _WriteCommit(staged, final)
-
-    def commit(self, messages) -> None:
-        if self.overwrite:
-            for name in os.listdir(self.path):
-                if name.endswith(".xml0"):
-                    os.remove(os.path.join(self.path, name))
-        for m in messages:
-            if m.staged:
-                os.replace(m.staged, m.final)
-        self._gc_staging()
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m and getattr(m, "staged", ""):
-                try:
-                    os.remove(m.staged)
-                except OSError:
-                    pass
-        self._gc_staging()
-
-    def _gc_staging(self) -> None:
-        # Best-effort: drop anything this job leaked (a task that died
-        # mid-write never reported its staged file in a commit message).
-        staging_dir = os.path.join(self.path, "_staging")
-        if not os.path.isdir(staging_dir):
-            return
-        for name in os.listdir(staging_dir):
-            if self.job_token in name:
-                try:
-                    os.remove(os.path.join(staging_dir, name))
-                except OSError:
-                    pass
-        try:
-            os.rmdir(staging_dir)  # succeeds only when empty
-        except OSError:
-            pass
-
-
-class _StreamWriteCommit(WriterCommitMessage):
-    def __init__(self, staged: str, pid: int) -> None:
-        self.staged = staged
-        self.pid = pid
-
-
-class TransisXMLStreamWriter(DataSourceStreamWriter):
-    """Streaming write path (``writeStream.format("transis_xml")``):
-    each micro-batch lands as one NUL-delimited capture file per
-    non-empty partition, final-named by (batchId, partitionId) — so a
-    micro-batch REPLAYED after restart (the sink-committed-but-offset-
-    uncommitted crash window) overwrites its own files byte-for-byte
-    instead of duplicating records: idempotent-by-batchId, the same
-    exactly-once story as the Kinesis sink's foreachBatch writer, and
-    the reason the final name cannot carry a random token like the
-    batch writer's.
-
-    Executors stage under the hidden ``_staging`` subdirectory (the
-    readers list regular files of the target dir only, so staged or
-    leaked files are invisible to batch scans and to the streaming
-    offset log) with attempt-unique names; the driver renames the
-    batch's staged set into place only in ``commit``, when every task
-    of the micro-batch has succeeded.  A task that dies mid-write can
-    leak its attempt file in ``_staging`` — harmless to readers and
-    overwritten-adjacent, the usual file-sink trade without a
-    manifest."""
-
-    def __init__(self, options) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("transis_xml stream write needs a 'path' option")
-        self.path = path
-
-    def write(self, iterator) -> "_StreamWriteCommit":
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        staging_dir = os.path.join(self.path, "_staging")
-        os.makedirs(staging_dir, exist_ok=True)
-        if ctx is not None:
-            attempt = f"a{ctx.taskAttemptId()}"
-        else:
-            import uuid
-
-            attempt = f"u{uuid.uuid4().hex[:12]}"
-        staged = os.path.join(staging_dir, f"stream-{pid:05d}.{attempt}.tmp")
-        n = 0
-        with open(staged, "wb") as f:
-            for row in iterator:
-                doc = row[0]
-                if doc is None:
-                    continue
-                f.write(doc.encode("utf-8"))
-                f.write(RECORD_DELIMITER)
-                n += 1
-        if n == 0:
-            os.remove(staged)
-            return _StreamWriteCommit("", -1)
-        return _StreamWriteCommit(staged, pid)
-
-    def commit(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m and m.staged:
-                final = os.path.join(
-                    self.path, f"part-b{batchId:010d}-{m.pid:05d}.xml0"
-                )
-                os.replace(m.staged, final)
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m and getattr(m, "staged", ""):
-                try:
-                    os.remove(m.staged)
-                except OSError:
-                    pass
-
-
 class TransisXMLDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -717,23 +424,10 @@ class TransisXMLDataSource(DataSource):
     def schema(self) -> StructType:
         return SCHEMA
 
-    def reader(self, schema: StructType) -> TransisXMLBatchReader:
-        return TransisXMLBatchReader(self.options)
-
-    def writer(self, schema: StructType, overwrite: bool) -> TransisXMLBatchWriter:
-        return TransisXMLBatchWriter(self.options, overwrite)
-
     def simpleStreamReader(
         self, schema: StructType
-    ) -> SimpleDataSourceStreamReader:
-        if self.options.get("transport"):
-            return TransisXMLLiveStreamReader(self.options)
-        return TransisXMLStreamReader(self.options)
-
-    def streamWriter(
-        self, schema: StructType, overwrite: bool
-    ) -> TransisXMLStreamWriter:
-        return TransisXMLStreamWriter(self.options)
+    ) -> TransisXMLLiveStreamReader:
+        return TransisXMLLiveStreamReader(self.options)
 
 
 def register_transis_datasource(spark) -> None:

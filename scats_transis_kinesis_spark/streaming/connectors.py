@@ -1,4 +1,4 @@
-"""Config-driven integration surface: Kinesis source/sink factories and
+"""Config-driven integration surface: the Kinesis source factory and
 the JDBC audit appender.
 
 The sandbox has no AWS endpoint and no database, so nothing here opens a
@@ -8,12 +8,13 @@ network connection at import or construction time.  What IS real:
   ``format("kinesis")`` connector options; Spark's built-in JDBC sink),
 - the reconnect/timeout constants of the reference consumer
   (transis_consumer.py:13 — 20-minute stream timeout, 3 reconnects),
-- the wiring into the engine's tested pieces (``KinesisBatchWriter``
-  for the sink, ``JobAuditListener``'s event log for the audit rows).
+- the wiring into the engine's tested pieces (``JobAuditListener``'s
+  event log for the audit rows).
 
-Everything is unit-testable by injection: the sink takes a client
-factory (tests pass ``ThrottlingKinesisStub``), the JDBC appender takes
-a writer callable (tests capture the DataFrame instead of connecting).
+The Kinesis sink is ``streaming/kinesis_sink.py:KinesisBatchWriter``,
+built directly with a client factory (tests pass
+``ThrottlingKinesisStub``).  The JDBC appender takes a writer callable
+(tests capture the DataFrame instead of connecting).
 """
 
 from __future__ import annotations
@@ -22,8 +23,6 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-from .kinesis_sink import DEFAULT_BATCH_SIZE, RETRY_BACKOFF_S, KinesisBatchWriter
 
 # Reference consumer resilience constants (transis_consumer.py:13):
 # the push stream goes silent without closing after ~20 minutes, and the
@@ -74,40 +73,6 @@ def kinesis_stream_reader(spark: SparkSession, cfg: KinesisSourceConfig):
     the downstream pipeline (parse → explode → project → envelope) is
     identical either way."""
     return spark.readStream.format("kinesis").options(**kinesis_reader_options(cfg))
-
-
-@dataclass(frozen=True)
-class KinesisSinkConfig:
-    """Sink-side configuration (reference: kinesis_producer.py:21-40):
-    stream, region, chunk size (reference default 10 — half a shard's
-    1000 rec/s headroom at 5-minute batch cadence), one bounded subset
-    retry after ``backoff_s`` (kinesis_producer.py:79)."""
-
-    stream_name: str
-    region: str
-    partition_key_col: str | None = "region"
-    literal_key: str | None = None  # bug-compat mode: every record one shard
-    batch_size: int = DEFAULT_BATCH_SIZE
-    backoff_s: float = RETRY_BACKOFF_S
-    committed_marker_dir: str | None = None
-
-
-def batch_writer_from_config(
-    cfg: KinesisSinkConfig, client_factory: Callable
-) -> KinesisBatchWriter:
-    """Build the tested ``foreachBatch`` writer from config.  Production
-    passes ``lambda: boto3.client("kinesis", region_name=cfg.region)``;
-    tests pass a ``ThrottlingKinesisStub`` factory — the writer never
-    imports an AWS SDK itself."""
-    return KinesisBatchWriter(
-        client_factory=client_factory,
-        stream_name=cfg.stream_name,
-        partition_key_col=cfg.partition_key_col,
-        literal_key=cfg.literal_key,
-        batch_size=cfg.batch_size,
-        backoff_s=cfg.backoff_s,
-        committed_marker_dir=cfg.committed_marker_dir,
-    )
 
 
 @dataclass(frozen=True)

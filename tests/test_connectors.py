@@ -1,6 +1,7 @@
-"""Config-driven integration surface (streaming/connectors.py): Kinesis
-reader/writer factories and the JDBC audit appender — all exercised with
-injected fakes; nothing opens a network connection."""
+"""Config-driven integration surface (streaming/connectors.py): the
+Kinesis reader factory, the Kinesis sink built directly, and the JDBC
+audit appender — all exercised with injected fakes; nothing opens a
+network connection."""
 
 from __future__ import annotations
 
@@ -12,13 +13,14 @@ from scats_transis_kinesis_spark.streaming.connectors import (
     STREAM_TIMEOUT_S,
     JdbcAuditAppender,
     JdbcAuditConfig,
-    KinesisSinkConfig,
     KinesisSourceConfig,
-    batch_writer_from_config,
     kinesis_reader_options,
     kinesis_stream_reader,
 )
-from scats_transis_kinesis_spark.streaming.kinesis_sink import ThrottlingKinesisStub
+from scats_transis_kinesis_spark.streaming.kinesis_sink import (
+    KinesisBatchWriter,
+    ThrottlingKinesisStub,
+)
 
 
 def test_reference_resilience_constants():
@@ -57,20 +59,17 @@ def test_kinesis_stream_reader_builds_without_connector(spark):
     assert reader is not None
 
 
-def test_batch_writer_from_config_sends_through_stub(spark, tmp_path):
+def test_kinesis_batch_writer_sends_through_stub(spark, tmp_path):
     stub_dir = str(tmp_path / "stub")
     import os
 
     os.makedirs(stub_dir)
-    cfg = KinesisSinkConfig(
+    writer = KinesisBatchWriter(
+        client_factory=lambda: ThrottlingKinesisStub(state_dir=stub_dir),
         stream_name="scats-out",
-        region="ap-southeast-2",
         partition_key_col="region",
         batch_size=2,
         backoff_s=0.0,
-    )
-    writer = batch_writer_from_config(
-        cfg, lambda: ThrottlingKinesisStub(state_dir=stub_dir)
     )
     assert writer.stream_name == "scats-out"
     assert writer.batch_size == 2

@@ -635,30 +635,3 @@ def test_stratified_kfold_balance_within_one(spark):
         per_fold = [counts.get((lang, f), 0) for f in range(KFOLDS)]
         assert max(per_fold) - min(per_fold) <= 1, (lang, per_fold)
         assert sum(per_fold) in (32, 33)
-
-
-def test_batch_writer_stages_attempt_unique_names(tmp_path):
-    """Two attempts of the same partition (task retry / speculation on
-    a reused worker process) must stage to DIFFERENT files — a
-    pid-keyed name let concurrent attempts interleave into one staged
-    file and commit a corrupt capture."""
-    import os
-
-    from scats_transis_kinesis_spark.sources.datasource import (
-        TransisXMLBatchWriter,
-    )
-
-    out = str(tmp_path / "caps")
-    os.makedirs(out)
-    w = TransisXMLBatchWriter({"path": out}, overwrite=False)
-    # Outside a task context the writer falls back to a per-attempt
-    # uuid; two write() calls in the SAME process (same pid — the exact
-    # collision of the old scheme) must not share a staged path.
-    m1 = w.write(iter([("<doc-a/>",)]))
-    m2 = w.write(iter([("<doc-a/>",)]))
-    assert m1.staged and m2.staged and m1.staged != m2.staged
-    w.commit([m1])  # first attempt wins; second stays staged, GC'd next
-    files = [n for n in os.listdir(out) if n.endswith(".xml0")]
-    assert len(files) == 1
-    data = open(os.path.join(out, files[0]), "rb").read()
-    assert data == b"<doc-a/>\x00"

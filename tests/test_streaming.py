@@ -788,43 +788,6 @@ def test_stream_dedup_drops_redelivered_events(spark):
         assert sorted(ids) == [1, 2, 3], ids  # the replayed copy of 1 is gone
 
 
-def test_scats_pipeline_via_native_datasource(spark):
-    # Same end-to-end loop, but ingesting through the first-class
-    # format("transis_xml") source (sources/datasource.py) instead of
-    # the text-source split — proving the native source composes with
-    # the full parse -> project -> envelope -> sink pipeline.
-    from scats_transis_kinesis_spark.sources.datasource import (
-        register_transis_datasource,
-    )
-    from scats_transis_kinesis_spark.streaming.pipeline import run_scats_pipeline
-
-    register_transis_datasource(spark)
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "caps")
-        os.makedirs(src)
-        docs = [_scats_doc(sid="2087"), _scats_doc(sid="11")]
-        with open(os.path.join(src, "cap-000.bin"), "wb") as f:
-            f.write(("\x00".join(docs) + "\x00").encode())
-
-        stub_dir = os.path.join(d, "stub")
-        os.makedirs(stub_dir)
-        writer = KinesisBatchWriter(
-            client_factory=lambda: ThrottlingKinesisStub(state_dir=stub_dir),
-            stream_name="scats",
-            partition_key_col="region",
-            backoff_s=0.01,
-        )
-        stream = spark.readStream.format("transis_xml").load(src)
-        q = run_scats_pipeline(stream, writer, os.path.join(d, "ckpt"))
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        sent = ThrottlingKinesisStub(state_dir=stub_dir).sent_records()
-        assert {json.loads(r["Data"])["site_id"] for r in sent} == {"2087", "11"}
-
-
 def test_corpus_ingest_stream_filters_and_dedups(spark):
     """Streaming corpus curation: low-quality docs drop at the quality
     screen; an exact re-crawl of the same text inside the watermark

@@ -398,94 +398,147 @@ def test_typed_time_range_wrappers(spark):
     assert kinds == {"view", "click"}
 
 
-def test_transis_xml_datasource_batch(spark, tmp_path):
-    """format("transis_xml") batch read: one partition per capture
-    file, NUL-delimited split, empty fragments dropped — then the
-    existing parse pipeline consumes the rows unchanged."""
-    from scats_transis_kinesis_spark.sources.datasource import (
-        register_transis_datasource,
-    )
-    from scats_transis_kinesis_spark.sources.xml import parse_transis_documents
+def _land(path, data: bytes, mtime: float) -> None:
+    """Write one capture file and stamp its modification time: the file
+    source orders a listing by mtime, and same-second writes tie."""
+    import os
 
-    register_transis_datasource(spark)
+    path.write_bytes(data)
+    os.utime(path, (mtime, mtime))
+
+
+def test_read_null_delimited_batch(spark, tmp_path):
+    """Capture files read back through the text source with a NUL
+    ``lineSep``: two files, a leading empty fragment and trailing
+    delimiters give 3 documents, and the parse pipeline consumes
+    them unchanged."""
+    from scats_transis_kinesis_spark.sources.xml import read_null_delimited
+
     (tmp_path / "cap-000.bin").write_bytes(
         XML_TWO_SITES.encode() + b"\x00" + XML_TWO_SITES.encode() + b"\x00"
     )
     (tmp_path / "cap-001.bin").write_bytes(
         b"\x00" + XML_TWO_SITES.encode() + b"\x00"  # leading empty fragment
     )
-    df = spark.read.format("transis_xml").load(str(tmp_path))
+    df = read_null_delimited(spark, str(tmp_path))
     assert df.count() == 3
-    assert df.rdd.getNumPartitions() == 2  # one split per capture file
     parsed = parse_transis_documents(df)
     assert parsed.where("error = 'false'").count() == 3
 
 
-def test_transis_xml_datasource_streaming(spark, tmp_path):
-    """Streaming: each micro-batch consumes newly landed capture files;
-    the offset log replays deterministically."""
+def test_read_null_delimited_stream_delivers_late_capture_once(spark, tmp_path):
+    """Streaming captures: documents of a capture landed after the
+    query started arrive on the next trigger, and a capture that lands
+    late with an OLDER mtime and an earlier-sorting name than those
+    already read is delivered exactly once.  The file source logs seen
+    captures by path; an offset that counts consumed names of a sorted
+    listing would re-deliver ``<two/>`` here and never deliver
+    ``<late/>``."""
     import time
 
-    from scats_transis_kinesis_spark.sources.datasource import (
-        register_transis_datasource,
+    from scats_transis_kinesis_spark.sources.xml import (
+        read_null_delimited_stream,
     )
 
-    register_transis_datasource(spark)
     cap_dir = tmp_path / "caps"
     cap_dir.mkdir()
-    (cap_dir / "cap-000.bin").write_bytes(XML_TWO_SITES.encode() + b"\x00")
+    now = time.time()
+    _land(cap_dir / "cap-001.xml0", b"<one/>\x00", now - 20)
+    _land(cap_dir / "cap-002.xml0", b"<two/>\x00<two-b/>\x00", now - 10)
 
-    seen: list[int] = []
+    seen: list[str] = []
     q = (
-        spark.readStream.format("transis_xml")
-        .load(str(cap_dir))
-        .writeStream.foreachBatch(lambda df, _id: seen.append(df.count()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        (cap_dir / "cap-001.bin").write_bytes(
-            XML_TWO_SITES.encode() + b"\x00" + XML_TWO_SITES.encode() + b"\x00"
+        read_null_delimited_stream(spark, str(cap_dir))
+        .writeStream.foreachBatch(
+            lambda df, _id: seen.extend(r.value for r in df.collect())
         )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert sum(seen) == 3  # 1 from the first capture, 2 from the second
-
-
-def test_transis_xml_datasource_max_files_per_trigger(spark, tmp_path):
-    """Backpressure: with maxFilesPerTrigger=1 a backlog of 3 landed
-    captures drains one capture per micro-batch instead of all at once
-    (documents per capture: 1, 2, 3 — so per-batch counts identify
-    which capture each batch consumed)."""
-    from scats_transis_kinesis_spark.sources.datasource import (
-        register_transis_datasource,
-    )
-
-    register_transis_datasource(spark)
-    cap_dir = tmp_path / "caps"
-    cap_dir.mkdir()
-    doc = XML_TWO_SITES.encode() + b"\x00"
-    for i in range(3):
-        (cap_dir / f"cap-{i:03d}.bin").write_bytes(doc * (i + 1))
-
-    seen: list[int] = []
-    q = (
-        spark.readStream.format("transis_xml")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(cap_dir))
-        .writeStream.foreachBatch(lambda df, _id: seen.append(df.count()))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="0 seconds")
         .start()
     )
     try:
         q.processAllAvailable()
+        assert sorted(seen) == ["<one/>", "<two-b/>", "<two/>"]
+        _land(cap_dir / "cap-000.xml0", b"<late/>\x00", now - 30)
+        q.processAllAvailable()
     finally:
         q.stop()
-    assert [n for n in seen if n] == [1, 2, 3]
+    assert sorted(seen) == ["<late/>", "<one/>", "<two-b/>", "<two/>"]
+
+
+def test_read_null_delimited_stream_drains_backlog_once(spark, tmp_path):
+    """A backlog of 3 captures landed before the query starts (explicit
+    mtimes; 1, 2 and 3 documents) is delivered in full, and a restart
+    from the same checkpoint delivers none of it again."""
+    import time
+
+    from scats_transis_kinesis_spark.sources.xml import (
+        read_null_delimited_stream,
+    )
+
+    cap_dir = tmp_path / "caps"
+    cap_dir.mkdir()
+    now = time.time()
+    captures = [[f'<doc cap="{i}" n="{k}"/>' for k in range(i + 1)] for i in range(3)]
+    for i, docs in enumerate(captures):
+        data = "".join(d + "\x00" for d in docs).encode()
+        _land(cap_dir / f"cap-{i:03d}.xml0", data, now - 30 + 10 * i)
+
+    def run(sink: list[str]) -> None:
+        q = (
+            read_null_delimited_stream(spark, str(cap_dir))
+            .writeStream.foreachBatch(
+                lambda df, _id: sink.extend(r.value for r in df.collect())
+            )
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    first: list[str] = []
+    run(first)
+    assert sorted(first) == sorted(d for docs in captures for d in docs)
+    again: list[str] = []
+    run(again)
+    assert again == []
+
+
+def test_transis_xml_format_is_live_transport_only(spark, tmp_path):
+    """``format("transis_xml")`` reads only the injected live transport:
+    a batch read, a batch write and a stream without ``transport`` all
+    fail, so a capture file has one reader (``read_null_delimited``)."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.streaming import StreamingQueryException
+
+    from scats_transis_kinesis_spark.sources.datasource import (
+        register_transis_datasource,
+    )
+
+    register_transis_datasource(spark)
+    (tmp_path / "cap-000.bin").write_bytes(b"<a/>\x00")
+    with pytest.raises(AnalysisException, match="reader is not implemented"):
+        spark.read.format("transis_xml").load(str(tmp_path)).collect()
+    df = spark.createDataFrame([("<a/>",)], "value string")
+    with pytest.raises(AnalysisException, match="writer is not implemented"):
+        df.write.format("transis_xml").mode("append").save(str(tmp_path / "o"))
+    q = (
+        spark.readStream.format("transis_xml")
+        .load(str(tmp_path))
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(
+            StreamingQueryException, match="option 'transport' is required"
+        ):
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 # ---------------------------------------------------------------------------
@@ -621,12 +674,14 @@ def test_live_stream_reader_offsets_and_backpressure(tmp_path):
 
 def test_live_stream_micro_batch_parity_with_file_mode(spark, tmp_path):
     """S1 end-to-end: the SAME captured bytes produce identical rows
-    through (a) the batch file reader and (b) the live injected-stream
-    reader driven by Structured Streaming micro-batches — stream ->
-    micro-batch parity for the defining source."""
+    through (a) the capture-file reader ``read_null_delimited`` and
+    (b) the live injected-stream reader driven by Structured Streaming
+    micro-batches — stream -> micro-batch parity for the defining
+    source."""
     from scats_transis_kinesis_spark.sources.datasource import (
         register_transis_datasource,
     )
+    from scats_transis_kinesis_spark.sources.xml import read_null_delimited
 
     register_transis_datasource(spark)
     payload = (
@@ -640,10 +695,7 @@ def test_live_stream_micro_batch_parity_with_file_mode(spark, tmp_path):
     cap = tmp_path / "cap-000.bin"
     cap.write_bytes(payload)
 
-    batch_rows = [
-        r.value
-        for r in spark.read.format("transis_xml").load(str(cap)).collect()
-    ]
+    batch_rows = [r.value for r in read_null_delimited(spark, str(cap)).collect()]
 
     mock = tmp_path / "transport.py"
     mock.write_text(
@@ -786,126 +838,66 @@ def test_live_stream_read_surfaces_exhausted_budget(tmp_path):
 
 
 def test_transis_xml_write_roundtrip(spark, tmp_path):
-    """The DataSource WRITE path: df.write.format('transis_xml')
-    renders NUL-delimited capture files that read back through the same
-    source byte-identically; overwrite mode replaces prior captures;
-    the two-phase commit leaves no staging files behind."""
-    from scats_transis_kinesis_spark.sources.datasource import (
-        register_transis_datasource,
-    )
-
-    import os
-
-    register_transis_datasource(spark)
-    docs = [f'<doc id="{i}" body="text {i}"/>' for i in range(25)]
-    df = spark.createDataFrame([(d,) for d in docs], "value string")
-    out = str(tmp_path / "captures")
-
-    df.repartition(4).write.format("transis_xml").mode("append").save(out)
-    files = sorted(os.listdir(out))
-    assert files and all(f.endswith(".xml0") for f in files)
-    raw = b"".join(
-        open(os.path.join(out, f), "rb").read() for f in files
-    )
-    assert raw.count(b"\x00") == len(docs)
-
-    back = {r["value"] for r in spark.read.format("transis_xml").load(out).collect()}
-    assert back == set(docs)
-
-    # A second APPEND job must not clobber the first job's captures
-    # (final names carry a per-job token, never bare partition ids).
-    extra = ["<doc id='extra-a'/>", "<doc id='extra-b'/>"]
-    spark.createDataFrame([(d,) for d in extra], "value string").coalesce(
-        1
-    ).write.format("transis_xml").mode("append").save(out)
-    back_appended = {
-        r["value"] for r in spark.read.format("transis_xml").load(out).collect()
-    }
-    assert back_appended == set(docs) | set(extra)
-
-    # Overwrite replaces the previous capture set entirely.
-    df2 = spark.createDataFrame([("<doc id='fresh'/>",)], "value string")
-    df2.coalesce(1).write.format("transis_xml").mode("overwrite").save(out)
-    back2 = {r["value"] for r in spark.read.format("transis_xml").load(out).collect()}
-    assert back2 == {"<doc id='fresh'/>"}
-    assert not os.path.isdir(os.path.join(out, "_staging"))
-
-
-def test_transis_xml_stream_writer_roundtrip(spark, tmp_path):
-    """The STREAMING write path: readStream(transis_xml) →
-    writeStream(transis_xml) moves capture files end-to-end, one
-    batchId-named capture set per micro-batch, and newly landed input
-    flows through on the next trigger."""
+    """Capture files are written by the text writer with a NUL
+    ``lineSep`` and read back through ``read_null_delimited``
+    byte-identically, multi-line documents included: batch append adds
+    a second job's captures beside the first, overwrite replaces them,
+    and ``writeStream.format("text")`` moves captures from
+    ``read_null_delimited_stream`` end to end, newly landed input
+    flowing through on the next trigger."""
     import os
     import time
 
-    from scats_transis_kinesis_spark.sources.datasource import (
-        register_transis_datasource,
+    from scats_transis_kinesis_spark.sources.xml import (
+        NULL_DELIM,
+        read_null_delimited,
+        read_null_delimited_stream,
     )
 
-    register_transis_datasource(spark)
-    src = tmp_path / "in"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    (src / "cap-000.xml0").write_bytes(b"<a/>\x00<b/>\x00")
-    os.utime(src / "cap-000.xml0", (time.time() - 10, time.time() - 10))
+    def read_back(path) -> list[str]:
+        return sorted(r.value for r in read_null_delimited(spark, str(path)).collect())
 
+    docs = [f'<doc id="{i}">\n  <body>text {i}</body>\n</doc>' for i in range(25)]
+    df = spark.createDataFrame([(d,) for d in docs], "value string")
+    out = tmp_path / "captures"
+
+    df.repartition(4).write.option("lineSep", NULL_DELIM).mode("append").text(
+        str(out)
+    )
+    parts = [f for f in os.listdir(out) if f.startswith("part-")]
+    raw = b"".join((out / f).read_bytes() for f in parts)
+    assert raw.count(b"\x00") == len(docs)
+    assert read_back(out) == sorted(docs)
+
+    extra = ["<doc id='extra-a'/>", "<doc id='extra-b'/>"]
+    spark.createDataFrame([(d,) for d in extra], "value string").coalesce(
+        1
+    ).write.option("lineSep", NULL_DELIM).mode("append").text(str(out))
+    assert read_back(out) == sorted(docs + extra)
+
+    spark.createDataFrame([("<doc id='fresh'/>",)], "value string").coalesce(
+        1
+    ).write.option("lineSep", NULL_DELIM).mode("overwrite").text(str(out))
+    assert read_back(out) == ["<doc id='fresh'/>"]
+
+    src = tmp_path / "in"
+    sink = tmp_path / "out"
+    src.mkdir()
+    now = time.time()
+    _land(src / "cap-000.xml0", b"<a/>\x00<b>\n</b>\x00", now - 10)
     q = (
-        spark.readStream.format("transis_xml")
-        .load(str(src))
-        .writeStream.format("transis_xml")
-        .option("path", str(out))
-        .option("checkpointLocation", str(ckpt))
+        read_null_delimited_stream(spark, str(src))
+        .writeStream.format("text")
+        .option("lineSep", NULL_DELIM)
+        .option("path", str(sink))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
         q.processAllAvailable()
-        back = {
-            r["value"]
-            for r in spark.read.format("transis_xml").load(str(out)).collect()
-        }
-        assert back == {"<a/>", "<b/>"}
-        # Final names carry the batch id; staging is invisible to reads.
-        names = sorted(os.listdir(out))
-        assert all(n.startswith("part-b") and n.endswith(".xml0")
-                   for n in names if n != "_staging")
-
-        (src / "cap-001.xml0").write_bytes(b"<c/>\x00")
+        assert read_back(sink) == ["<a/>", "<b>\n</b>"]
+        _land(src / "cap-001.xml0", b"<c/>\x00", now)
         q.processAllAvailable()
-        back2 = {
-            r["value"]
-            for r in spark.read.format("transis_xml").load(str(out)).collect()
-        }
-        assert back2 == {"<a/>", "<b/>", "<c/>"}
+        assert read_back(sink) == ["<a/>", "<b>\n</b>", "<c/>"]
     finally:
         q.stop()
-
-
-def test_transis_xml_stream_writer_batch_replay_is_idempotent(tmp_path):
-    """A micro-batch replayed after restart (sink committed, offset
-    not) must overwrite its own capture files, not duplicate records —
-    the final name is a pure function of (batchId, partitionId)."""
-    import os
-
-    from scats_transis_kinesis_spark.sources.datasource import (
-        TransisXMLStreamWriter,
-    )
-
-    out = str(tmp_path / "caps")
-    os.makedirs(out)
-    w = TransisXMLStreamWriter({"path": out})
-    m = w.write(iter([("<doc-1/>",), ("<doc-2/>",)]))
-    w.commit([m], 7)
-    # replay of batch 7 (e.g. after a crash before the offset commit)
-    m2 = w.write(iter([("<doc-1/>",), ("<doc-2/>",)]))
-    w.commit([m2], 7)
-    finals = [n for n in os.listdir(out) if n.endswith(".xml0")]
-    assert finals == ["part-b0000000007-00000.xml0"]
-    data = open(os.path.join(out, finals[0]), "rb").read()
-    assert data == b"<doc-1/>\x00<doc-2/>\x00"
-    # an aborted batch leaves nothing staged
-    m3 = w.write(iter([("<doc-3/>",)]))
-    w.abort([m3], 8)
-    assert [n for n in os.listdir(out) if n.endswith(".xml0")] == finals
-    assert os.listdir(os.path.join(out, "_staging")) == []

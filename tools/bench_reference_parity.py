@@ -11,12 +11,11 @@ detector-count stream (the reference's wire format), runs it through
   parse) -> is_error -> per-message to_dict kinesis records) — the
   single-process, single-thread design of its consumer loop
   (main.py:21-30, transis_consumer.py:115-151), and
-- THIS ENGINE's equivalent (format("transis_xml") source ->
+- THIS ENGINE's equivalent (read_null_delimited text scan ->
   parse_transis_documents -> non_empty_responses -> explode_messages ->
-  project_detector_count_record), once over a single capture file
-  (single-split scan: a parallelism-handicapped worst case) and once
-  over the same bytes split into N capture files (the source's
-  partition-per-file parallelism — how captures actually land).
+  project_detector_count_record), once over a single capture file and
+  once over the same bytes split into N capture files (how captures
+  actually land).
 
 Writes REFERENCE_THROUGHPUT.json and prints one JSON line.  Run:
 
@@ -94,21 +93,16 @@ def measure_reference(payload: bytes) -> tuple[int, float]:
     return n_records, time.time() - t0
 
 
-def measure_spark(payload: bytes, n_files: int, source: str) -> tuple[int, float]:
-    """``source``: "datasource" = the Python DataSource
-    (partition-per-file; rows cross Python->JVM — the streaming-capable
-    reader), "text" = the JVM-native text scan with NUL ``lineSep``
-    (sources/xml.py:read_null_delimited — the bulk batch fast path:
-    splitting happens vectorized inside the scan, no Python worker)."""
+def measure_spark(payload: bytes, n_files: int) -> tuple[int, float]:
+    """The JVM-native text scan with NUL ``lineSep``
+    (sources/xml.py:read_null_delimited: splitting happens inside the
+    scan, no Python worker) through the projection."""
     from scats_transis_kinesis_spark.operators.flatten import explode_messages
     from scats_transis_kinesis_spark.operators.projection import (
         non_empty_responses,
         project_detector_count_record,
     )
     from scats_transis_kinesis_spark.session import get_session
-    from scats_transis_kinesis_spark.sources.datasource import (
-        register_transis_datasource,
-    )
     from scats_transis_kinesis_spark.sources.xml import (
         parse_transis_documents,
         read_null_delimited,
@@ -117,7 +111,6 @@ def measure_spark(payload: bytes, n_files: int, source: str) -> tuple[int, float
     spark = get_session(
         app_name="ref-parity", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    register_transis_datasource(spark)
     docs = [d for d in payload.split(b"\x00") if d]
     with tempfile.TemporaryDirectory() as tmp:
         per = max(1, -(-len(docs) // n_files))
@@ -126,10 +119,7 @@ def measure_spark(payload: bytes, n_files: int, source: str) -> tuple[int, float
                 fh.write(b"\x00".join(docs[i : i + per]) + b"\x00")
 
         def pipeline():
-            if source == "datasource":
-                raw = spark.read.format("transis_xml").load(tmp)
-            else:
-                raw = read_null_delimited(spark, tmp)
+            raw = read_null_delimited(spark, tmp)
             return project_detector_count_record(
                 explode_messages(non_empty_responses(parse_transis_documents(raw)))
             )
@@ -152,29 +142,18 @@ def main() -> None:
 
     payload = gen_stream(args.docs, args.sites)
     ref_n, ref_s = measure_reference(payload)
-    spark1_n, spark1_s = measure_spark(payload, n_files=1, source="datasource")
-    sparkN_n, sparkN_s = measure_spark(
-        payload, n_files=args.files, source="datasource"
-    )
-    text1_n, text1_s = measure_spark(payload, n_files=1, source="text")
-    textN_n, textN_s = measure_spark(payload, n_files=args.files, source="text")
-    assert ref_n == spark1_n == sparkN_n == text1_n == textN_n, (
-        ref_n, spark1_n, sparkN_n, text1_n, textN_n,
-    )
+    text1_n, text1_s = measure_spark(payload, n_files=1)
+    textN_n, textN_s = measure_spark(payload, n_files=args.files)
+    assert ref_n == text1_n == textN_n, (ref_n, text1_n, textN_n)
 
     result = {
         "n_documents": args.docs,
         "n_records": ref_n,
         "payload_mb": round(len(payload) / 1e6, 2),
         "reference_records_per_s": round(ref_n / ref_s),
-        "spark_datasource_1file_records_per_s": round(spark1_n / spark1_s),
-        "spark_datasource_multifile_records_per_s": round(sparkN_n / sparkN_s),
         "spark_text_1file_records_per_s": round(text1_n / text1_s),
         "spark_text_multifile_records_per_s": round(textN_n / textN_s),
         "n_capture_files": args.files,
-        "speedup_datasource_multifile": round(
-            (sparkN_n / sparkN_s) / (ref_n / ref_s), 2
-        ),
         "speedup_text_multifile": round((textN_n / textN_s) / (ref_n / ref_s), 2),
     }
     with open(os.path.join(REPO, "REFERENCE_THROUGHPUT.json"), "w") as fh:
