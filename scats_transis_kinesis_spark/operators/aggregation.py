@@ -26,16 +26,6 @@ def sites_per_window(records: DataFrame) -> DataFrame:
     )
 
 
-def batch_stats(records: DataFrame) -> DataFrame:
-    """A3 — the per-document summary record the reference logs to the DI
-    framework: ``{records_in_xml_doc, window_ts, received_ts}``
-    (reference: transis_kinesis_connector.py:40-44)."""
-    return records.groupBy("response_received_ts").agg(
-        F.count("*").alias("records_in_xml_doc"),
-        F.first("collection_end_ts_plus_3m").alias("window_ts"),
-    )
-
-
 def failed_record_count(put_response: DataFrame) -> DataFrame:
     """A4 — count of throttled records in a put_records response
     (reference: kinesis_producer.py:70-71)."""

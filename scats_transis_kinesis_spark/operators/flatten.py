@@ -17,9 +17,7 @@ from ..functions.sqltext import sql_ident
 def explode_messages(responses: DataFrame) -> DataFrame:
     """F1 — one network snapshot document → N per-site message rows
     (reference: transis_response_models.py:64-68)."""
-    return responses.selectExpr(
-        "response_received_ts", "explode(messages) AS m"
-    ).selectExpr("response_received_ts", "m.*")
+    return responses.selectExpr("response_received_ts", "inline(messages)")
 
 
 def explode_site_children(site_layouts: DataFrame, child: str) -> DataFrame:
@@ -27,12 +25,10 @@ def explode_site_children(site_layouts: DataFrame, child: str) -> DataFrame:
     parent key on every row (reference: transis_response_models.py:182-193).
 
     ``child`` ∈ {arms, detectors, streets, sgs}.  Empty child collections
-    behave like NULL (dropped by explode), matching ElementTree truthiness
+    behave like NULL (dropped by inline), matching ElementTree truthiness
     (SURVEY.md §1.4).
     """
-    return site_layouts.selectExpr(
-        "sId AS site_id", f"explode({sql_ident(child)}) AS c"
-    ).selectExpr("site_id", "c.*")
+    return site_layouts.selectExpr("sId AS site_id", f"inline({sql_ident(child)})")
 
 
 def explode_phases(site_layouts: DataFrame) -> DataFrame:

@@ -47,8 +47,8 @@ def project_detector_count_record(
         *_KEY_COLUMNS,
         "300 AS collection_interval_secs",
         _EPOCH,
-        f"CASE WHEN {_NO_DETECTORS} THEN NULL ELSE map_from_entries("
-        f"transform({_VALID_DETECTORS}, d -> struct(d.Did, d.`count`))) END AS detector_counts",
+        f"CASE WHEN {_NO_DETECTORS} THEN NULL"
+        f" ELSE map_from_entries({_VALID_DETECTORS}) END AS detector_counts",
     ]
     if keep_received_ts:
         # the receive-time stamp the reference attaches per response

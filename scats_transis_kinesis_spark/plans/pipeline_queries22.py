@@ -41,10 +41,6 @@ from .registry import register
 _ARMS: tuple[str, ...] = ("click", "purchase", "view")  # sorted arm ids
 
 
-def _policy_sql(arm_expr: str) -> str:
-    return arm_expr
-
-
 @register(
     "bandit_replay_evaluation",
     oracle=f"""

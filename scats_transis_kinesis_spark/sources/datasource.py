@@ -107,6 +107,13 @@ class LiveStreamConsumer:
                 self._buffer = b""
 
 
+def _required_transport(options: dict) -> str:
+    spec = options.get("transport")
+    if not spec:
+        raise ValueError("transis_xml: option 'transport' is required")
+    return spec
+
+
 def _resolve_transport(spec: str):
     """Resolve a transport spec into the transport factory.
 
@@ -174,10 +181,7 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
     an actionable message instead of silently losing the batch."""
 
     def __init__(self, options: dict) -> None:
-        spec = options.get("transport")
-        if not spec:
-            raise ValueError("transis_xml: option 'transport' is required")
-        self.spec = spec
+        self.spec = _required_transport(options)
         self.max_reconnects = int(
             options.get("maxreconnects")
             or options.get("maxReconnects")
@@ -211,7 +215,7 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
         else:
             self.max_buffered = 4 * self.max_docs if self.max_docs else 10_000
         self.spool_dir = options.get("spooldir") or options.get("spoolDir")
-        _resolve_transport(spec)  # fail fast on a bad spec
+        _resolve_transport(self.spec)  # fail fast on a bad spec
         self._pump = None  # background consumer, started on first read
 
     # Spark pickles the reader into the read task; a live socket (and
@@ -422,6 +426,9 @@ class TransisXMLDataSource(DataSource):
         return "transis_xml"
 
     def schema(self) -> StructType:
+        # ``load()`` asks for the schema, so a query without a transport
+        # fails there instead of at its first trigger.
+        _required_transport(self.options)
         return SCHEMA
 
     def simpleStreamReader(

@@ -28,7 +28,9 @@ from ..functions.sqltext import sql_ident, sql_string
 
 NULL_DELIM = "\x00"
 # Empty fragments (e.g. after a trailing delimiter) are not documents.
-_NON_BLANK = "length(trim(value)) > 0"
+# ``octet_length`` reads the byte count; ``length`` would count the
+# characters of every document.
+_NON_BLANK = "octet_length(trim(value)) > 0"
 
 
 def read_null_delimited(spark: SparkSession, path: str) -> DataFrame:
@@ -75,30 +77,32 @@ TRANSIS_XML_SCHEMA = (
 
 def parse_transis_documents(docs: DataFrame, column: str = "value") -> DataFrame:
     """S3 — XML document text → typed ``TRANSIS_RESPONSE`` rows, parsed
-    by the built-in ``from_xml`` expression (JVM-side, codegen'd).
+    by the built-in ``from_xml`` expression (JVM-side).
 
-    The parse sits behind a one-element ``explode``: Catalyst neither
-    inlines a generator's output into later expressions nor pushes
-    filters on it below the generator, so the fail-stop and non-empty
-    filters downstream read one parsed struct instead of each
-    re-evaluating ``from_xml`` on the document text.
+    Parse and reshape are one generator: ``inline`` over a one-element
+    ``transform`` of the parsed struct.  Catalyst copies a projected
+    expression into every filter above it that reads the column, but
+    never a generator's output, so ``from_xml`` and the message and
+    detector ``transform`` each run once per document however many
+    times the fail-stop and non-empty filters downstream read
+    ``error`` and ``messages``.  The inner detector ``transform`` stays
+    (rather than a ``CAST`` to the renamed struct): it keeps
+    ``detectors`` declared ``containsNull = false``.
 
     ``FAILFAST`` makes a document that is not well-formed XML fail the
     job; the default ``PERMISSIVE`` mode would parse it to an all-NULL
     struct that passes the fail-stop assert and is then dropped as empty.
     """
-    parsed = docs.selectExpr(
-        f"explode(array(from_xml({sql_ident(column)}, {sql_string(TRANSIS_XML_SCHEMA)}, "
-        "map('mode', 'FAILFAST')))) AS r"
-    )
-    return parsed.selectExpr(
-        "r._error AS error",
-        "r.Errors.Error[0]._msg AS error_msg",
+    return docs.selectExpr(
+        f"inline(transform(array(from_xml({sql_ident(column)}, "
+        f"{sql_string(TRANSIS_XML_SCHEMA)}, map('mode', 'FAILFAST'))), r -> struct("
+        "r._error AS error, "
+        "r.Errors.Error[0]._msg AS error_msg, "
         "transform(r.DetectorCountMessages.DetectorCountMessage, m -> struct("
         "m._reg AS reg, m._Sid AS Sid, m._date AS `date`, "
         "transform(m.Detectors.Detector, d -> struct(d._Did AS Did, d._count AS `count`))"
-        " AS detectors)) AS messages",
-        "CAST(NULL AS STRING) AS response_received_ts",
+        " AS detectors)) AS messages, "
+        "CAST(NULL AS STRING) AS response_received_ts)))"
     )
 
 

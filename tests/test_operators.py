@@ -7,6 +7,7 @@ import datetime
 import json
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from scats_transis_kinesis_spark.functions.timestamps import (
     epoch_from_iso8601_sql,
@@ -59,6 +60,9 @@ def test_explode_site_children_prefixes_parent_key(spark):
     )
     # Empty child collections behave like absent — no rows for site 102.
     assert arms.where(F.col("site_id") == "102").count() == 0
+    assert arms.schema.json() == T.StructType(
+        [T.StructField(n, T.StringType(), True) for n in ("site_id", "aId", "name")]
+    ).json()
 
 
 def test_explode_phases_double_unnest(spark):

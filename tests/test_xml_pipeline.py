@@ -3,6 +3,7 @@ consumer + response-model suites (reference: tests.py:17-118)."""
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 import pytest
@@ -213,6 +214,82 @@ def test_sink_plan_parses_each_document_once(spark):
     docs = spark.createDataFrame([(XML_TWO_SITES,), (XML_EMPTY,)], "value string")
     plan = to_kinesis_envelope(scats_records(docs))._jdf.queryExecution().executedPlan()
     assert len(re.findall(r"\bfrom_xml\(", plan.toString())) == 1
+
+
+# A capture holding every case the parse generator must reshape: an empty
+# <Detectors> container, Did- or count-less Detector children, a message
+# without <Detectors>, documents with an empty or no messages container,
+# and a trailing delimiter after the last document.
+EDGE_CAPTURE = "\x00".join(
+    [
+        XML_TWO_SITES,
+        '<TransisResponse error="false"><DetectorCountMessages>'
+        f'<DetectorCountMessage reg="NTH" Sid="9" date="{DATE}"/>'
+        f'<DetectorCountMessage reg="NTH" Sid="10" date="{DATE}"><Detectors>'
+        '<Detector/><Detector Did="4"/><Detector Did="7" count="0"/></Detectors>'
+        "</DetectorCountMessage></DetectorCountMessages></TransisResponse>",
+        XML_EMPTY,
+        '<TransisResponse error="false"></TransisResponse>',
+    ]
+) + "\x00\x00"
+
+# SHA-256 of ``schema.json()`` for each public step of the record plan
+# over EDGE_CAPTURE, nullability and containsNull included.
+STEP_SCHEMA_SHA256 = {
+    "read": "62b2b525aaa50b6bdcf23afae6e03156a3a1f7a4980b76687df7618d0a839202",
+    "parse": "11fe786a2fe7e10e066fcdbc8230f108acc508c01acce27ec8a945079c18ef52",
+    "fail_stop": "11fe786a2fe7e10e066fcdbc8230f108acc508c01acce27ec8a945079c18ef52",
+    "non_empty": "11fe786a2fe7e10e066fcdbc8230f108acc508c01acce27ec8a945079c18ef52",
+    "explode": "4035ef18bda7172dd9c2399b8e51ee011cce27e150a9fe0f75c324cb523d3f87",
+    "project": "f8aa8b16a28a5ac1ec2ddafad2057c72b4bc20b69a4cbfde017aafac6e6c188e",
+    "envelope": "1c407a0ed15707363f4141ae327f95101f1b3b2754a2743ce6b54eb0ac76287a",
+    "detector_counts_long": "5622b0abf73beb6d8d5b70b224bbad17c724ee2b874c14041ec55036cf02c5b0",
+}
+# SHA-256 over the sorted (partition_key, data) envelope rows of EDGE_CAPTURE.
+EDGE_ENVELOPE_SHA256 = "6f82f8fe9cf0977bb14713fc1970f7b65a2425096744689e1951c7b59deb6fe7"
+
+
+def _sha256(text: str | bytes) -> str:
+    return hashlib.sha256(text.encode() if isinstance(text, str) else text).hexdigest()
+
+
+def test_record_plan_parses_and_reshapes_once(spark, tmp_path):
+    """Parse and reshape run once per document: the filters above the
+    parse read its generator output instead of re-running the message
+    ``transform`` on the parsed struct; every step keeps its schema and
+    the sink payloads stay byte-identical."""
+    from scats_transis_kinesis_spark.sources.xml import read_null_delimited
+    from scats_transis_kinesis_spark.streaming.pipeline import scats_records
+
+    (tmp_path / "cap.bin").write_text(EDGE_CAPTURE, encoding="utf-8")
+    docs = read_null_delimited(spark, str(tmp_path))
+    envelope = to_kinesis_envelope(scats_records(docs))
+    plan = envelope._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bfrom_xml\(", plan)) == 1
+    reshapes = r"\btransform\([^,()]*\.DetectorCountMessages\.DetectorCountMessage,"
+    assert len(re.findall(reshapes, plan)) == 1
+
+    parsed = parse_transis_documents(docs)
+    fail_stop = assert_no_error_documents(parsed)
+    non_empty = non_empty_responses(fail_stop)
+    exploded = explode_messages(non_empty)
+    projected = project_detector_count_record(exploded)
+    steps = {
+        "read": docs,
+        "parse": parsed,
+        "fail_stop": fail_stop,
+        "non_empty": non_empty,
+        "explode": exploded,
+        "project": projected,
+        "envelope": to_kinesis_envelope(projected),
+        "detector_counts_long": detector_counts_long(exploded),
+    }
+    assert {k: _sha256(df.schema.json()) for k, df in steps.items()} == STEP_SCHEMA_SHA256
+
+    rows = sorted((r["partition_key"], bytes(r["data"])) for r in envelope.collect())
+    assert len(rows) == 4
+    payload = b"\n".join(k.encode() + b"\t" + data for k, data in rows)
+    assert _sha256(payload) == EDGE_ENVELOPE_SHA256
 
 
 @pytest.mark.parametrize(
@@ -510,9 +587,10 @@ def test_read_null_delimited_stream_drains_backlog_once(spark, tmp_path):
 def test_transis_xml_format_is_live_transport_only(spark, tmp_path):
     """``format("transis_xml")`` reads only the injected live transport:
     a batch read, a batch write and a stream without ``transport`` all
-    fail, so a capture file has one reader (``read_null_delimited``)."""
+    fail, so a capture file has one reader (``read_null_delimited``).
+    A stream without ``transport`` fails at ``load()``, not at its first
+    trigger."""
     from pyspark.errors import AnalysisException
-    from pyspark.sql.streaming import StreamingQueryException
 
     from scats_transis_kinesis_spark.sources.datasource import (
         register_transis_datasource,
@@ -520,25 +598,15 @@ def test_transis_xml_format_is_live_transport_only(spark, tmp_path):
 
     register_transis_datasource(spark)
     (tmp_path / "cap-000.bin").write_bytes(b"<a/>\x00")
-    with pytest.raises(AnalysisException, match="reader is not implemented"):
+    with pytest.raises(AnalysisException, match="option 'transport' is required"):
         spark.read.format("transis_xml").load(str(tmp_path)).collect()
+    with pytest.raises(AnalysisException, match="reader is not implemented"):
+        spark.read.format("transis_xml").option("transport", "m:f").load().collect()
     df = spark.createDataFrame([("<a/>",)], "value string")
     with pytest.raises(AnalysisException, match="writer is not implemented"):
         df.write.format("transis_xml").mode("append").save(str(tmp_path / "o"))
-    q = (
-        spark.readStream.format("transis_xml")
-        .load(str(tmp_path))
-        .writeStream.format("noop")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        with pytest.raises(
-            StreamingQueryException, match="option 'transport' is required"
-        ):
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    with pytest.raises(AnalysisException, match="option 'transport' is required"):
+        spark.readStream.format("transis_xml").load(str(tmp_path))
 
 
 # ---------------------------------------------------------------------------
