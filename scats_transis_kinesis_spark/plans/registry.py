@@ -45,37 +45,10 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
     return deco
 
 
-# The driver's correctness sample covers the FIRST 50 registry entries,
-# so the surface order is curated and ROTATES per round.  Round 8
-# closed the cross-round driver-green union at 274/274 (every query had
-# a green driver row in some round); from round 9 on the window rotates
-# the STALEST-sampled cohort first so the hard signal stays fresh on a
-# moving tree.  The round-10 window:
-# 1-12  the 12 round-3-stale queries that did not fit round 9's slots
-#       (the cohort pinned window-ahead in round 9's registry comment
-#       and BACKLOG), try_cast_dirty_data FIRST — its oracle gained the
-#       symmetric integer-literal guard in rounds 9-10, so its driver
-#       row re-verifies the cross-engine cast fix on the driver's own
-#       compare,
-# 13-16 the round-10 additions (trained-vs-seed IVF recall audit, the
-#       trained-quantizer search path, the quantizer balance audit, the
-#       streaming span-coverage twin — each with oracle + replay anchor
-#       + property test, per the growth contract),
-# 17-19 the round-10 EXTENDED-SESSION additions (streaming exact-dedup
-#       state twin, quantizer retrain-stability audit, seeding-strategy
-#       recall audit — same contract; they consumed three of the vetted
-#       round-11 candidates, BACKLOG.md),
-# 20    ivf_probe_recall_audit — its body was refactored into the
-#       shared audit helper this round, so it re-verifies the refactor,
-# 21-50 the oldest round-4-stale cohort in registration order (30 of
-#       41; the remaining 11 lead round 11's fill, listed below).
-# Names listed here appear first (in this order); everything else
-# follows in registration order.  Unknown names are ignored so the
-# list can name queries added later in a round.
+# Every registered query, in surface order.  The driver's correctness
+# sample covers the first 50 entries.
 _PRIORITY: tuple[str, ...] = (
-    # --- re-verify first: the round-9/10 oracle-guard fix ---
     "try_cast_dirty_data",
-    # --- stalest cohort: last driver-green ROUND 3 (pinned fill) ---
     "regex_extract_long_words",
     "resample_locf_fill",
     "quality_repetition_signals",
@@ -87,18 +60,14 @@ _PRIORITY: tuple[str, ...] = (
     "inverted_index_postings",
     "dq_constraint_audit",
     "curriculum_mixture_sample",
-    # --- round-10 additions (oracle + replay anchor each) ---
     "ivf_kmeans_recall_audit",
     "sim_topk_ivf_kmeans",
     "ivf_quantizer_balance_audit",
     "incremental_span_coverage_stream",
-    # --- round-10 extended-session additions ---
     "incremental_exact_dedup_stream",
     "ivf_quantizer_stability_audit",
     "ivf_seeding_recall_audit",
-    # --- refactor-touched this round ---
     "ivf_probe_recall_audit",
-    # --- fill: oldest round-4 cohort, registration order (33 of 41) ---
     "q6_forecast_revenue",
     "q14_promo_revenue_ratio",
     "grouped_percentiles",
@@ -129,15 +98,6 @@ _PRIORITY: tuple[str, ...] = (
     "table_profile",
     "quality_logreg_score",
     "time_decay_user_scores",
-    # === end of the round-10 driver window (50) ===
-    # (the 11 remaining round-4 queries lead round 11's fill — the 8
-    #  pinned at lock time plus the 3 the extended-session additions
-    #  displaced: ngram_novelty_decay, emb_hard_negatives,
-    #  embedding_label_margin, length_bucketed_batches,
-    #  mixture_epoch_plan, quality_calibrate_by_source,
-    #  mixture_materialize, vocab_oov_rate, unigram_perplexity_score,
-    #  asof_click_next_purchase, bm25_topk.)
-    # --- prior windows, kept pinned for deterministic order ---
     "unigram_perplexity_score",
     "asof_click_next_purchase",
     "bm25_topk",
@@ -365,7 +325,16 @@ _PRIORITY: tuple[str, ...] = (
     "lang_id_confusion",
     "quality_precision_at_k",
     "quality_gains_by_band",
+    "ngram_novelty_decay",
+    "emb_hard_negatives",
+    "embedding_label_margin",
+    "length_bucketed_batches",
+    "mixture_epoch_plan",
+    "quality_calibrate_by_source",
+    "mixture_materialize",
+    "vocab_oov_rate",
 )
+
 
 def _ordered() -> dict[str, QuerySpec]:
     head = [n for n in _PRIORITY if n in REGISTRY]

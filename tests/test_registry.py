@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import inspect
 import re
 
@@ -9,7 +10,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry
-from scats_transis_kinesis_spark.plans.registry import REGISTRY
+from scats_transis_kinesis_spark.plans.registry import _PRIORITY, REGISTRY, queries
 
 # Queries allowed to run rows-only, each with a reason the judge can
 # audit.  Currently EMPTY: every registered query is oracle-checked
@@ -71,3 +72,15 @@ def test_bench_headline_names_resolve():
     unknown = [n for n in bench.HEADLINE if n not in REGISTRY]
     assert not unknown, f"bench HEADLINE names not in REGISTRY: {unknown}"
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate bench entries"
+
+
+# SHA-256 of the newline-joined query names in surface order.  The
+# driver samples the first 50 entries, so moving a query between
+# modules or registering it elsewhere must not change this order.
+PINNED_ORDER_SHA256 = "b0a8f1f9a549162d404644f975b004506a080fd626ccd138809e301cc5d8a798"
+
+
+def test_registry_order_is_pinned():
+    order = "\n".join(queries())
+    assert hashlib.sha256(order.encode()).hexdigest() == PINNED_ORDER_SHA256
+    assert set(_PRIORITY) == set(REGISTRY)
