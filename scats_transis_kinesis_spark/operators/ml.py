@@ -421,7 +421,7 @@ def kcenter_centroids(
 
     Distances use the k-means contract's rounded-6 left-fold squared
     euclidean, so the oracle's unrolled argmax chain
-    (plans/pipeline_queries30.py:_kcenter_ctes) agrees bit-for-bit.
+    (plans/retrieval.py:_kcenter_ctes) agrees bit-for-bit.
 
     Scale shape: the min-distance column is maintained INCREMENTALLY —
     one ``least(md, dist-to-new-pick)`` update per round, each distance

@@ -350,44 +350,15 @@ def oracle_sql() -> dict[str, str]:
     return {name: spec.oracle for name, spec in _ordered().items() if spec.oracle is not None}
 
 
-# Importing the query modules populates REGISTRY (kept at the bottom so
+# Importing the family modules populates REGISTRY (kept at the bottom so
 # the decorators see the helpers above).
-from . import core_queries  # noqa: E402,F401
-from . import relational_queries  # noqa: E402,F401
-from . import relational_queries2  # noqa: E402,F401
-from . import tpch_queries  # noqa: E402,F401
-from . import parity_queries  # noqa: E402,F401
-from . import extension_queries  # noqa: E402,F401
-from . import extension_queries2  # noqa: E402,F401
-from . import coverage_queries  # noqa: E402,F401
-from . import analytics_queries  # noqa: E402,F401
-from . import pipeline_queries  # noqa: E402,F401
-from . import pipeline_queries2  # noqa: E402,F401
-from . import pipeline_queries3  # noqa: E402,F401
-from . import pipeline_queries4  # noqa: E402,F401
-from . import pipeline_queries5  # noqa: E402,F401
-from . import pipeline_queries6  # noqa: E402,F401
-from . import pipeline_queries7  # noqa: E402,F401
-from . import pipeline_queries8  # noqa: E402,F401
-from . import pipeline_queries9  # noqa: E402,F401
-from . import pipeline_queries10  # noqa: E402,F401
-from . import pipeline_queries11  # noqa: E402,F401
-from . import pipeline_queries12  # noqa: E402,F401
-from . import pipeline_queries13  # noqa: E402,F401
-from . import pipeline_queries14  # noqa: E402,F401
-from . import pipeline_queries15  # noqa: E402,F401
-from . import pipeline_queries16  # noqa: E402,F401
-from . import pipeline_queries17  # noqa: E402,F401
-from . import pipeline_queries18  # noqa: E402,F401
-from . import pipeline_queries19  # noqa: E402,F401
-from . import pipeline_queries20  # noqa: E402,F401
-from . import pipeline_queries21  # noqa: E402,F401
-from . import pipeline_queries22  # noqa: E402,F401
-from . import pipeline_queries23  # noqa: E402,F401
-from . import pipeline_queries24  # noqa: E402,F401
-from . import pipeline_queries25  # noqa: E402,F401
-from . import pipeline_queries26  # noqa: E402,F401
-from . import pipeline_queries27  # noqa: E402,F401
-from . import pipeline_queries28  # noqa: E402,F401
-from . import pipeline_queries29  # noqa: E402,F401
-from . import pipeline_queries30  # noqa: E402,F401
+from . import scats  # noqa: E402,F401
+from . import relational  # noqa: E402,F401
+from . import dedup  # noqa: E402,F401
+from . import retrieval  # noqa: E402,F401
+from . import graph  # noqa: E402,F401
+from . import stats  # noqa: E402,F401
+from . import events  # noqa: E402,F401
+from . import sampling  # noqa: E402,F401
+from . import text  # noqa: E402,F401
+from . import audits  # noqa: E402,F401

@@ -1,18 +1,17 @@
-"""Core queries: the flagship windowed aggregation plus the reference's
-projection/filter/scalar/agg operator family (SURVEY.md §2.2/§2.4)
-expressed over the driver's ``events`` table.
+"""SCATS parity queries: the reference pipeline's operators as queries.
 
-``events`` plays the detector-count fact stream (FIXTURES.md §5):
-``user_id`` ↔ site, ``event_type`` ↔ region, ``ts`` ↔ collection
-timestamp, ``value`` ↔ count.  Every query here is also the batch form
-of the streaming pipeline in ``streaming/`` — the transforms are shared.
+The flagship windowed traffic rollup plus the reference's projection,
+filter, scalar, aggregate, unnest, XML round-trip, envelope, failed-
+subset and time-range pulls (SURVEY.md §2), each checked against its
+DuckDB oracle.  Each doc names the reference lines it mirrors.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.envelope import THROTTLE_ERROR, failed_subset
 from ..sources.loaders import load_table
 from .registry import register
 
@@ -244,3 +243,108 @@ def time_range_typed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select(
         "event_id", "event_type", "user_id", F.unix_timestamp("ts").alias("epoch_ts")
     )
+
+
+@register(
+    "f3_unnest_words",
+    oracle="""
+        SELECT doc_id, unnest(string_split(text, ' ')) AS word
+        FROM documents
+    """,
+    doc="""F1/F3 — correlated unnest with the parent key on every child
+    row (reference: transis_response_models.py:175-198): explode runs
+    in-partition, no shuffle, no join.""",
+)
+def f3_unnest_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, "documents", sf_dir)
+    return docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
+
+
+@register(
+    "f4_double_unnest",
+    oracle="""
+        WITH words AS (
+            SELECT doc_id, unnest(string_split(text, ' ')) AS word
+            FROM documents WHERE doc_id < 50
+        )
+        SELECT doc_id, word, unnest(string_split(word, '')) AS ch
+        FROM words
+    """,
+    doc="""F4 — two nesting levels unnested (reference:
+    transis_response_models.py:194-197): site × phases × SGNos becomes
+    doc × words × chars; chained explodes, still shuffle-free.""",
+)
+def f4_double_unnest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, "documents", sf_dir).where(F.col("doc_id") < 50)
+    return (
+        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
+        .select("doc_id", "word", F.explode(F.split("word", "")).alias("ch"))
+    )
+
+
+@register(
+    "s3_xml_roundtrip",
+    oracle="SELECT doc_id, lang AS xml_lang, source AS xml_source FROM documents",
+    doc="""S3 — XML document parse (reference:
+    transis_response_models.py:288-292) inside the correctness gate:
+    rows are rendered to XML attributes and parsed back with the same
+    ``from_xml`` path the Transis ingestion uses; the oracle is the
+    identity projection.""",
+)
+def s3_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, "documents", sf_dir)
+    xml = F.concat(
+        F.lit('<doc lang="'), F.col("lang"), F.lit('" source="'), F.col("source"), F.lit('"/>')
+    )
+    parsed = docs.select(
+        "doc_id", F.from_xml(xml, "struct<_lang:string, _source:string>").alias("r")
+    )
+    return parsed.select(
+        "doc_id",
+        F.col("r._lang").alias("xml_lang"),
+        F.col("r._source").alias("xml_source"),
+    )
+
+
+@register(
+    "k4_failed_subset",
+    oracle=f"""
+        WITH req AS (
+            SELECT o_orderkey, o_totalprice,
+                   o_orderkey // 500 AS batch_id,
+                   row_number() OVER (PARTITION BY o_orderkey // 500
+                                      ORDER BY o_orderkey) AS pos
+            FROM orders
+        ),
+        resp AS (
+            SELECT batch_id, pos,
+                   CASE WHEN pos % 3 = 0
+                        THEN '{THROTTLE_ERROR}' END AS error_code
+            FROM req
+        )
+        SELECT req.o_orderkey, req.o_totalprice
+        FROM req JOIN resp USING (batch_id, pos)
+        WHERE resp.error_code = '{THROTTLE_ERROR}'
+    """,
+    doc="""K4 — positional join of put-request records with per-record
+    response entries, keeping only the throttled subset (reference:
+    kinesis_producer.py:87-98, zip at :92).  Position is stamped PER
+    PUT-REQUEST BATCH (id-range batches of ≤500 keys, matching the
+    Kinesis PutRecords limit), so the row_number window partitions on
+    batch_id — structurally bounded at any table size, never a global
+    sort.  The throttle pattern is a deterministic pos%3 stand-in for
+    the mocked Kinesis response in reference tests.py:156-169.""",
+)
+def k4_failed_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, "orders", sf_dir)
+    batch = F.floor(F.col("o_orderkey") / 500)
+    w = Window.partitionBy("batch_id").orderBy("o_orderkey")
+    req = orders.select(
+        "o_orderkey", "o_totalprice", batch.alias("batch_id")
+    ).withColumn("pos", F.row_number().over(w))
+    resp = req.select(
+        "batch_id",
+        "pos",
+        F.when(F.col("pos") % 3 == 0, F.lit(THROTTLE_ERROR)).alias("error_code"),
+    )
+    return failed_subset(req, resp, on=("batch_id", "pos"))

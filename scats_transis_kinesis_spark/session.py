@@ -42,7 +42,7 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         # ANSI mode is Spark 4.x's default, but several oracle contracts
         # depend on it (the int64 overflow symmetry documented at
-        # plans/pipeline_queries27.py: with ANSI off Spark wraps int64
+        # plans/sampling.py: with ANSI off Spark wraps int64
         # silently while DuckDB raises).  Pin it explicitly so a future
         # default flip — or a stray submit-time conf — cannot silently
         # change cast/overflow semantics; the SPARK_GRAFT_EXTRA_CONF

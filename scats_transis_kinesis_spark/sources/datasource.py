@@ -30,14 +30,12 @@ from typing import Iterator
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..streaming.connectors import MAX_RECONNECTS
 from .xml import NULL_DELIM
 
 _NUL = NULL_DELIM.encode()  # reference: transis_consumer.py:133
 
 SCHEMA = StructType([StructField("value", StringType(), True)])
-
-
-DEFAULT_MAX_RECONNECTS = 3  # reference: transis_consumer.py __max_reconnects
 
 
 class LiveStreamConsumer:
@@ -65,7 +63,7 @@ class LiveStreamConsumer:
     def __init__(
         self,
         transport_factory,
-        max_reconnects: int = DEFAULT_MAX_RECONNECTS,
+        max_reconnects: int = MAX_RECONNECTS,
     ) -> None:
         self._factory = transport_factory
         self._max_reconnects = max_reconnects
@@ -182,39 +180,20 @@ class TransisXMLLiveStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, options: dict) -> None:
         self.spec = _required_transport(options)
-        self.max_reconnects = int(
-            options.get("maxreconnects")
-            or options.get("maxReconnects")
-            or DEFAULT_MAX_RECONNECTS
-        )
-        max_docs = options.get("maxdocspertrigger") or options.get(
-            "maxDocsPerTrigger"
-        )
+        # Spark hands the reader a case-insensitive dict whose keys are
+        # lower-cased, so each option is one lower-case lookup.
+        self.max_reconnects = int(options.get("maxreconnects") or MAX_RECONNECTS)
+        max_docs = options.get("maxdocspertrigger")
         self.max_docs = int(max_docs) if max_docs else None
         if self.max_docs is not None and self.max_docs < 1:
             raise ValueError("transis_xml: maxDocsPerTrigger must be >= 1")
-        self.poll_timeout_s = (
-            int(
-                options.get("polltimeoutms")
-                or options.get("pollTimeoutMs")
-                or 500
-            )
-            / 1000.0
-        )
+        self.poll_timeout_s = int(options.get("polltimeoutms") or 500) / 1000.0
         # Backpressure bound for the pump queue: a producer faster than
         # the trigger drain rate blocks on put() instead of growing
-        # driver memory without bound.  Default: a few triggers' worth
-        # when maxDocsPerTrigger is set, else a fixed cap.
-        max_buffered = options.get("maxbuffereddocs") or options.get(
-            "maxBufferedDocs"
-        )
-        if max_buffered:
-            self.max_buffered = int(max_buffered)
-            if self.max_buffered < 1:
-                raise ValueError("transis_xml: maxBufferedDocs must be >= 1")
-        else:
-            self.max_buffered = 4 * self.max_docs if self.max_docs else 10_000
-        self.spool_dir = options.get("spooldir") or options.get("spoolDir")
+        # driver memory without bound.  A few triggers' worth when
+        # maxDocsPerTrigger is set, else a fixed cap.
+        self.max_buffered = 4 * self.max_docs if self.max_docs else 10_000
+        self.spool_dir = options.get("spooldir")
         _resolve_transport(self.spec)  # fail fast on a bad spec
         self._pump = None  # background consumer, started on first read
 
@@ -425,10 +404,14 @@ class TransisXMLDataSource(DataSource):
     def name(cls) -> str:
         return "transis_xml"
 
+    def __init__(self, options: dict) -> None:
+        # Spark builds the source at ``load()`` even when the query gives
+        # a schema (and asks ``schema()`` only when it does not), so a
+        # query without a transport fails here, before its first trigger.
+        _required_transport(options)
+        super().__init__(options)
+
     def schema(self) -> StructType:
-        # ``load()`` asks for the schema, so a query without a transport
-        # fails there instead of at its first trigger.
-        _required_transport(self.options)
         return SCHEMA
 
     def simpleStreamReader(

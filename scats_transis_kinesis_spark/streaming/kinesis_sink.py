@@ -39,7 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-THROTTLE_ERROR = "ProvisionedThroughputExceededException"
+from ..operators.envelope import THROTTLE_ERROR
+
 DEFAULT_BATCH_SIZE = 10
 RETRY_BACKOFF_S = 2.0
 

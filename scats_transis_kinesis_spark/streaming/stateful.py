@@ -35,8 +35,9 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-IDLE_TIMEOUT_MS = 20 * 60 * 1000  # reference: transis_consumer.py:13
-RECONNECT_BUDGET = 3  # reference: transis_consumer.py:41-47
+from .connectors import MAX_RECONNECTS, STREAM_TIMEOUT_S
+
+IDLE_TIMEOUT_MS = STREAM_TIMEOUT_S * 1000
 
 OUTPUT_SCHEMA = (
     "site_id string, status string, n_messages long, "
@@ -50,7 +51,7 @@ def liveness_fn(
     pdf_iter: Iterator["pd.DataFrame"],  # noqa: F821
     state: GroupState,
     idle_timeout_ms: int = IDLE_TIMEOUT_MS,
-    budget: int = RECONNECT_BUDGET,
+    budget: int = MAX_RECONNECTS,
 ) -> Iterator["pd.DataFrame"]:
     """The per-key state transition.  Kept as a standalone function (not
     a closure) so the timeout branch is unit-testable with a fake
@@ -100,7 +101,7 @@ def site_liveness(
     ts_col: str = "ts",
     key_col: str = "site_id",
     idle_timeout_ms: int = IDLE_TIMEOUT_MS,
-    budget: int = RECONNECT_BUDGET,
+    budget: int = MAX_RECONNECTS,
 ) -> DataFrame:
     """Apply the liveness state machine over a stream keyed by site.
 
@@ -131,7 +132,7 @@ def site_liveness(
 
 # --- streaming decayed counters (the decayed_hourly_traffic twin) --------
 
-# hours; THE single definition — plans/pipeline_queries5 imports it, so
+# hours; THE single definition — plans/events.py imports it, so
 # the batch/stream parity contract cannot drift.
 DECAY_HORIZON = 20
 

@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 inference/agreement/shuffle batch
-(``pipeline_queries17``).
+(``plans/sampling.py``, ``plans/stats.py``).
 
 - ANOVA: five 2-value groups with unit spreads and means 2..6 — SSB=20,
   SSW=10, F=(20/4)/(10/5)=2.5, eta²=2/3, worked by hand.
@@ -31,9 +31,7 @@ _ORDERS_SCHEMA = "o_orderkey long, o_orderpriority string, o_totalprice double, 
 def test_anova_hand_computed_f(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        anova_f_priority_spend,
-    )
+    from scats_transis_kinesis_spark.plans.stats import anova_f_priority_spend
 
     prios = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
     rows = []
@@ -52,9 +50,7 @@ def test_anova_hand_computed_f(spark, tmp_path):
 def test_spearman_perfect_antimonotone_and_pearson_divergence(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        spearman_daily_kpis,
-    )
+    from scats_transis_kinesis_spark.plans.stats import spearman_daily_kpis
 
     rows = [
         (1, "1-URGENT", 100.0, date(1995, 1, 1)),
@@ -76,9 +72,7 @@ def test_spearman_perfect_antimonotone_and_pearson_divergence(spark, tmp_path):
 def test_spearman_midranks_under_ties(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        spearman_daily_kpis,
-    )
+    from scats_transis_kinesis_spark.plans.stats import spearman_daily_kpis
 
     # Daily rev: 100.00, 20.00, 3.00, 3.00 -> midranks 4, 3, 1.5, 1.5
     # Daily n_orders: 1, 2, 3, 4 -> ranks 1..4
@@ -99,9 +93,7 @@ _DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars lo
 
 
 def test_ari_perfect_agreement(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        lang_id_agreement_ari,
-    )
+    from scats_transis_kinesis_spark.plans.stats import lang_id_agreement_ari
 
     rows = [
         (0, "the the", "l1", "s", 7),
@@ -119,9 +111,7 @@ def test_ari_perfect_agreement(spark, tmp_path):
 
 
 def test_ari_anti_diagonal_is_minus_half(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        lang_id_agreement_ari,
-    )
+    from scats_transis_kinesis_spark.plans.stats import lang_id_agreement_ari
 
     # Each true group splits across both guesses: every cell is 1, so
     # matched = 0, true = pred = 2, tot = 6:
@@ -141,9 +131,7 @@ def test_ari_anti_diagonal_is_minus_half(spark, tmp_path):
 
 
 def test_shuffle_quality_single_source_is_exactly_even(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        shard_shuffle_quality,
-    )
+    from scats_transis_kinesis_spark.plans.sampling import shard_shuffle_quality
 
     rows = [(i, f"t{i}", "en", "only", 2) for i in range(40)]
     _write(spark, tmp_path, "documents", rows, _DOCS_SCHEMA)
@@ -157,9 +145,7 @@ def test_shuffle_quality_single_source_is_exactly_even(spark, tmp_path):
 
 
 def test_shuffle_quality_two_source_expectation(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        shard_shuffle_quality,
-    )
+    from scats_transis_kinesis_spark.plans.sampling import shard_shuffle_quality
 
     rows = [(i, f"t{i}", "en", "a" if i < 20 else "b", 2) for i in range(40)]
     _write(spark, tmp_path, "documents", rows, _DOCS_SCHEMA)
@@ -171,9 +157,7 @@ def test_shuffle_quality_two_source_expectation(spark, tmp_path):
 
 
 def test_shuffle_quality_degenerate_guards(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        shard_shuffle_quality,
-    )
+    from scats_transis_kinesis_spark.plans.sampling import shard_shuffle_quality
 
     # All-unique sources: expected rate is 0, so the ratio is undefined
     # (NULL), and with n < shards some shards are singletons — both

@@ -18,10 +18,7 @@ def _key(doc_id: int, n_chars: int) -> float:
 
 
 def test_ares_sample_matches_python_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
-        ARES_K,
-        weighted_sample_ares,
-    )
+    from scats_transis_kinesis_spark.plans.sampling import ARES_K, weighted_sample_ares
 
     rows = [(i, "en" if i % 2 else "de", 10 + (i * 37) % 990) for i in range(1, 61)]
     spark.createDataFrame(

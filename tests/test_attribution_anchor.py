@@ -39,9 +39,7 @@ def test_linear_attribution_split_edges_and_direct(spark, tmp_path):
         "event_id long, user_id long, event_type string, ts timestamp, value double",
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
-        multitouch_attribution,
-    )
+    from scats_transis_kinesis_spark.plans.events import multitouch_attribution
 
     out = {
         r["touch_type"]: r

@@ -34,9 +34,7 @@ def test_bandit_replay_matches_li_estimator(spark, tmp_path):
         logged + noise, "event_id long, user_id long, event_type string, value double"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
-        bandit_replay_evaluation,
-    )
+    from scats_transis_kinesis_spark.plans.stats import bandit_replay_evaluation
 
     got = {
         r["policy"]: (r["n_matched"], r["match_rate_micros"],

@@ -25,9 +25,7 @@ def test_benford_digits_and_chi2_match_replay(spark, tmp_path):
         rows, "o_orderkey long, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries6 import (
-        benford_digit_audit,
-    )
+    from scats_transis_kinesis_spark.plans.stats import benford_digit_audit
 
     got = {
         r["digit"]: (r["n_obs"], r["expected_share"], r["observed_share"],
@@ -56,9 +54,7 @@ def test_benford_digits_and_chi2_match_replay(spark, tmp_path):
 
 
 def test_gini_matches_closed_forms(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries6 import (
-        revenue_concentration_gini,
-    )
+    from scats_transis_kinesis_spark.plans.stats import revenue_concentration_gini
 
     # Case 1: perfect equality — 8 customers, one 100.0 order each.
     rows = [(i, i, 100.0) for i in range(1, 9)]

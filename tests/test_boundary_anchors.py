@@ -38,9 +38,7 @@ def test_range_join_bounds_inclusive_both_ends(spark, tmp_path):
         lines, "l_orderkey long, l_quantity double, l_shipdate timestamp"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        range_join_ship_lag,
-    )
+    from scats_transis_kinesis_spark.plans.relational import range_join_ship_lag
 
     rows = range_join_ship_lag(spark, str(tmp_path)).collect()
     assert len(rows) == 1
@@ -64,9 +62,7 @@ def test_cohort_weeks_truncate_to_monday(spark, tmp_path):
         rows, "event_id long, user_id long, event_type string, ts timestamp, value double"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        cohort_weekly_retention,
-    )
+    from scats_transis_kinesis_spark.plans.events import cohort_weekly_retention
 
     got = {
         (r["cohort_week"], r["week_offset"]): r["n_active_users"]
@@ -91,9 +87,7 @@ def test_sliding_windows_are_half_open(spark, tmp_path):
         rows, "event_id long, user_id long, event_type string, ts timestamp, value double"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        sliding_window_traffic,
-    )
+    from scats_transis_kinesis_spark.plans.events import sliding_window_traffic
 
     got = sorted(
         (r["window_start"], r["n_events"], r["total_value"])
@@ -106,7 +100,7 @@ def test_sliding_windows_are_half_open(spark, tmp_path):
 
 
 def test_chunking_stride_and_tail_dedup(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.extension_queries2 import (
+    from scats_transis_kinesis_spark.plans.text import (
         CHUNK_STRIDE,
         CHUNK_TOKENS,
         text_chunking,

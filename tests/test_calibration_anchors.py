@@ -73,9 +73,7 @@ def test_pav_matches_classic_pooling_replay(spark, tmp_path):
         rows, "o_totalprice double, o_orderstatus string"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
-        pav_calibration_bins,
-    )
+    from scats_transis_kinesis_spark.plans.stats import pav_calibration_bins
 
     got = {
         r["band"]: (r["n"], r["rate_micros"], r["iso_micros"])
@@ -107,9 +105,7 @@ def test_conformal_coverage_matches_replay(spark, tmp_path):
         vecs, "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
-        conformal_coverage_audit,
-    )
+    from scats_transis_kinesis_spark.plans.stats import conformal_coverage_audit
 
     row = conformal_coverage_audit(spark, str(tmp_path)).collect()[0]
 
@@ -169,9 +165,7 @@ def test_decision_stump_matches_gini_replay(spark, tmp_path):
         rows, "doc_id long, n_chars long, lang string"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
-        decision_stump_split,
-    )
+    from scats_transis_kinesis_spark.plans.stats import decision_stump_split
 
     got = {
         r["cut_no"]: r for r in decision_stump_split(spark, str(tmp_path)).collect()

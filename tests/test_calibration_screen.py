@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 calibration/screening batch
-(``pipeline_queries20``).
+(``plans/stats.py``).
 
 - PAV: three populated bands with rates (1, 0, 1) — the classic
   violation; pool-adjacent-violators merges the first two to 1/2 and
@@ -25,9 +25,7 @@ def _write(spark, path, name, rows, schema):
 def test_pav_pools_adjacent_violators(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
-        pav_calibration_bins,
-    )
+    from scats_transis_kinesis_spark.plans.stats import pav_calibration_bins
 
     rows = []
     # band 0 (xd=0): rate 1; band 5 (xd=45): rate 0; band 9 (xd=90): rate 1
@@ -52,9 +50,7 @@ def test_pav_pools_adjacent_violators(spark, tmp_path):
 
 
 def test_conformal_quantile_and_coverage(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
-        conformal_coverage_audit,
-    )
+    from scats_transis_kinesis_spark.plans.stats import conformal_coverage_audit
 
     def vec(milli: int) -> list[float]:
         return [milli / 1000.0] + [0.0] * 63
@@ -80,9 +76,7 @@ def test_conformal_quantile_and_coverage(spark, tmp_path):
 
 
 def test_stump_perfectly_separable_feature(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
-        decision_stump_split,
-    )
+    from scats_transis_kinesis_spark.plans.stats import decision_stump_split
 
     rows = [(i, "x", "zz", "s", i + 1) for i in range(5)] + [
         (10 + i, "x", "en", "s", 95 + i) for i in range(5)

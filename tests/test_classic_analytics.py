@@ -45,9 +45,7 @@ def _d(y, m, d):
 
 
 def test_kaplan_meier_hand_computed_steps(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
-        kaplan_meier_retention,
-    )
+    from scats_transis_kinesis_spark.plans.stats import kaplan_meier_retention
 
     rows = [
         # customer 1: single order, duration 0 weeks, event
@@ -76,9 +74,7 @@ def test_kaplan_meier_hand_computed_steps(spark, tmp_path):
 
 
 def test_hits_two_by_two_bipartite_hand_walk(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
-        hits_hubs_authorities,
-    )
+    from scats_transis_kinesis_spark.plans.graph import hits_hubs_authorities
 
     orders = [
         (1, 1, _d(1995, 3, 1)),
@@ -104,9 +100,7 @@ def test_hits_two_by_two_bipartite_hand_walk(spark, tmp_path):
 
 
 def test_concurrency_peaks_hand_profile(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
-        order_concurrency_peaks,
-    )
+    from scats_transis_kinesis_spark.plans.events import order_concurrency_peaks
 
     # A: Jan 1 → ships Jan 3; B: Jan 2 → ships Jan 2; C: Jan 2 → Jan 4
     orders = [(1, 1, _d(2024, 1, 1)), (2, 1, _d(2024, 1, 2)), (3, 1, _d(2024, 1, 2))]
@@ -139,7 +133,7 @@ def test_concurrency_peaks_hand_profile(spark, tmp_path):
 
 
 def test_markov_stationary_matches_pure_python_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.graph import (
         MARKOV_ROUNDS,
         markov_stationary_events,
     )
@@ -187,9 +181,7 @@ def test_markov_stationary_matches_pure_python_replay(spark, tmp_path):
 
 
 def test_sssp_weighted_path_graph(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
-        sssp_weighted_copurchase,
-    )
+    from scats_transis_kinesis_spark.plans.graph import sssp_weighted_copurchase
 
     # Baskets (1995): {1,2} twice, {2,3} once → w(1,2)=1+1e6//2,
     # w(2,3)=1+1e6.  Hub = vertex 2 (degree 2).
@@ -208,7 +200,7 @@ def test_sssp_weighted_path_graph(spark, tmp_path):
 
 
 def test_grid_density_blobs_merge_and_noise(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
+    from scats_transis_kinesis_spark.plans.stats import (
         GRID_OFF,
         GRID_STRIDE,
         grid_density_clusters,
@@ -258,9 +250,7 @@ def test_grid_density_blobs_merge_and_noise(spark, tmp_path):
 def test_mutual_information_dependent_and_independent(spark, tmp_path):
     import math
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
-        mutual_information_lang_source,
-    )
+    from scats_transis_kinesis_spark.plans.stats import mutual_information_lang_source
 
     def docs(cells):
         rows, did = [], 0
@@ -307,9 +297,7 @@ def test_mutual_information_dependent_and_independent(spark, tmp_path):
 
 
 def test_association_triples_hand_metrics(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
-        association_rules_triples,
-    )
+    from scats_transis_kinesis_spark.plans.graph import association_rules_triples
 
     # customers 1-3 buy {1,2,3}; customers 4-5 buy {1,2} → the only
     # frequent triple is (1,2,3) with c_abc=3; c_ab(1,2)=5; c(3)=3;
@@ -344,9 +332,7 @@ def test_association_triples_whale_basket_is_projected_losslessly(
     over ALL baskets, not the projected ones).  The oracle mirror can't
     catch a wrong projection applied to both engines; this hand anchor
     can."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
-        association_rules_triples,
-    )
+    from scats_transis_kinesis_spark.plans.graph import association_rules_triples
 
     orders, lines, ok = [], [], 0
     baskets = [(c, [1, 2, 3]) for c in (1, 2, 3)] + [
@@ -376,7 +362,7 @@ def test_association_triples_whale_basket_is_projected_losslessly(
 
 
 def test_textrank_replays_rounded_recurrence(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries14 import (
+    from scats_transis_kinesis_spark.plans.text import (
         TR_DAMPING,
         TR_HH,
         TR_ITERS,
@@ -434,7 +420,7 @@ def test_textrank_replays_rounded_recurrence(spark, tmp_path):
 def test_burst_margin_flags_the_spike(spark, tmp_path):
     import math
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries14 import (
+    from scats_transis_kinesis_spark.plans.events import (
         BURST_GAMMA,
         BURST_RATE_FACTOR,
         burst_detection_daily,
@@ -491,7 +477,7 @@ def test_burst_margin_flags_the_spike(spark, tmp_path):
 def test_winnowing_shared_run_guarantee_and_disjoint_silence(
     spark, tmp_path
 ):
-    from scats_transis_kinesis_spark.plans.pipeline_queries14 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         WIN_K,
         WIN_W,
         winnowing_dup_pairs,

@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 classification/projection/layout
-batch (``pipeline_queries16``).
+batch (``plans/audits.py``, ``plans/retrieval.py``, ``plans/text.py``).
 
 - Naive Bayes: a two-language corpus where each held-out doc contains
   only its own language's token — smoothing and priors worked by hand,
@@ -23,9 +23,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_naive_bayes_diagonal_on_separable_corpus(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries16 import (
-        naive_bayes_lang_eval,
-    )
+    from scats_transis_kinesis_spark.plans.text import naive_bayes_lang_eval
 
     rows = [
         # train (even ids): 'aa' says only "x", 'bb' says only "y"
@@ -50,7 +48,7 @@ def test_naive_bayes_diagonal_on_separable_corpus(spark, tmp_path):
 
 
 def test_jl_single_coordinate_displacement_is_exact(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries16 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         jl_projection_distortion_audit,
     )
 
@@ -72,9 +70,7 @@ def test_jl_single_coordinate_displacement_is_exact(spark, tmp_path):
 
 
 def test_rle_hand_counted_runs(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries16 import (
-        rle_compression_audit,
-    )
+    from scats_transis_kinesis_spark.plans.audits import rle_compression_audit
 
     d = datetime.datetime
     # One partition ('A','F'), shipdate order d1<d2<d3<d4:

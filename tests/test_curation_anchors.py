@@ -68,10 +68,7 @@ def test_doc_stitch_matches_boundary_replay(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
-        _STITCH_K,
-        doc_stitch_overlap,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import _STITCH_K, doc_stitch_overlap
 
     got = [
         (r["left_doc_id"], r["right_doc_id"], r["overlap_text"])
@@ -113,9 +110,7 @@ def test_curation_log_matches_rule_precedence_replay(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
-        curation_decision_log,
-    )
+    from scats_transis_kinesis_spark.plans.text import curation_decision_log
 
     got = {
         r["doc_id"]: (r["reason"], r["kept"], r["quality"])
@@ -168,7 +163,7 @@ def test_dictionary_entropy_matches_shannon_replay(spark, tmp_path):
         " l_returnflag string, l_linestatus string",
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries25 import (
+    from scats_transis_kinesis_spark.plans.audits import (
         _DICT_COLS,
         dictionary_encoding_audit,
     )
@@ -218,7 +213,7 @@ def test_compaction_plan_matches_cumulative_offset_replay(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
+    from scats_transis_kinesis_spark.plans.audits import (
         _COMPACT_GROUPS,
         _COMPACT_SHARDS,
         compaction_coalesce_plan,

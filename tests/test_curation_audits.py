@@ -35,7 +35,7 @@ def test_dsir_weights_rank_target_language_higher(spark):
     are importance ratios TOWARD the target distribution, so anything
     else means the ratio is inverted or the smoothing swamped the
     signal."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
+    from scats_transis_kinesis_spark.plans.sampling import (
         DSIR_TARGET_LANG,
         dsir_importance_weights,
     )
@@ -66,7 +66,7 @@ def test_dsir_separates_disjoint_vocabularies(spark, tmp_path):
     docs from a disjoint one.  Every target-language doc must get a
     strictly positive weight and every other doc a strictly negative
     one — total separation when the distributions share no tokens."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
+    from scats_transis_kinesis_spark.plans.sampling import (
         DSIR_TARGET_LANG,
         dsir_importance_weights,
     )
@@ -99,7 +99,7 @@ def test_dsir_separates_disjoint_vocabularies(spark, tmp_path):
 
 
 def test_packing_audit_monotone_along_divisor_chain(spark):
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
+    from scats_transis_kinesis_spark.plans.sampling import (
         PACK_CONTEXT_LENGTHS,
         packing_efficiency_audit,
     )
@@ -184,9 +184,7 @@ def test_fertility_at_least_one_token_per_word(spark):
     (letter run / digit run / symbol), so fertility >= 1 by
     construction — a value below 1 means the regex and the word split
     disagree about what text exists."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
-        token_fertility_by_lang,
-    )
+    from scats_transis_kinesis_spark.plans.text import token_fertility_by_lang
 
     for r in token_fertility_by_lang(spark, SF_DIR).collect():
         assert r["fertility"] >= 1.0, r

@@ -81,12 +81,8 @@ def test_decompose_and_strength_match_replay(spark, tmp_path):
     view = [2, 4, 3, 5]
     _write_events(spark, tmp_path, {"click": click, "view": view})
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import (
-        trend_seasonal_decompose,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
-        seasonal_strength_audit,
-    )
+    from scats_transis_kinesis_spark.plans.events import trend_seasonal_decompose
+    from scats_transis_kinesis_spark.plans.events import seasonal_strength_audit
 
     got = {
         (r["event_type"], r["hour"]): (
@@ -158,9 +154,7 @@ def test_degree_assortativity_matches_pearson_replay(spark, tmp_path):
     }
     _write_baskets(spark, tmp_path, baskets)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
-        degree_assortativity_copurchase,
-    )
+    from scats_transis_kinesis_spark.plans.graph import degree_assortativity_copurchase
 
     row = degree_assortativity_copurchase(spark, str(tmp_path)).collect()[0]
 
@@ -205,9 +199,7 @@ def test_local_clustering_matches_triangle_replay(spark, tmp_path):
         baskets[ok] = [8, leaf]
     _write_baskets(spark, tmp_path, baskets)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
-        local_clustering_topk,
-    )
+    from scats_transis_kinesis_spark.plans.graph import local_clustering_topk
 
     got = [
         (r["node"], r["degree"], r["triangles"], r["lcc_micros"])

@@ -28,9 +28,7 @@ def test_bandit_policy_matching_zero_events_reports_null(spark, tmp_sf):
         rows, "user_id long, event_type string, value double"
     ).write.parquet(f"{tmp_sf}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
-        bandit_replay_evaluation,
-    )
+    from scats_transis_kinesis_spark.plans.stats import bandit_replay_evaluation
 
     out = {
         r["policy"]: r
@@ -56,9 +54,7 @@ def test_mase_constant_series_reports_null_not_divzero(spark, tmp_sf):
         f"{tmp_sf}/orders.parquet"
     )
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
-        forecast_backtest_mase,
-    )
+    from scats_transis_kinesis_spark.plans.events import forecast_backtest_mase
 
     out = {r["method"]: r for r in forecast_backtest_mase(spark, tmp_sf).collect()}
     assert set(out) == {"naive", "seasonal_naive_7", "trailing_mean_7"}
@@ -77,9 +73,7 @@ def test_ari_single_cluster_partition_reports_null(spark, tmp_sf):
         "'en' as lang", "text"
     ).write.parquet(f"{tmp_sf}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        lang_id_agreement_ari,
-    )
+    from scats_transis_kinesis_spark.plans.stats import lang_id_agreement_ari
 
     row = lang_id_agreement_ari(spark, tmp_sf).collect()[0]
     assert row["n_docs"] == 12
@@ -106,9 +100,7 @@ def test_pearson_constant_series_reports_null_not_divzero(spark, tmp_sf):
         days, "o_orderdate timestamp, o_totalprice double"
     ).write.parquet(f"{tmp_sf}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries17 import (
-        spearman_daily_kpis,
-    )
+    from scats_transis_kinesis_spark.plans.stats import spearman_daily_kpis
 
     row = spearman_daily_kpis(spark, tmp_sf).collect()[0]
     assert row["n_days"] == 30

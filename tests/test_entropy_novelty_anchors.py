@@ -33,9 +33,7 @@ def test_token_entropy_matches_micro_sum_replay(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries5 import (
-        token_entropy_quality,
-    )
+    from scats_transis_kinesis_spark.plans.text import token_entropy_quality
 
     got = {
         r["doc_id"]: (r["dl"], r["n_distinct_tokens"], r["entropy_micros"])
@@ -70,9 +68,7 @@ def test_ngram_novelty_matches_first_seen_replay(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
-        ngram_novelty_decay,
-    )
+    from scats_transis_kinesis_spark.plans.text import ngram_novelty_decay
 
     got = {
         r["doc_id"]: (r["n_shingles"], r["n_novel"], r["novelty"])
@@ -125,12 +121,8 @@ def test_short_doc_does_not_crash_shingle_consumers(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, texts)
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
-        repeated_span_coverage,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
-        ngram_novelty_decay,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import repeated_span_coverage
+    from scats_transis_kinesis_spark.plans.text import ngram_novelty_decay
 
     nov = {r["doc_id"] for r in ngram_novelty_decay(spark, str(tmp_path)).collect()}
     assert nov == {0}  # only the 4-token doc has 3-gram shingles

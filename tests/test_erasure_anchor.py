@@ -29,9 +29,7 @@ def test_erasure_cascade_counts_and_checksums(spark, tmp_path):
         "l_orderkey long, l_linenumber long",
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries11 import (
-        erasure_cascade_audit,
-    )
+    from scats_transis_kinesis_spark.plans.audits import erasure_cascade_audit
 
     out = {r["tbl"]: r for r in erasure_cascade_audit(spark, str(tmp_path)).collect()}
     assert set(out) == {"customer", "orders", "lineitem"}

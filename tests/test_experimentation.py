@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 experimentation batch
-(``pipeline_queries23``).
+(``plans/stats.py``).
 
 - BH screen: the test recomputes z, the Chebyshev p, ranks and the
   step-up cut in Python integer arithmetic from the same sufficient
@@ -27,9 +27,7 @@ def _write(spark, path, name, rows, schema):
 def test_fdr_bh_matches_python_mirror(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries23 import (
-        fdr_bh_screen,
-    )
+    from scats_transis_kinesis_spark.plans.stats import fdr_bh_screen
 
     # nation 0/1: values near 100; nation 2: way out.  Chebyshev p is
     # conservative (z² is bounded by n when one group drives the
@@ -86,9 +84,7 @@ def test_fdr_bh_matches_python_mirror(spark, tmp_path):
 def test_poisson_bootstrap_constant_table_has_zero_se(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries23 import (
-        poisson_bootstrap_se,
-    )
+    from scats_transis_kinesis_spark.plans.stats import poisson_bootstrap_se
 
     rows = [(i, i, 42.0, date(1995, 1, 1)) for i in range(50)]
     _write(
@@ -104,9 +100,7 @@ def test_poisson_bootstrap_constant_table_has_zero_se(spark, tmp_path):
 
 
 def test_cuped_perfect_covariate_wipes_the_diff(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries23 import (
-        cuped_adjusted_ab,
-    )
+    from scats_transis_kinesis_spark.plans.stats import cuped_adjusted_ab
 
     rows = []
     eid = 0

@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 explainability/statistics batch
-(``pipeline_queries21``).
+(``plans/audits.py``, ``plans/dedup.py``, ``plans/text.py``).
 
 - Decision log: a 4-document corpus exercising every reason branch in
   precedence order, plus the consistency pin — the log's kept rows
@@ -24,9 +24,7 @@ _DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars lo
 
 
 def test_decision_log_reason_precedence(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
-        curation_decision_log,
-    )
+    from scats_transis_kinesis_spark.plans.text import curation_decision_log
 
     good = " ".join(["the a and for in is of on to with"] * 10)  # q = 1.0
     rows = [
@@ -49,12 +47,8 @@ def test_decision_log_reason_precedence(spark, tmp_path):
 
 
 def test_decision_log_kept_rows_equal_clean_pipeline(spark):
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        corpus_clean_pipeline,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
-        curation_decision_log,
-    )
+    from scats_transis_kinesis_spark.plans.text import corpus_clean_pipeline
+    from scats_transis_kinesis_spark.plans.text import curation_decision_log
 
     sf = "/root/testdata/sf0.001"
     kept = {
@@ -67,9 +61,7 @@ def test_decision_log_kept_rows_equal_clean_pipeline(spark):
 
 
 def test_equidepth_exact_decile_boundaries(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
-        equidepth_histogram_stats,
-    )
+    from scats_transis_kinesis_spark.plans.audits import equidepth_histogram_stats
 
     rows = [(i, float(i)) for i in range(1, 11)]
     _write(
@@ -86,9 +78,7 @@ def test_equidepth_exact_decile_boundaries(spark, tmp_path):
 def test_blocking_cost_hand_counts(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
-        blocking_cost_audit,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import blocking_cost_audit
 
     rows = [
         (1, 1, date(1995, 1, 1)),

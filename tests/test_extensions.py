@@ -416,7 +416,7 @@ def test_pack_context_windows_invariants(spark):
     """Property check of the hierarchical-prefix-sum packing: per-doc
     contributions sum to the doc's token count, and every window except
     the last is filled to exactly the budget."""
-    from scats_transis_kinesis_spark.plans.extension_queries2 import (
+    from scats_transis_kinesis_spark.plans.sampling import (
         PACK_BUDGET,
         pack_context_windows,
     )
@@ -612,7 +612,7 @@ def test_stratified_kfold_balance_within_one(spark):
     strata whose size is not divisible by the fold count."""
     from pyspark.sql import functions as F
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries6 import KFOLDS
+    from scats_transis_kinesis_spark.plans.sampling import KFOLDS
 
     rows = [(i, ["aa", "bb", "cc"][i % 3]) for i in range(97)]  # 33/32/32
     df = spark.createDataFrame(rows, "doc_id long, lang string")

@@ -71,9 +71,7 @@ def test_deletion_blocking_is_lossless_for_lev1(spark, tmp_path):
                 expect.add((a[0], b[0]))
     assert expect, "fixture must plant matching pairs"
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries5 import (
-        customer_match_pairs,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import customer_match_pairs
 
     got = {
         (r["id_a"], r["id_b"])

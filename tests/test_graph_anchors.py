@@ -162,9 +162,7 @@ def test_hits_matches_integer_micros_replay(spark, tmp_path):
         lines, "l_orderkey long, l_partkey long"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
-        hits_hubs_authorities,
-    )
+    from scats_transis_kinesis_spark.plans.graph import hits_hubs_authorities
 
     rows = hits_hubs_authorities(spark, str(tmp_path)).collect()
     got_auth = {
@@ -198,9 +196,7 @@ def test_burst_viterbi_matches_minplus_replay(spark, tmp_path):
         rows, "user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries14 import (
-        burst_detection_daily,
-    )
+    from scats_transis_kinesis_spark.plans.events import burst_detection_daily
 
     got = sorted(
         (r["day"], r["burst_margin_micros"], r["is_burst"])
@@ -239,9 +235,7 @@ def test_link_prediction_survives_degree_one_vertex(spark, tmp_path):
         lines, "l_orderkey long, l_partkey long"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        link_prediction_scores,
-    )
+    from scats_transis_kinesis_spark.plans.graph import link_prediction_scores
 
     rows = link_prediction_scores(spark, str(tmp_path)).collect()
     got = [

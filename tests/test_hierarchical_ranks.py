@@ -21,9 +21,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_dictionary_audit_hand_entropy(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries25 import (
-        dictionary_encoding_audit,
-    )
+    from scats_transis_kinesis_spark.plans.audits import dictionary_encoding_audit
 
     rows = [
         (1, 1.0, 0.1, "A", "F"),
@@ -53,9 +51,7 @@ def test_dictionary_audit_hand_entropy(spark, tmp_path):
 
 
 def test_kruskal_hierarchical_ranks_match_python(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
-        kruskal_wallis_priority_spend,
-    )
+    from scats_transis_kinesis_spark.plans.stats import kruskal_wallis_priority_spend
 
     rng = random.Random(7)
     prios = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
@@ -103,9 +99,7 @@ def test_kruskal_hierarchical_ranks_match_python(spark, tmp_path):
 
 
 def test_conformal_kth_across_many_buckets(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries20 import (
-        conformal_coverage_audit,
-    )
+    from scats_transis_kinesis_spark.plans.stats import conformal_coverage_audit
 
     def vec(milli: int) -> list[float]:
         return [milli / 1000.0] + [0.0] * 63
@@ -128,9 +122,7 @@ def test_conformal_kth_across_many_buckets(spark, tmp_path):
 
 
 def test_equidepth_matches_sorted_order_statistics(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
-        equidepth_histogram_stats,
-    )
+    from scats_transis_kinesis_spark.plans.audits import equidepth_histogram_stats
 
     rng = random.Random(11)
     vals = [rng.randrange(0, 5000) for _ in range(2000)]

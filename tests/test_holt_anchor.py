@@ -37,9 +37,7 @@ def test_holt_matches_hand_replayed_integer_recurrence(spark, tmp_path):
         rows, "user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries12 import (
-        holt_linear_daily,
-    )
+    from scats_transis_kinesis_spark.plans.events import holt_linear_daily
 
     out = {r["event_type"]: r for r in holt_linear_daily(spark, str(tmp_path)).collect()}
     assert set(out) == {"click", "view"}

@@ -12,7 +12,7 @@ import datetime
 
 
 def test_incremental_merge_equals_full_recompute(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.relational import (
         INCR_SPLIT,
         incremental_agg_maintenance,
     )
@@ -48,10 +48,7 @@ def test_incremental_merge_equals_full_recompute(spark, tmp_path):
 
 
 def test_oov_rate_vocab_boundary_by_hand(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
-        VOCAB_MIN_COUNT,
-        vocab_oov_rate,
-    )
+    from scats_transis_kinesis_spark.plans.text import VOCAB_MIN_COUNT, vocab_oov_rate
 
     # 'common' appears exactly VOCAB_MIN_COUNT times (in-vocab at the
     # boundary); 'nearly' one fewer (OOV); 'rare' once (OOV).

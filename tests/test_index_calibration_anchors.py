@@ -43,10 +43,8 @@ def _quality(text: str) -> float:
 
 
 def test_inverted_index_matches_postings_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
-        HH_THRESHOLD,
-        inverted_index_postings,
-    )
+    from scats_transis_kinesis_spark.plans.common import HH_THRESHOLD
+    from scats_transis_kinesis_spark.plans.retrieval import inverted_index_postings
 
     # 'hot' clears the 200-occurrence floor ACROSS docs, repeated many
     # times inside each doc (distinct postings must dedup); 'warm'
@@ -108,9 +106,7 @@ def test_quality_calibration_keeps_exact_boundary(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries4 import (
-        quality_calibrate_by_source,
-    )
+    from scats_transis_kinesis_spark.plans.text import quality_calibrate_by_source
 
     got = {
         r["doc_id"]: (r["source"], r["quality"], r["source_pctile"], r["keep"])

@@ -44,9 +44,7 @@ def _write_documents(spark, path, cells):
 def test_chi2_zero_on_exactly_independent_table(spark, tmp_path):
     # Cells chosen so every observed count equals its expectation
     # (o = row_total * col_total / n): 4/2 vs 8/4 with margins 6·12, 12·6.
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
-        chi2_lang_source_independence,
-    )
+    from scats_transis_kinesis_spark.plans.stats import chi2_lang_source_independence
 
     _write_documents(
         spark,
@@ -61,9 +59,7 @@ def test_chi2_zero_on_exactly_independent_table(spark, tmp_path):
 
 def test_chi2_saturates_on_perfect_association(spark, tmp_path):
     # Diagonal-only table: chi2 = n·min(r-1, c-1) exactly, Cramér's V = 1.
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
-        chi2_lang_source_independence,
-    )
+    from scats_transis_kinesis_spark.plans.stats import chi2_lang_source_independence
 
     _write_documents(spark, str(tmp_path), {("a", "x"): 5, ("b", "y"): 5})
     row = chi2_lang_source_independence(spark, str(tmp_path)).collect()[0]
@@ -76,9 +72,7 @@ def test_chi2_saturates_on_perfect_association(spark, tmp_path):
 
 
 def test_gains_curve_monotone_and_consistent(spark):
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
-        quality_gains_by_band,
-    )
+    from scats_transis_kinesis_spark.plans.stats import quality_gains_by_band
 
     rows = sorted(
         quality_gains_by_band(spark, SF_DIR).collect(),
@@ -104,9 +98,7 @@ def test_gains_curve_monotone_and_consistent(spark):
 
 
 def test_jackknife_se_zero_on_constant_column(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
-        jackknife_ci_order_total,
-    )
+    from scats_transis_kinesis_spark.plans.stats import jackknife_ci_order_total
 
     spark.createDataFrame(
         [(i, 250.0) for i in range(400)], "o_orderkey long, o_totalprice double"
@@ -124,9 +116,7 @@ def test_jackknife_variance_tracks_srs_closed_form(spark):
     # For the sample mean, the delete-one-block jackknife estimates the
     # same quantity as the closed-form s²/n; with 32 hash blocks over
     # 1.5k orders the two must agree well within a factor of two.
-    from scats_transis_kinesis_spark.plans.pipeline_queries8 import (
-        jackknife_ci_order_total,
-    )
+    from scats_transis_kinesis_spark.plans.stats import jackknife_ci_order_total
     from scats_transis_kinesis_spark.sources.loaders import load_table
 
     row = jackknife_ci_order_total(spark, SF_DIR).collect()[0]

@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 inference/trend/graph-structure
-batch (``pipeline_queries15``).
+batch (``plans/events.py``, ``plans/graph.py``, ``plans/stats.py``).
 
 The driver's hash gate proves Spark and DuckDB agree; these pin that
 the numbers MEAN what the docstrings claim, on constructed inputs with
@@ -47,9 +47,7 @@ def _order(key, price, date, prio):
 
 
 def test_welch_t_hand_computed(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
-        welch_t_test_orders,
-    )
+    from scats_transis_kinesis_spark.plans.stats import welch_t_test_orders
 
     rows = [
         _order(1, 10, _d(1995, 1, 1), "1-URGENT"),
@@ -74,9 +72,7 @@ def test_welch_t_hand_computed(spark, tmp_path):
 
 
 def test_theil_sen_ignores_the_outlier_day(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
-        theil_sen_trend_daily,
-    )
+    from scats_transis_kinesis_spark.plans.events import theil_sen_trend_daily
 
     # One order per day: y = 2d exactly, except day 3 explodes to 100.
     ys = {0: 0, 1: 2, 2: 4, 3: 100, 4: 8}
@@ -94,9 +90,7 @@ def test_theil_sen_ignores_the_outlier_day(spark, tmp_path):
 
 
 def test_mase_periodic_series_snaive_wins(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
-        forecast_backtest_mase,
-    )
+    from scats_transis_kinesis_spark.plans.events import forecast_backtest_mase
 
     # y_d = (d mod 7) + 1: perfectly weekly-periodic daily ORDER COUNTS
     # for 21 days (the query counts orders per day, so day d gets y_d
@@ -124,9 +118,7 @@ def test_mase_periodic_series_snaive_wins(spark, tmp_path):
 
 
 def test_assortativity_star_is_minus_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
-        degree_assortativity_copurchase,
-    )
+    from scats_transis_kinesis_spark.plans.graph import degree_assortativity_copurchase
 
     # Three 1995 baskets {1,2}, {1,3}, {1,4} → the star K_{1,3}.
     orders = [_order(k, 1, _d(1995, 1, k), "1-URGENT") for k in (1, 2, 3)]
@@ -139,9 +131,7 @@ def test_assortativity_star_is_minus_one(spark, tmp_path):
 
 
 def test_local_clustering_k6_is_exactly_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
-        local_clustering_topk,
-    )
+    from scats_transis_kinesis_spark.plans.graph import local_clustering_topk
 
     # One basket with six parts → K6: deg 5, C(5,2) = 10 triangles per
     # vertex, coefficient 2·10/(5·4) = 1 exactly.
@@ -158,9 +148,7 @@ def test_local_clustering_k6_is_exactly_one(spark, tmp_path):
 
 
 def test_regex_funnel_hand_sessions(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries15 import (
-        event_regex_funnel,
-    )
+    from scats_transis_kinesis_spark.plans.events import event_regex_funnel
 
     t0 = _d(2024, 1, 1)
 

@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 linear-algebra/planning batch
-(``pipeline_queries18``).
+(``plans/audits.py``, ``plans/dedup.py``, ``plans/retrieval.py``).
 
 - PCA: a cloud with ALL variance on axis 1 — the covariance is
   diag(1e9 milli-units, 0, …), the power iteration locks onto e1 in
@@ -25,9 +25,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_pca_axis_aligned_cloud(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
-        pca_top_component,
-    )
+    from scats_transis_kinesis_spark.plans.retrieval import pca_top_component
 
     plus = [1.0] + [0.0] * 63
     minus = [-1.0] + [0.0] * 63
@@ -47,9 +45,7 @@ def test_pca_axis_aligned_cloud(spark, tmp_path):
 
 
 def test_doc_stitch_finds_split_pair_and_skips_short_docs(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
-        doc_stitch_overlap,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import doc_stitch_overlap
 
     rows = [
         (1, "a b c d e", "en", "s", 9),
@@ -70,9 +66,7 @@ def test_doc_stitch_finds_split_pair_and_skips_short_docs(spark, tmp_path):
 def test_bloom_textbook_sizing(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
-        bloom_filter_sizing,
-    )
+    from scats_transis_kinesis_spark.plans.audits import bloom_filter_sizing
 
     orders = [(i, i, date(1995, 1, 1)) for i in range(1000)]
     _write(
@@ -98,7 +92,7 @@ def test_bloom_textbook_sizing(spark, tmp_path):
 
 
 def test_lsh_s_curve_matches_python_ieee_chain(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         _LSH_COMBOS,
         _LSH_SIMS,
         lsh_parameter_planner,

@@ -32,7 +32,7 @@ def _predicted_recall(c: float, bits: int, bands: int) -> float:
 
 
 def test_sign_lsh_candidate_recall_matches_theory(spark):
-    from scats_transis_kinesis_spark.plans.coverage_queries import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         LSH_BANDS,
         LSH_BITS,
         _sign_bucket,

@@ -20,9 +20,7 @@ def test_mrr_first_hit_positions_by_hand(spark, tmp_path):
         rows, "doc_id long, source string, lang string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries12 import (
-        mrr_quality_by_source,
-    )
+    from scats_transis_kinesis_spark.plans.stats import mrr_quality_by_source
 
     r = mrr_quality_by_source(spark, str(tmp_path)).collect()[0]
     assert r["n_queries"] == 3

@@ -32,7 +32,7 @@ def test_fuzzy_match_blocked_fails_on_ids_above_2_32(spark, tmp_path):
     """Packed as ``(a << 32) | b`` without a guard, the pair
     (1, 2^32 + 2) became (1, 2): the match vanished, or named the wrong
     customer, with no error."""
-    from scats_transis_kinesis_spark.plans.coverage_queries import fuzzy_match_blocked
+    from scats_transis_kinesis_spark.plans.dedup import fuzzy_match_blocked
 
     customers = [(1, "abcd"), (2, "zzzz"), ((1 << 32) + 2, "abce")]
     spark.createDataFrame(customers, "c_custkey long, c_name string").write.parquet(

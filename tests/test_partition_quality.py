@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 partition-quality/optimizer batch
-(``pipeline_queries24``).
+(``plans/audits.py``, ``plans/graph.py``, ``plans/retrieval.py``).
 
 - Modularity: two brand cliques joined by one cross edge — m = 3,
   intra = 2, degree sums 3/3 → Q = 2/3 − 18/36 = 0.166667 by hand.
@@ -21,9 +21,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_modularity_two_cliques_one_bridge(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries24 import (
-        modularity_brand_copurchase,
-    )
+    from scats_transis_kinesis_spark.plans.graph import modularity_brand_copurchase
 
     _write(
         spark, tmp_path, "orders",
@@ -44,7 +42,7 @@ def test_modularity_two_cliques_one_bridge(spark, tmp_path):
 
 
 def test_selectivity_matches_python_mirror(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries24 import (
+    from scats_transis_kinesis_spark.plans.audits import (
         _SEL_BANDS,
         _SEL_PREDICATES,
         selectivity_estimate_audit,
@@ -81,9 +79,7 @@ def test_selectivity_matches_python_mirror(spark, tmp_path):
 
 
 def test_nearest_centroid_separable_clusters(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries24 import (
-        nearest_centroid_accuracy,
-    )
+    from scats_transis_kinesis_spark.plans.retrieval import nearest_centroid_accuracy
 
     plus = [1.0] + [0.0] * 63
     minus = [-1.0] + [0.0] * 63

@@ -24,9 +24,7 @@ def test_phrase_search_requires_adjacency(spark, tmp_path):
         f"{tmp_path}/documents.parquet"
     )
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
-        phrase_search_positional,
-    )
+    from scats_transis_kinesis_spark.plans.retrieval import phrase_search_positional
 
     out = {
         r["doc_id"]: r["n_matches"]
@@ -46,9 +44,7 @@ def test_bpe_first_merges_by_hand(spark, tmp_path):
         [(1, docs[0].strip())], "doc_id long, text string"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
-        bpe_merge_induction,
-    )
+    from scats_transis_kinesis_spark.plans.text import bpe_merge_induction
 
     out = sorted(
         (

@@ -28,7 +28,7 @@ def test_bloom_sizing_matches_closed_form(spark, tmp_path):
         lines, "l_orderkey long, l_partkey long, l_suppkey long"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
+    from scats_transis_kinesis_spark.plans.audits import (
         _BLOOM_FPPS,
         bloom_filter_sizing,
     )
@@ -53,7 +53,7 @@ def test_bloom_sizing_matches_closed_form(spark, tmp_path):
 
 
 def test_lsh_planner_matches_s_curve(spark):
-    from scats_transis_kinesis_spark.plans.pipeline_queries18 import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         _LSH_COMBOS,
         _LSH_SIMS,
         lsh_parameter_planner,
@@ -104,7 +104,7 @@ def test_neyman_allocation_matches_replay(spark, tmp_path):
         rows, "doc_id long, lang string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
+    from scats_transis_kinesis_spark.plans.sampling import (
         _NEYMAN_BUDGET,
         neyman_allocation_plan,
     )
@@ -145,9 +145,7 @@ def test_equidepth_deciles_match_exact_rank_replay(spark, tmp_path):
         rows, "l_orderkey long, l_extendedprice double"
     ).write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
-        equidepth_histogram_stats,
-    )
+    from scats_transis_kinesis_spark.plans.audits import equidepth_histogram_stats
 
     got = [
         (r["decile"], r["k_rank"], r["boundary_cents"])

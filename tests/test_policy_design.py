@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 policy/design batch
-(``pipeline_queries22``).
+(``plans/audits.py``, ``plans/sampling.py``, ``plans/stats.py``).
 
 - Bandit replay: the logged baseline matches every event (mean = the
   corpus mean), the constant-purchase policy matches exactly the
@@ -25,9 +25,7 @@ def _write(spark, path, name, rows, schema):
 def test_bandit_replay_matching(spark, tmp_path):
     import datetime
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
-        bandit_replay_evaluation,
-    )
+    from scats_transis_kinesis_spark.plans.stats import bandit_replay_evaluation
 
     t0 = datetime.datetime(2024, 1, 1)
     rows = [
@@ -55,7 +53,7 @@ def test_bandit_replay_matching(spark, tmp_path):
 
 
 def test_feature_hashing_matches_python_md5(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
+    from scats_transis_kinesis_spark.plans.audits import (
         _HASH_DIMS,
         feature_hashing_collision_audit,
     )
@@ -85,9 +83,7 @@ def test_feature_hashing_matches_python_md5(spark, tmp_path):
 
 
 def test_neyman_allocation_integer_arithmetic(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries22 import (
-        neyman_allocation_plan,
-    )
+    from scats_transis_kinesis_spark.plans.sampling import neyman_allocation_plan
 
     rows = [
         (1, "x", "aa", "s", 1),

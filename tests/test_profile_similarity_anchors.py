@@ -19,7 +19,7 @@ import pytest
 
 
 def test_timeseries_similarity_matches_gapfilled_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         TS_QUERY_USER,
         timeseries_similarity_topk,
     )
@@ -83,9 +83,7 @@ def test_sentiment_counts_distinct_lexicon_hits(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.extension_queries2 import (
-        text_sentiment_lexicon,
-    )
+    from scats_transis_kinesis_spark.plans.text import text_sentiment_lexicon
 
     got = {
         r["doc_id"]: (r["n_positive"], r["n_negative"], r["sentiment"])

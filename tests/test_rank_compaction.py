@@ -1,5 +1,5 @@
 """Semantic anchors for the round-5 rank/compaction/decomposition batch
-(``pipeline_queries19``).
+(``plans/audits.py``, ``plans/events.py``, ``plans/stats.py``).
 
 - Kruskal–Wallis: the textbook 10-value no-tie case — ranks 1..10
   split 2-per-group in order gives H = (12/110)·382.5 − 33 =
@@ -26,9 +26,7 @@ def _write(spark, path, name, rows, schema):
 def test_kruskal_wallis_textbook_case(spark, tmp_path):
     from datetime import date
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
-        kruskal_wallis_priority_spend,
-    )
+    from scats_transis_kinesis_spark.plans.stats import kruskal_wallis_priority_spend
 
     prios = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
     rows = []
@@ -54,9 +52,7 @@ _DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars lo
 
 
 def test_compaction_single_doc_plan(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
-        compaction_coalesce_plan,
-    )
+    from scats_transis_kinesis_spark.plans.audits import compaction_coalesce_plan
 
     _write(spark, tmp_path, "documents", [(1, "abcdefgh", "en", "s", 8)], _DOCS_SCHEMA)
     [r] = compaction_coalesce_plan(spark, str(tmp_path)).collect()
@@ -66,9 +62,7 @@ def test_compaction_single_doc_plan(spark, tmp_path):
 
 
 def test_compaction_conservation_and_contiguity(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
-        compaction_coalesce_plan,
-    )
+    from scats_transis_kinesis_spark.plans.audits import compaction_coalesce_plan
 
     rows = [(i, "x" * (i % 7 + 1), "en", "s", i % 7 + 1) for i in range(500)]
     _write(spark, tmp_path, "documents", rows, _DOCS_SCHEMA)
@@ -89,9 +83,7 @@ def test_compaction_conservation_and_contiguity(spark, tmp_path):
 
 
 def test_seasonal_strength_pure_cycle_scores_high(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries19 import (
-        seasonal_strength_audit,
-    )
+    from scats_transis_kinesis_spark.plans.events import seasonal_strength_audit
 
     rows = []
     eid = 0

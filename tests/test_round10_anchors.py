@@ -184,13 +184,13 @@ def _replay_audit(f64, cents, qids, probes, k):
 
 
 def test_ivf_kmeans_recall_audit_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.common import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVF_CENTROIDS,
         IVF_K,
         IVF_PROBES,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVFK_QUERY_IDS,
         ivf_kmeans_recall_audit,
     )
@@ -236,17 +236,10 @@ def test_ivf_kmeans_recall_audit_replay(spark, tmp_path):
 
 
 def test_sim_topk_ivf_kmeans_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.extension_queries import (
-        _SIM_QUERY_IDS,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
-        IVF_CENTROIDS,
-        IVF_K,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
-        sim_topk_ivf_kmeans,
-    )
+    from scats_transis_kinesis_spark.plans.retrieval import _SIM_QUERY_IDS
+    from scats_transis_kinesis_spark.plans.common import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import IVF_CENTROIDS, IVF_K
+    from scats_transis_kinesis_spark.plans.retrieval import sim_topk_ivf_kmeans
 
     vecs = _planted_vecs()
     _write_embeddings(spark, tmp_path, vecs)
@@ -276,13 +269,9 @@ def test_sim_topk_ivf_kmeans_replay(spark, tmp_path):
 def test_ivf_quantizer_balance_audit_replay(spark, tmp_path):
     from collections import Counter
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
-        IVF_CENTROIDS,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
-        ivf_quantizer_balance_audit,
-    )
+    from scats_transis_kinesis_spark.plans.common import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import IVF_CENTROIDS
+    from scats_transis_kinesis_spark.plans.retrieval import ivf_quantizer_balance_audit
 
     vecs = _planted_vecs()
     _write_embeddings(spark, tmp_path, vecs)
@@ -340,10 +329,8 @@ _SPAN_DOCS = [
 
 
 def test_stream_matches_batch_twin_and_decision_points(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
-        incremental_span_coverage,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
+    from scats_transis_kinesis_spark.plans.dedup import incremental_span_coverage
+    from scats_transis_kinesis_spark.plans.dedup import (
         incremental_span_coverage_stream,
     )
 
@@ -380,9 +367,7 @@ def test_stream_result_is_batch_count_invariant(spark, tmp_path):
     therefore the coverage report — cannot depend on how the delta was
     split.  (n=1 is the single-batch degenerate case; n=4 splits the 4
     delta docs as finely as the file source can.)"""
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
-        _span_coverage_stream,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import _span_coverage_stream
 
     _write_documents(
         spark,

@@ -56,9 +56,7 @@ def _write_events(spark, path, rows):
 
 
 def test_regex_long_words_boundary_case_and_greed(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        regex_extract_long_words,
-    )
+    from scats_transis_kinesis_spark.plans.text import regex_extract_long_words
 
     docs = [
         # exactly-5 kept, 4 dropped, uppercase splits the run (Abcdef
@@ -85,9 +83,7 @@ def test_regex_long_words_boundary_case_and_greed(spark, tmp_path):
 
 
 def test_resample_locf_null_lead_carry_and_override(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        resample_locf_fill,
-    )
+    from scats_transis_kinesis_spark.plans.events import resample_locf_fill
 
     T = lambda mo, d, h=0: datetime(2024, mo, d, h)  # noqa: E731
     _write_events(
@@ -130,9 +126,7 @@ def test_try_cast_integer_literal_semantics_match_duckdb(spark, tmp_path):
     import duckdb
 
     from scats_transis_kinesis_spark.plans.registry import REGISTRY
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        try_cast_dirty_data,
-    )
+    from scats_transis_kinesis_spark.plans.relational import try_cast_dirty_data
 
     leads = [
         "3.5", "3.0", "1e2",          # DuckDB-coercible, Spark-NULL
@@ -171,7 +165,7 @@ def test_try_cast_integer_literal_semantics_match_duckdb(spark, tmp_path):
 
 
 def test_ngram_contamination_boundary_and_distinct_counting(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries import (
+    from scats_transis_kinesis_spark.plans.dedup import (
         CONTAM_BENCH_DOCS,
         CONTAM_NGRAM,
         ngram_contamination_check,
@@ -221,9 +215,7 @@ def test_ngram_contamination_boundary_and_distinct_counting(spark, tmp_path):
 
 
 def test_dq_constraint_audit_dup_arithmetic_and_null_fk(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
-        dq_constraint_audit,
-    )
+    from scats_transis_kinesis_spark.plans.audits import dq_constraint_audit
 
     D = lambda d: datetime(2024, 1, d)  # noqa: E731
     spark.createDataFrame(
@@ -267,7 +259,7 @@ def test_dq_constraint_audit_dup_arithmetic_and_null_fk(spark, tmp_path):
 
 
 def test_curriculum_mixture_cap_binding_and_hash_membership(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
+    from scats_transis_kinesis_spark.plans.sampling import (
         MIXTURE_WEIGHTS,
         curriculum_mixture_sample,
     )

@@ -57,9 +57,7 @@ M = 1_000_000
 
 
 def test_kmeans_ctes_default_chain_is_byte_identical():
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
-        _kmeans_ctes,
-    )
+    from scats_transis_kinesis_spark.plans.common import _kmeans_ctes
 
     # Hashes recorded BEFORE the prefix/source parameters were added
     # (round-10 extended session) — the default chain feeds the
@@ -75,9 +73,7 @@ def test_kmeans_ctes_default_chain_is_byte_identical():
 
 
 def test_kmeans_ctes_prefixed_chain_renames_every_cte():
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
-        _kmeans_ctes,
-    )
+    from scats_transis_kinesis_spark.plans.common import _kmeans_ctes
 
     ctes, last = _kmeans_ctes(
         k=4, iters=2, final_update=True, prefix="h",
@@ -113,9 +109,7 @@ def _h64(text: str) -> int:
 
 
 def test_dedup_stream_decision_points(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
-        incremental_exact_dedup_stream,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import incremental_exact_dedup_stream
 
     _write_documents(
         spark,
@@ -146,9 +140,7 @@ def test_dedup_stream_is_batch_count_invariant(spark, tmp_path):
     """Sweep the micro-batch count 1/2/4: per-hash (min id, count)
     partials over disjoint doc sets merge by (min, sum), so the state
     — and the report — cannot depend on how the delta was split."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
-        _dedup_state_stream,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import _dedup_state_stream
 
     _write_documents(
         spark,
@@ -222,18 +214,14 @@ def _replay_pair_agreement(pa, pb):
 
 
 def test_ivf_seeding_recall_audit_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.common import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVF_CENTROIDS,
         IVF_K,
         IVF_PROBES,
     )
-    from scats_transis_kinesis_spark.plans.pipeline_queries29 import (
-        IVFK_QUERY_IDS,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
-        ivf_seeding_recall_audit,
-    )
+    from scats_transis_kinesis_spark.plans.retrieval import IVFK_QUERY_IDS
+    from scats_transis_kinesis_spark.plans.retrieval import ivf_seeding_recall_audit
 
     vecs = _planted_vecs()
     _write_embeddings(spark, tmp_path, vecs)
@@ -276,11 +264,9 @@ def test_ivf_seeding_recall_audit_replay(spark, tmp_path):
 
 
 def test_ivf_quantizer_stability_audit_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import KM_ITERS
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
-        IVF_CENTROIDS,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
+    from scats_transis_kinesis_spark.plans.common import KM_ITERS
+    from scats_transis_kinesis_spark.plans.retrieval import IVF_CENTROIDS
+    from scats_transis_kinesis_spark.plans.retrieval import (
         ivf_quantizer_stability_audit,
     )
 
@@ -319,7 +305,7 @@ def test_stability_audit_identical_trainings_report_exact_identity(
     all-even ids — the half subset IS the corpus, both trainings
     coincide, and the audit must report rand = 1e6 / ari = 1.0 with
     matched == full_pairs == half_pairs."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries30 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         ivf_quantizer_stability_audit,
     )
 

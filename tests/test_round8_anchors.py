@@ -90,9 +90,7 @@ def _write_embeddings(spark, tmp_path):
 
 def test_lsh_recall_banding_replay(spark, tmp_path):
     _write_embeddings(spark, tmp_path)
-    from scats_transis_kinesis_spark.plans.pipeline_queries26 import (
-        dedup_embedding_lsh_recall,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import dedup_embedding_lsh_recall
 
     vecs = {i: _vec(f) for i, f in _FLIPS.items()}
     _, want = _replay_lsh(vecs, bands=8, bits=4)
@@ -111,9 +109,7 @@ def test_lsh_recall_banding_replay(spark, tmp_path):
 
 def test_lsh_banding_tradeoff_replay(spark, tmp_path):
     _write_embeddings(spark, tmp_path)
-    from scats_transis_kinesis_spark.plans.pipeline_queries26 import (
-        lsh_banding_tradeoff_audit,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import lsh_banding_tradeoff_audit
 
     vecs = {i: _vec(f) for i, f in _FLIPS.items()}
     p_cand, p_ver = _replay_lsh(vecs, bands=4, bits=8)
@@ -201,12 +197,8 @@ def test_repeated_span_islands_replay(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
-        repeated_span_coverage,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries26 import (
-        repeated_span_islands,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import repeated_span_coverage
+    from scats_transis_kinesis_spark.plans.dedup import repeated_span_islands
 
     want = _replay_islands(docs)
     assert want == {1: (1, 10, 10), 2: (2, 10, 5)}  # hand-checked

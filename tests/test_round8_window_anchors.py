@@ -64,9 +64,7 @@ def test_asof_equal_ts_match_and_no_prior_click(spark, tmp_path):
         # u3: never clicked
         (8, T(12), 3, "purchase", 0.0, ""),      # -> NULL
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        asof_purchase_last_click,
-    )
+    from scats_transis_kinesis_spark.plans.relational import asof_purchase_last_click
 
     got = {
         r["event_id"]: r["asof_click_epoch"]
@@ -98,10 +96,12 @@ def test_null_key_join_family(spark, tmp_path):
         (12, 2, "F", 100.0, T(1), "1-URGENT"),
         (13, None, "F", 50.0, T(1), "1-URGENT"),    # orphan order
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        join_anti, join_outer_counts, join_semi,
+    from scats_transis_kinesis_spark.plans.relational import (
+        join_anti,
+        join_outer_counts,
+        join_semi,
     )
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         q13_order_count_distribution,
     )
 
@@ -162,8 +162,9 @@ def test_rollup_cube_data_null_vs_subtotal_null(spark, tmp_path):
     _write_orders(spark, tmp_path, [
         (i, 1, s, 10.0, T(1), p) for i, (s, p) in enumerate(rows)
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        cube_status_priority, rollup_status_priority,
+    from scats_transis_kinesis_spark.plans.relational import (
+        cube_status_priority,
+        rollup_status_priority,
     )
 
     got_rollup = sorted(
@@ -204,9 +205,7 @@ def test_topk_per_group_tie_break(spark, tmp_path):
         (9, 2, "F", 50.0, T(1), "1-URGENT"),
         (8, 2, "F", 60.0, T(1), "1-URGENT"),    # under k rows: all kept
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        topk_orders_per_customer,
-    )
+    from scats_transis_kinesis_spark.plans.relational import topk_orders_per_customer
 
     got = sorted(
         (r["o_custkey"], r["o_orderkey"])
@@ -232,9 +231,7 @@ def test_salted_join_matches_plain_join(spark, tmp_path):
         (2, "c2", 8, 0.0, "A"),
         (3, "c3", 8, 0.0, "A"),   # no events
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries2 import (
-        salted_join_skew,
-    )
+    from scats_transis_kinesis_spark.plans.relational import salted_join_skew
 
     got = {
         r["c_nationkey"]: (r["n_events"], r["total_value"])
@@ -259,9 +256,7 @@ def test_histogram_half_open_bucket_edges(spark, tmp_path):
     _write_orders(spark, tmp_path, [
         (i, 1, "F", p, T(1), "1-URGENT") for i, p in enumerate(prices)
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
-        histogram_order_totals,
-    )
+    from scats_transis_kinesis_spark.plans.stats import histogram_order_totals
 
     got = {
         r["bucket"]: (r["n_orders"], r["lo"], r["hi"])
@@ -285,9 +280,7 @@ def test_window_frames_and_ntile_remainder(spark, tmp_path):
         (4, 7, "F", 48.0, T(3), "1-URGENT"),
         (5, 7, "F", 60.0, T(4), "1-URGENT"),
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
-        window_frames_running,
-    )
+    from scats_transis_kinesis_spark.plans.relational import window_frames_running
 
     got = {
         r["o_orderkey"]: (r["running_total"], r["moving_avg_3"], r["quartile"])
@@ -314,9 +307,7 @@ def test_pivot_zero_fill_and_unpinned_type(spark, tmp_path):
         (4, T(1), 2, "view", 0.0, ""),
         (5, T(1), 3, "login", 0.0, ""),   # not a pivoted type
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        pivot_event_counts,
-    )
+    from scats_transis_kinesis_spark.plans.relational import pivot_event_counts
 
     got = {
         r["user_id"]: (r["click"], r["view"], r["purchase"], r["signup"], r["error"])
@@ -338,9 +329,7 @@ def test_correlated_subquery_single_order_never_qualifies(spark, tmp_path):
         (2, 2, "F", 100.0, T(1), "1-URGENT"),
         (3, 2, "F", 400.0, T(1), "1-URGENT"),     # 400 > 375: qualifies
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries2 import (
-        correlated_subquery_orders,
-    )
+    from scats_transis_kinesis_spark.plans.relational import correlated_subquery_orders
 
     got = {
         r["o_orderkey"]: r["total_price"]

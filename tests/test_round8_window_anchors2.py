@@ -73,9 +73,7 @@ def test_q2_min_per_group_keeps_ties(spark, tmp_path):
         (4, "s4", 1, -2.0),   # negative minimum, sole supplier
     ])
     _nation(spark, tmp_path, [(0, "N0", 0), (1, "N1", 0)])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
-        q2_min_per_group_suppliers,
-    )
+    from scats_transis_kinesis_spark.plans.relational import q2_min_per_group_suppliers
 
     got = sorted(
         (r["s_suppkey"], r["n_name"], r["s_acctbal"])
@@ -97,7 +95,7 @@ def test_q4_semi_multiplicity_and_strict_after(spark, tmp_path):
         (2, 1, 1, 1, 1.0, 1.0, T(5)),   # == orderdate, strict > fails
         (3, 1, 1, 1, 1.0, 1.0, T(9)),
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import q4_priority_exists
+    from scats_transis_kinesis_spark.plans.relational import q4_priority_exists
 
     got = {
         r["o_orderpriority"]: r["n_orders"]
@@ -126,9 +124,7 @@ def test_q17_threshold_over_all_part_lines_strict(spark, tmp_path):
         # part 2 (Brand#2): tiny qty but wrong brand
         (6, 2, 1, 1, 0.5, 99.0, T(1)),
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
-        q17_small_quantity_revenue,
-    )
+    from scats_transis_kinesis_spark.plans.relational import q17_small_quantity_revenue
 
     [row] = q17_small_quantity_revenue(spark, str(tmp_path)).collect()
     assert row["avg_yearly"] == 10.0  # 70.0 / 7
@@ -146,9 +142,7 @@ def test_q18_having_strictly_greater(spark, tmp_path):
         (2, 1, 1, 1, 250.0, 1.0, T(1)),
         (3, 1, 1, 1, 100.0, 1.0, T(1)),
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries2 import (
-        q18_large_volume_orders,
-    )
+    from scats_transis_kinesis_spark.plans.relational import q18_large_volume_orders
 
     got = [
         (r["o_orderkey"], r["total_qty"])
@@ -172,7 +166,7 @@ def test_q19_disjunction_inclusive_arms(spark, tmp_path):
         (5, 4, 1, 1, 5.0, 99.0, T(1)),    # wrong brand, any qty: out
         (6, 3, 1, 1, 19.0, 99.0, T(1)),   # Brand#3 below bound: out
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         q19_disjunctive_predicate_join,
     )
 
@@ -199,7 +193,7 @@ def test_q21_last_shipper_equal_date_both_win(spark, tmp_path):
         (4, 1, 1, 1, 1.0, 1.0, T(9)),   # D order status 'O'
         (4, 1, 2, 2, 1.0, 1.0, T(2)),
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         q21_waiting_orders_multi_exists,
     )
 
@@ -224,7 +218,7 @@ def test_q22_positive_only_average_and_urgent_exclusion(spark, tmp_path):
         (1, 1, "F", 1.0, T(1), "1-URGENT"),
         (2, 3, "F", 1.0, T(1), "3-MEDIUM"),
     ])
-    from scats_transis_kinesis_spark.plans.tpch_queries import (
+    from scats_transis_kinesis_spark.plans.relational import (
         q22_idle_customers_not_exists,
     )
 
@@ -245,9 +239,7 @@ def test_union_distinct_across_and_within_branches(spark, tmp_path):
         (5, T(1), 2, "purchase", 0.0, ""), # within-branch duplicate
     ], "event_id long, ts timestamp, user_id long, event_type string, "
        "value double, props string")
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        union_type_pairs,
-    )
+    from scats_transis_kinesis_spark.plans.relational import union_type_pairs
 
     got = sorted(
         (r["user_id"], r["kind"])
@@ -262,9 +254,7 @@ def test_unpivot_keeps_zero_metrics(spark, tmp_path):
         (2, T(1), 1, "view", 0.0, ""),
     ], "event_id long, ts timestamp, user_id long, event_type string, "
        "value double, props string")
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        unpivot_user_metrics,
-    )
+    from scats_transis_kinesis_spark.plans.relational import unpivot_user_metrics
 
     got = sorted(
         (r["metric"], r["value"])
@@ -280,9 +270,7 @@ def test_orderby_limit_tie_cut_at_boundary(spark, tmp_path):
     _orders(spark, tmp_path, [
         (k, 1, "F", 777.0, T(1), "x") for k in range(1, 26)
     ])
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        orderby_limit_global,
-    )
+    from scats_transis_kinesis_spark.plans.relational import orderby_limit_global
 
     got = [r["o_orderkey"] for r in orderby_limit_global(spark, str(tmp_path)).collect()]
     assert got == list(range(1, 21))

@@ -62,9 +62,7 @@ def test_temperature_sampling_replay(spark, tmp_path):
             rows.append((i, text, lang, "web", len(text)))
             i += 1
     _write_documents(spark, tmp_path, rows)
-    from scats_transis_kinesis_spark.plans.pipeline_queries27 import (
-        temperature_sampling_plan,
-    )
+    from scats_transis_kinesis_spark.plans.sampling import temperature_sampling_plan
 
     lang_tokens = {g: sum(c) for g, c in _LANG_DOCS.items()}
     want = _replay_temperature(lang_tokens)
@@ -134,9 +132,7 @@ def test_greedy_source_coverage_replay(spark, tmp_path):
             rows.append((i, text, "en", src, len(text)))
             i += 1
     _write_documents(spark, tmp_path, rows)
-    from scats_transis_kinesis_spark.plans.pipeline_queries27 import (
-        greedy_source_coverage,
-    )
+    from scats_transis_kinesis_spark.plans.sampling import greedy_source_coverage
 
     cover = {
         s: {_bucket(t) for t in docs} for s, docs in _SOURCE_DOCS.items()
@@ -170,9 +166,7 @@ def test_greedy_fewer_sources_than_rounds_emits_short_report(spark, tmp_path):
     """Round-8 ADVICE guard: with fewer eligible sources than
     GREEDY_ROUNDS the oracle's later picks are empty SELECTs, so the
     Spark loop must break (not IndexError) and emit the shorter report."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries27 import (
-        greedy_source_coverage,
-    )
+    from scats_transis_kinesis_spark.plans.sampling import greedy_source_coverage
 
     _write_documents(
         spark,
@@ -196,9 +190,7 @@ def test_greedy_fewer_sources_than_rounds_emits_short_report(spark, tmp_path):
 def test_greedy_empty_shingle_universe_emits_empty_report(spark, tmp_path):
     """Round-8 ADVICE guard: no doc reaches COVER_NGRAM tokens ->
     empty report with the full 5-column schema, no divide-by-zero."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries27 import (
-        greedy_source_coverage,
-    )
+    from scats_transis_kinesis_spark.plans.sampling import greedy_source_coverage
 
     _write_documents(
         spark,
@@ -225,7 +217,7 @@ def test_greedy_fallback_argmax_path_matches_fast_path(
     the cap forced below this corpus's 5 sources, the fallback must
     reproduce the replay — same picks, gains, coverage — proving the
     two paths compute the identical greedy."""
-    import scats_transis_kinesis_spark.plans.pipeline_queries27 as pq27
+    import scats_transis_kinesis_spark.plans.sampling as sampling
 
     rows = []
     i = 0
@@ -234,7 +226,7 @@ def test_greedy_fallback_argmax_path_matches_fast_path(
             rows.append((i, text, "en", src, len(text)))
             i += 1
     _write_documents(spark, tmp_path, rows)
-    monkeypatch.setattr(pq27, "GREEDY_COLLECT_CAP", 2)
+    monkeypatch.setattr(sampling, "GREEDY_COLLECT_CAP", 2)
 
     cover = {
         s: {_bucket(t) for t in docs} for s, docs in _SOURCE_DOCS.items()
@@ -248,7 +240,7 @@ def test_greedy_fallback_argmax_path_matches_fast_path(
             r["covered_buckets"],
             r["coverage_micros"],
         )
-        for r in pq27.greedy_source_coverage(spark, str(tmp_path))
+        for r in sampling.greedy_source_coverage(spark, str(tmp_path))
         .orderBy("sel_round")
         .collect()
     ]

@@ -73,9 +73,7 @@ def _replay_covered(docs):
 
 
 def test_exact_substring_cut_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
-        exact_substring_cut,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import exact_substring_cut
 
     _write_documents(
         spark, tmp_path, [(d, t, "en", s, len(t)) for d, t, s in _CUT_DOCS]
@@ -105,9 +103,7 @@ def test_exact_substring_cut_replay(spark, tmp_path):
 
 
 def test_exact_substring_cut_savings_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
-        exact_substring_cut_savings,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import exact_substring_cut_savings
 
     _write_documents(
         spark, tmp_path, [(d, t, "en", s, len(t)) for d, t, s in _CUT_DOCS]
@@ -208,15 +204,13 @@ def _replay_ivf_audit(vecs, query_ids, probes, k, n_cents):
 
 
 def test_ivf_probe_recall_audit_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
+    from scats_transis_kinesis_spark.plans.retrieval import (
         IVF_CENTROIDS,
         IVF_K,
         IVF_PROBES,
         ivf_probe_recall_audit,
     )
-    from scats_transis_kinesis_spark.plans.extension_queries import (
-        _SIM_QUERY_IDS,
-    )
+    from scats_transis_kinesis_spark.plans.retrieval import _SIM_QUERY_IDS
 
     vecs = _ivf_vectors()
     _write_embeddings(spark, tmp_path, vecs)
@@ -263,9 +257,7 @@ _SPAN_DOCS = [
 
 
 def test_incremental_span_coverage_replay(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
-        incremental_span_coverage,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import incremental_span_coverage
 
     _write_documents(
         spark,
@@ -303,12 +295,8 @@ def test_incremental_matches_full_recompute_restriction(spark, tmp_path):
     """The merge path == repeated_span_coverage restricted to delta ids
     on the SAME corpus — the maintenance contract stated as an
     equality, not just hand numbers."""
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
-        repeated_span_coverage,
-    )
-    from scats_transis_kinesis_spark.plans.pipeline_queries28 import (
-        incremental_span_coverage,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import repeated_span_coverage
+    from scats_transis_kinesis_spark.plans.dedup import incremental_span_coverage
 
     _write_documents(
         spark,

@@ -51,9 +51,7 @@ def test_nearest_centroid_matches_rocchio_replay(spark, tmp_path):
         vecs, "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries24 import (
-        nearest_centroid_accuracy,
-    )
+    from scats_transis_kinesis_spark.plans.retrieval import nearest_centroid_accuracy
 
     row = nearest_centroid_accuracy(spark, str(tmp_path)).collect()[0]
 
@@ -101,9 +99,7 @@ def test_blocking_cost_matches_pair_count_replay(spark, tmp_path):
         rows, "o_orderkey long, o_custkey long, o_orderdate timestamp"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries21 import (
-        blocking_cost_audit,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import blocking_cost_audit
 
     got = {r["blocking_key"]: r for r in blocking_cost_audit(spark, str(tmp_path)).collect()}
 
@@ -129,10 +125,8 @@ def test_blocking_cost_matches_pair_count_replay(spark, tmp_path):
 
 
 def test_domain_shift_kl_matches_plain_terms(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
-        HH_THRESHOLD,
-        domain_shift_kl,
-    )
+    from scats_transis_kinesis_spark.plans.common import HH_THRESHOLD
+    from scats_transis_kinesis_spark.plans.sampling import domain_shift_kl
 
     # Build token streams where exactly three tokens clear the
     # heavy-hitter floor; 'rare' stays below it and must not count.
@@ -204,7 +198,7 @@ def test_auc_matches_direct_pairwise_definition(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries7 import quality_auc_en
+    from scats_transis_kinesis_spark.plans.stats import quality_auc_en
 
     row = quality_auc_en(spark, str(tmp_path)).collect()[0]
 

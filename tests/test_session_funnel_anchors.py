@@ -44,9 +44,7 @@ def test_sessionize_users_gap_boundary(spark, tmp_path):
     ]
     _write_events(spark, tmp_path, rows)
 
-    from scats_transis_kinesis_spark.plans.relational_queries import (
-        sessionize_users,
-    )
+    from scats_transis_kinesis_spark.plans.relational import sessionize_users
 
     got = {
         r["user_id"]: (r["n_sessions"], r["n_events"])
@@ -56,7 +54,7 @@ def test_sessionize_users_gap_boundary(spark, tmp_path):
 
 
 def test_session_window_native_gap_boundary(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries12 import (
+    from scats_transis_kinesis_spark.plans.events import (
         SESSION_GAP_MIN,
         session_window_native,
     )
@@ -115,9 +113,7 @@ def test_funnel_depth_requires_in_order_stages(spark, tmp_path):
     ]
     _write_events(spark, tmp_path, rows)
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        funnel_view_click_purchase,
-    )
+    from scats_transis_kinesis_spark.plans.events import funnel_view_click_purchase
 
     got = {
         r["funnel_depth"]: r["n_users"]

@@ -248,7 +248,7 @@ def test_countmin_guarantees_and_geometry(spark):
        modulus misrouted) fails by orders of magnitude.
     """
     from scats_transis_kinesis_spark.operators.sketches import countmin_estimates
-    from scats_transis_kinesis_spark.plans.pipeline_queries12 import CM_PARAMS
+    from scats_transis_kinesis_spark.plans.audits import CM_PARAMS
 
     # Skewed synthetic keys: key = floor(sqrt(id)) gives frequency
     # ~2k+1 for key k — heavy head, long tail, deterministic.

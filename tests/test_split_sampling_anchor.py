@@ -21,7 +21,7 @@ def test_hash_split_membership_and_growth_stability(spark, tmp_path):
         f"{tmp_path}/documents.parquet"
     )
 
-    from scats_transis_kinesis_spark.plans.coverage_queries import (
+    from scats_transis_kinesis_spark.plans.sampling import (
         dataset_split_train_test,
         sample_hash_bucket,
     )
@@ -46,7 +46,7 @@ def test_hash_split_membership_and_growth_stability(spark, tmp_path):
 
 
 def test_stratified_sample_counts_match_python(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries import (
+    from scats_transis_kinesis_spark.plans.sampling import (
         STRATA_PCT,
         stratified_sample_by_lang,
     )

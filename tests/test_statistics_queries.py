@@ -38,9 +38,7 @@ def _write(spark, path, name, rows, schema):
 
 
 def test_acf_alternating_series_hits_plus_minus_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        acf_hourly_traffic,
-    )
+    from scats_transis_kinesis_spark.plans.events import acf_hourly_traffic
 
     base = datetime.datetime(2024, 3, 1)
     rows = []
@@ -73,9 +71,7 @@ ORDERS_SCHEMA = "o_orderkey long, o_orderdate timestamp, o_totalprice double"
 
 
 def test_ks_offset_staircases_score_half_at_first_value(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        ks_drift_orders,
-    )
+    from scats_transis_kinesis_spark.plans.stats import ks_drift_orders
 
     rows = _orders(
         {(1997, 6, 1): [1, 2, 3, 4], (1998, 6, 1): [3, 4, 5, 6]}
@@ -89,9 +85,7 @@ def test_ks_offset_staircases_score_half_at_first_value(spark, tmp_path):
 
 
 def test_ks_identical_samples_score_zero(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        ks_drift_orders,
-    )
+    from scats_transis_kinesis_spark.plans.stats import ks_drift_orders
 
     rows = _orders(
         {(1997, 6, 1): [5, 6, 7, 8], (1998, 6, 1): [5, 6, 7, 8]}
@@ -105,9 +99,7 @@ def test_ks_identical_samples_score_zero(spark, tmp_path):
 
 
 def test_cusum_locates_level_shift_boundary(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        cusum_changepoint_daily,
-    )
+    from scats_transis_kinesis_spark.plans.events import cusum_changepoint_daily
 
     rows = []
     for d in range(20):
@@ -125,9 +117,7 @@ def test_cusum_locates_level_shift_boundary(spark, tmp_path):
 
 
 def test_mad_fence_flags_only_the_whale(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        robust_outliers_mad,
-    )
+    from scats_transis_kinesis_spark.plans.stats import robust_outliers_mad
 
     _write(spark, tmp_path, "nation", [(0, "A"), (1, "B")],
            "n_nationkey long, n_name string")
@@ -158,9 +148,7 @@ def test_mad_fence_flags_only_the_whale(spark, tmp_path):
 
 
 def test_link_prediction_two_basket_graph_by_hand(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        link_prediction_scores,
-    )
+    from scats_transis_kinesis_spark.plans.graph import link_prediction_scores
 
     # Baskets {1,2,3} and {2,3,4} in the 1995 window → edges
     # 12,13,23,24,34; the single non-adjacent pair (1,4) has common
@@ -183,9 +171,7 @@ def test_link_prediction_two_basket_graph_by_hand(spark, tmp_path):
 
 
 def test_zipf_exact_power_law_fits_slope_minus_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        zipf_law_fit,
-    )
+    from scats_transis_kinesis_spark.plans.text import zipf_law_fit
 
     words = ["a"] * 12 + ["b"] * 6 + ["c"] * 4 + ["d"] * 3  # f = 12/r
     _write(spark, tmp_path, "documents", [(0, " ".join(words))],
@@ -198,9 +184,7 @@ def test_zipf_exact_power_law_fits_slope_minus_one(spark, tmp_path):
 
 
 def test_heaps_all_novel_stream_fits_beta_one(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        heaps_law_fit,
-    )
+    from scats_transis_kinesis_spark.plans.text import heaps_law_fit
 
     docs, w = [], 0
     for i, k in enumerate([2, 4, 8, 16]):

@@ -40,9 +40,7 @@ def test_kaplan_meier_matches_product_limit_replay(spark, tmp_path):
         rows, "o_custkey long, o_orderdate timestamp"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries13 import (
-        kaplan_meier_retention,
-    )
+    from scats_transis_kinesis_spark.plans.stats import kaplan_meier_retention
 
     got = sorted(
         (r["duration_weeks"], r["n_risk"], r["n_events"], r["surv_micros"])
@@ -85,9 +83,7 @@ def test_cusum_matches_integer_argmax_replay(spark, tmp_path):
         rows, "o_orderdate timestamp, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        cusum_changepoint_daily,
-    )
+    from scats_transis_kinesis_spark.plans.events import cusum_changepoint_daily
 
     row = cusum_changepoint_daily(spark, str(tmp_path)).collect()[0]
 
@@ -130,9 +126,7 @@ def test_ks_matches_exact_ecdf_replay(spark, tmp_path):
         rows, "o_orderdate timestamp, o_totalprice double"
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        ks_drift_orders,
-    )
+    from scats_transis_kinesis_spark.plans.stats import ks_drift_orders
 
     row = ks_drift_orders(spark, str(tmp_path)).collect()[0]
 
@@ -172,9 +166,7 @@ def test_acf_matches_lag_pairs_replay(spark, tmp_path):
         rows, "user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries9 import (
-        acf_hourly_traffic,
-    )
+    from scats_transis_kinesis_spark.plans.events import acf_hourly_traffic
 
     got = {
         r["lag"]: (r["n_pairs"], r["acf"])

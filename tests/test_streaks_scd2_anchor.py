@@ -29,9 +29,7 @@ def test_daily_streaks_by_hand(spark, tmp_path):
         rows, "user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries3 import (
-        user_daily_streaks,
-    )
+    from scats_transis_kinesis_spark.plans.events import user_daily_streaks
 
     out = {r["user_id"]: r for r in user_daily_streaks(spark, str(tmp_path)).collect()}
     assert (out[1]["n_streaks"], out[1]["longest_streak"], out[1]["n_active_days"]) == (2, 3, 5)
@@ -54,9 +52,7 @@ def test_scd2_intervals_by_hand(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_totalprice double, o_orderdate timestamp",
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
-        scd2_customer_orders,
-    )
+    from scats_transis_kinesis_spark.plans.relational import scd2_customer_orders
 
     out = {r["o_orderkey"]: r for r in scd2_customer_orders(spark, str(tmp_path)).collect()}
     # Chain for cust 1: 11 -> 12 -> 13 -> 14 (same-day keys order 12 < 13).

@@ -26,9 +26,7 @@ def test_survivorship_rules_on_planted_cluster(spark, tmp_path):
         "c_acctbal double, c_mktsegment string",
     ).write.parquet(f"{tmp_path}/customer.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries6 import (
-        survivorship_golden_record,
-    )
+    from scats_transis_kinesis_spark.plans.dedup import survivorship_golden_record
 
     recs = survivorship_golden_record(spark, str(tmp_path)).collect()
     # Only RESOLVED entities publish a golden record (clusters come from

@@ -35,9 +35,7 @@ def test_transition_counts_by_hand(spark, tmp_path):
         rows, "event_id long, user_id long, event_type string, ts timestamp"
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        event_transition_matrix,
-    )
+    from scats_transis_kinesis_spark.plans.events import event_transition_matrix
 
     got = {
         (r["prev_type"], r["next_type"]): r["n_transitions"]
@@ -51,10 +49,8 @@ def test_transition_counts_by_hand(spark, tmp_path):
 
 
 def test_heavy_hitters_twopass_is_lossless_at_threshold(spark, tmp_path):
-    from scats_transis_kinesis_spark.plans.pipeline_queries2 import (
-        HH_THRESHOLD,
-        heavy_hitters_twopass,
-    )
+    from scats_transis_kinesis_spark.plans.audits import heavy_hitters_twopass
+    from scats_transis_kinesis_spark.plans.common import HH_THRESHOLD
 
     # 'hot' appears exactly HH_THRESHOLD times (boundary: kept),
     # 'warm' one fewer (dropped), 'mega' far above.

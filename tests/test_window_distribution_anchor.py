@@ -20,9 +20,7 @@ def test_window_distribution_floor_micros_by_hand(spark, tmp_path):
         rows, "c_custkey long, c_nationkey long, c_acctbal double"
     ).write.parquet(f"{tmp_path}/customer.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries12 import (
-        window_distribution_stats,
-    )
+    from scats_transis_kinesis_spark.plans.relational import window_distribution_stats
 
     out = {
         r["c_custkey"]: r

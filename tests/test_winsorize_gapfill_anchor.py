@@ -27,9 +27,7 @@ def test_winsorize_clips_to_exact_interpolated_quantiles(spark, tmp_path):
         "o_totalprice double, o_orderdate timestamp",
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from scats_transis_kinesis_spark.plans.pipeline_queries5 import (
-        winsorize_order_stats,
-    )
+    from scats_transis_kinesis_spark.plans.stats import winsorize_order_stats
 
     out = {
         r["o_orderpriority"]: r
@@ -66,9 +64,7 @@ def test_gapfill_emits_zero_rows_for_silent_days(spark, tmp_path):
         "event_id long, user_id long, event_type string, ts timestamp, value double",
     ).write.parquet(f"{tmp_path}/events.parquet")
 
-    from scats_transis_kinesis_spark.plans.analytics_queries import (
-        resample_gapfill_daily,
-    )
+    from scats_transis_kinesis_spark.plans.events import resample_gapfill_daily
 
     out = {
         (r["user_id"], r["day"].day): (r["n_events"], r["total_value"])

@@ -3,6 +3,7 @@ consumer + response-model suites (reference: tests.py:17-118)."""
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import re
 
@@ -324,9 +325,18 @@ def test_record_plan_builds_in_few_py4j_calls(spark, monkeypatch):
         calls.append(1)
         return send(*args, **kwargs)
 
-    monkeypatch.setattr(client, "send_command", counting_send)
-    to_kinesis_envelope(scats_records(docs))
-    monkeypatch.undo()
+    # Py4J releases a collected JavaObject through send_command too, so a
+    # cyclic-GC pass over earlier tests' garbage inside the window would
+    # count calls the build never made: collect first, then hold the
+    # cyclic collector off (reference-count frees still run and count).
+    gc.collect()
+    gc.disable()
+    try:
+        monkeypatch.setattr(client, "send_command", counting_send)
+        to_kinesis_envelope(scats_records(docs))
+        monkeypatch.undo()
+    finally:
+        gc.enable()
     assert len(calls) <= 150, len(calls)
 
 
@@ -445,6 +455,7 @@ def test_typed_time_range_wrappers(spark):
     from pyspark.sql import functions as F
 
     from scats_transis_kinesis_spark.sources.loaders import (
+        get_all_closed_tirf,
         get_all_open_tirf,
         get_all_vms,
         get_motorway_from,
@@ -467,6 +478,11 @@ def test_typed_time_range_wrappers(spark):
     sm = get_strategic_monitor_from(spark, "2024-01-10 00:00:00", sf_dir=SF)
     open_tirf = get_all_open_tirf(spark, sf_dir=SF)
     assert sm.count() > 0 and open_tirf.count() > 0
+
+    closed = get_all_closed_tirf(spark, "2024-01-10 00:00:00", sf_dir=SF)
+    want = typed_time_range_scan(spark, ("signup",), "2024-01-10 00:00:00", sf_dir=SF)
+    assert closed.count() > 0
+    assert sorted(closed.collect()) == sorted(want.collect())
 
     both = typed_time_range_scan(
         spark, ("view", "click"), "2024-01-05 00:00:00", "2024-01-25 00:00:00", sf_dir=SF
@@ -589,8 +605,8 @@ def test_transis_xml_format_is_live_transport_only(spark, tmp_path):
     a batch read, a batch write and a stream without ``transport`` all
     fail, so a capture file has one reader (``read_null_delimited``).
     A stream without ``transport`` fails at ``load()``, not at its first
-    trigger."""
-    from pyspark.errors import AnalysisException
+    trigger; with a schema it fails as it starts, on the transport check."""
+    from pyspark.errors import AnalysisException, StreamingQueryException
 
     from scats_transis_kinesis_spark.sources.datasource import (
         register_transis_datasource,
@@ -604,9 +620,32 @@ def test_transis_xml_format_is_live_transport_only(spark, tmp_path):
         spark.read.format("transis_xml").option("transport", "m:f").load().collect()
     df = spark.createDataFrame([("<a/>",)], "value string")
     with pytest.raises(AnalysisException, match="writer is not implemented"):
-        df.write.format("transis_xml").mode("append").save(str(tmp_path / "o"))
+        df.write.format("transis_xml").option("transport", "m:f").mode(
+            "append"
+        ).save(str(tmp_path / "o"))
     with pytest.raises(AnalysisException, match="option 'transport' is required"):
         spark.readStream.format("transis_xml").load(str(tmp_path))
+    # Given a schema, Spark builds the source only when the query starts,
+    # not at ``load()``; the query then fails on the transport check
+    # itself, not on pyspark's UnboundLocalError chained behind it.
+    query = (
+        spark.readStream.format("transis_xml")
+        .schema("value string")
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(
+            StreamingQueryException,
+            match="Failed to create Python data source instance",
+        ) as err:
+            query.processAllAvailable()
+    finally:
+        query.stop()
+    assert "option 'transport' is required" in str(err.value)
+    assert "UnboundLocalError" not in str(err.value)
 
 
 # ---------------------------------------------------------------------------
