@@ -84,3 +84,17 @@ def test_registry_order_is_pinned():
     order = "\n".join(queries())
     assert hashlib.sha256(order.encode()).hexdigest() == PINNED_ORDER_SHA256
     assert set(_PRIORITY) == set(REGISTRY)
+
+
+# SHA-256 over each registered query's name and oracle SQL, in sorted
+# name order.  A refactor of the Spark builders must leave every oracle
+# string byte-identical; update this only when an oracle is meant to
+# change.
+PINNED_ORACLES_SHA256 = "165db35bba2be47f4ddce06b8d524283c6ca1339d9db83b83e1124d25478e4fb"
+
+
+def test_registry_oracles_are_pinned():
+    h = hashlib.sha256()
+    for name in sorted(REGISTRY):
+        h.update(f"{name}\n{REGISTRY[name].oracle}\n".encode())
+    assert h.hexdigest() == PINNED_ORACLES_SHA256
