@@ -90,22 +90,14 @@ def _read_state_or_none(spark, state_dir: str):
     (corrupt footer, permissions, transient FS error) raises loudly —
     silently skipping the history join would re-admit every previously
     kept document AND append duplicate state rows.  The structured
-    error class is the stable contract (message text varies across
-    Spark versions); the string probes remain only as a fallback for
-    builds without getCondition/getErrorClass."""
+    error condition is the stable contract; message text varies across
+    Spark versions."""
     from pyspark.errors import AnalysisException
 
     try:
         return spark.read.parquet(state_dir)
     except AnalysisException as e:
-        getter = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", None
-        )
-        code = getter() if callable(getter) else None
-        if code is not None:
-            if code != "PATH_NOT_FOUND":
-                raise
-        elif "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
+        if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return None
 

@@ -30,16 +30,31 @@ _NANO_TS_COLS: dict[str, tuple[str, ...]] = {
 }
 
 
-def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    """Load one synthetic table as a DataFrame (columnar scan, pushdown-able)."""
-    from pyspark.sql import functions as F
+def _scan(spark: SparkSession, name: str, sf_dir: str) -> tuple[DataFrame, tuple[str, ...]]:
+    """Read one table file raw, with the columns that scanned as int64
+    nanos (``_NANO_TS_COLS`` entries typed ``LongType``)."""
     from pyspark.sql import types as T
 
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for c in _NANO_TS_COLS.get(name, ()):
-        if c in df.columns and isinstance(df.schema[c].dataType, T.LongType):
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    nanos = tuple(
+        c
+        for c in _NANO_TS_COLS.get(name, ())
+        if c in df.columns and isinstance(df.schema[c].dataType, T.LongType)
+    )
+    return df, nanos
+
+
+def _nanos_to_micros(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    for c in cols:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    """Load one synthetic table as a DataFrame (columnar scan, pushdown-able)."""
+    return _nanos_to_micros(*_scan(spark, name, sf_dir))
 
 
 def load_tables(
@@ -70,10 +85,9 @@ def time_range_scan(
     from datetime import datetime, timezone
 
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if ts_col in raw.columns and isinstance(raw.schema[ts_col].dataType, T.LongType):
+    raw, nanos = _scan(spark, name, sf_dir)
+    if ts_col in nanos:
         # Nano-typed column: compare in int64 nanos *before* converting,
         # so the range predicate reaches the parquet row-group reader
         # (PushedFilters) instead of evaluating post-conversion.
@@ -84,7 +98,7 @@ def time_range_scan(
         raw = raw.where(F.col(ts_col) >= F.lit(to_ns(from_ts)))
         if to_ts is not None:
             raw = raw.where(F.col(ts_col) <= F.lit(to_ns(to_ts)))
-        return raw.withColumn(ts_col, F.timestamp_micros(F.expr(f"`{ts_col}` div 1000")))
+        return _nanos_to_micros(raw, nanos)
     df = raw.where(F.col(ts_col) >= F.lit(from_ts).cast("timestamp"))
     if to_ts is not None:
         df = df.where(F.col(ts_col) <= F.lit(to_ts).cast("timestamp"))

@@ -69,6 +69,33 @@ def test_filter_pushdown_reaches_scan(spark):
     assert re.search(r"PushedFilters:.*GreaterThanOrEqual\(ts", plan)
 
 
+def test_nano_timestamps_filter_in_nanos_before_converting(spark, tmp_path):
+    # Files written with TIMESTAMP(NANOS) scan as int64 under
+    # nanosAsLong: the loaders convert them to timestamps, and
+    # time_range_scan compares in nanos first so the range still
+    # reaches the parquet reader as a pushed filter.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from scats_transis_kinesis_spark.sources.loaders import load_table, time_range_scan
+
+    day_ns = 86_400 * 10**9
+    ts = pa.array([1_704_844_800 * 10**9 + i * day_ns + 123 for i in range(10)], pa.timestamp("ns"))
+    pq.write_table(pa.table({"event_id": list(range(10)), "ts": ts}), tmp_path / "events.parquet")
+
+    full = load_table(spark, "events", str(tmp_path))
+    assert dict(full.dtypes)["ts"] == "timestamp"
+    assert full.count() == 10
+    df = time_range_scan(spark, "events", "ts", "2024-01-12", "2024-01-15", sf_dir=str(tmp_path))
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert sorted(r["event_id"] for r in df.collect()) == [2, 3, 4]
+    plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert re.search(r"PushedFilters:.*GreaterThanOrEqual\(ts,1705017600000000000\)", plan)
+    assert re.search(r"PushedFilters:.*LessThanOrEqual\(ts,1705276800000000000\)", plan)
+
+
 def test_column_pruning_on_fact_scan(spark):
     # q1 touches 7 lineitem columns; the scan must not read the rest
     # (l_orderkey, l_partkey, comments, dates beyond shipdate, ...).

@@ -877,6 +877,23 @@ def test_incremental_exact_dedup_across_runs(spark):
         assert n_hashes == 3  # alpha, beta, gamma — one row per distinct text
 
 
+def test_state_read_is_none_only_for_a_missing_dir(spark, tmp_path):
+    """A state dir that does not exist yet is the first run (``None``);
+    any other read failure raises — an existing empty dir has no
+    schema to infer (UNABLE_TO_INFER_SCHEMA), and swallowing it would
+    re-admit every previously kept document."""
+    from pyspark.errors import AnalysisException
+
+    from scats_transis_kinesis_spark.operators.dedup import _read_state_or_none
+
+    assert _read_state_or_none(spark, str(tmp_path / "missing")) is None
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(AnalysisException) as ei:
+        _read_state_or_none(spark, str(empty))
+    assert ei.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+
+
 def test_incremental_minhash_dedup_across_runs(spark):
     """Cross-run NEAR-dup dedup against the persisted signature table:
     run 2 drops a near-duplicate (one word changed) of a run-1 doc via
