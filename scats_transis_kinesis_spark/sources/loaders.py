@@ -10,9 +10,13 @@ Streaming file source in tests and a Kinesis/Kafka source in production.
 
 from __future__ import annotations
 
+import glob
 import os
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import schemas
 
@@ -33,8 +37,6 @@ _NANO_TS_COLS: dict[str, tuple[str, ...]] = {
 def _scan(spark: SparkSession, name: str, sf_dir: str) -> tuple[DataFrame, tuple[str, ...]]:
     """Read one table file raw, with the columns that scanned as int64
     nanos (``_NANO_TS_COLS`` entries typed ``LongType``)."""
-    from pyspark.sql import types as T
-
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     nanos = tuple(
         c
@@ -45,8 +47,6 @@ def _scan(spark: SparkSession, name: str, sf_dir: str) -> tuple[DataFrame, tuple
 
 
 def _nanos_to_micros(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
-    from pyspark.sql import functions as F
-
     for c in cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
@@ -82,10 +82,6 @@ def time_range_scan(
     ``ts >= from`` (+ optional ``ts <= to``) reaches the parquet reader
     as a pushed filter — at 100 TB this is partition pruning, not a scan.
     """
-    from datetime import datetime, timezone
-
-    from pyspark.sql import functions as F
-
     raw, nanos = _scan(spark, name, sf_dir)
     if ts_col in nanos:
         # Nano-typed column: compare in int64 nanos *before* converting,
@@ -134,8 +130,6 @@ def write_partitioned(
     ``derive_date_from`` adds an ``event_date`` column from a timestamp
     when the frame doesn't carry one; pass ``None`` if it already does.
     """
-    from pyspark.sql import functions as F
-
     out = df
     if derive_date_from is not None and "event_date" in partition_cols:
         out = out.withColumn("event_date", F.to_date(F.col(derive_date_from)))
@@ -310,9 +304,6 @@ def compact_table(
         .option("maxRecordsPerFile", cap)
         .parquet(dst_path)
     )
-    import glob
-    import os
-
     return len(glob.glob(os.path.join(dst_path, "*.parquet")))
 
 
@@ -333,8 +324,6 @@ def read_evolved(
     is a footer-only negotiation — no data rewrite, pruning and
     pushdown still apply per file.
     """
-    from pyspark.sql import functions as F
-
     df = spark.read.option("mergeSchema", "true").parquet(path)
     for old, new in (renames or {}).items():
         if old in df.columns and new in df.columns:
@@ -365,8 +354,6 @@ def typed_time_range_scan(
     pruning.  ``from_ts=None`` gives the snapshot pulls (getAllVMS /
     getAllOpenTIRF) that have no date parameter.
     """
-    from pyspark.sql import functions as F
-
     if from_ts is None:
         df = load_table(spark, name, sf_dir)
     else:
