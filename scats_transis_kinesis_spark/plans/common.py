@@ -12,12 +12,18 @@ the family modules depend on it and never on each other:
 - ``_STOPLIST_SQL`` — the English stopword list as a DuckDB list
   literal;
 - the k-means oracle CTEs (``_kmeans_ctes`` and its ``KM_*`` knobs),
-  the MinHash-LSH oracle and the heavy-hitter threshold.
+  the MinHash-LSH oracle and the heavy-hitter threshold;
+- ``_milli_int`` — an embedding quantized to exact milli-ints, and
+  ``_class_centroid_fit`` — the milli-int class centroids fit on the
+  ``vec_id % 3 = 0`` third;
+- ``_pair_count_sums`` — the pair counts of a contingency-cell frame,
+  the integer core of the Rand and adjusted Rand indices.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from ..functions.hashing import minhash_value_sql
 from ..operators import dedup as D
@@ -180,3 +186,72 @@ def _idiv(num: Column, den: Column) -> Column:
 # Plain int (not F.lit): module import must not require an active
 # SparkContext; Column arithmetic lifts it.
 _M = 1_000_000
+
+
+def _milli_int(vec: str) -> Column:
+    """The array column ``vec`` as exact milli-ints:
+    ``transform(vec, e -> round(e * 1000))`` cast to long."""
+    return F.transform(vec, lambda e: F.round(e.cast("double") * 1000).cast("long"))
+
+
+def _class_centroid_fit(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(m, cent)`` over the embeddings table: ``m`` is one
+    (vec_id, label, part, i, v) row per milli-int dimension with
+    ``part = vec_id % 3`` and 1-based ``i``; ``cent`` is the
+    (label, i, c) class centroid fit on part 0, each coordinate the
+    rounded milli-int mean."""
+    m = emb.select(
+        "vec_id",
+        "label",
+        (F.col("vec_id") % 3).alias("part"),
+        F.posexplode(_milli_int("embedding")).alias("pos", "v"),
+    ).select("vec_id", "label", "part", (F.col("pos") + 1).alias("i"), "v")
+    cent = (
+        m.where(F.col("part") == 0)
+        .groupBy("label", "i")
+        .agg(
+            F.round(F.sum("v").cast("double") / F.count("*"))
+            .cast("long")
+            .alias("c")
+        )
+    )
+    return m, cent
+
+
+def _pair_count_sums(
+    cells: DataFrame,
+    row: str,
+    col: str,
+    n: str,
+    row_pairs: str,
+    col_pairs: str,
+) -> DataFrame:
+    """One row of exact pair counts over a contingency-cell frame
+    (``row``, ``col``, ``nij``): ``matched`` (pairs sharing a cell),
+    ``n`` (the item count), ``row_pairs`` / ``col_pairs`` (pairs sharing
+    a row / a column) and ``tot`` (all pairs), each c·(c−1)/2 summed
+    over its groups.  No pair is ever materialized: three 1-row
+    aggregates combined by broadcast."""
+
+    def pairs(c: Column) -> Column:
+        return _idiv(c * (c - 1), F.lit(2))
+
+    mt = cells.agg(
+        F.sum(pairs(F.col("nij"))).alias("matched"),
+        F.sum("nij").alias(n),
+    )
+    ta = (
+        cells.groupBy(row)
+        .agg(F.sum("nij").alias("ai"))
+        .agg(F.sum(pairs(F.col("ai"))).alias(row_pairs))
+    )
+    tb = (
+        cells.groupBy(col)
+        .agg(F.sum("nij").alias("bj"))
+        .agg(F.sum(pairs(F.col("bj"))).alias(col_pairs))
+    )
+    return (
+        mt.crossJoin(F.broadcast(ta))
+        .crossJoin(F.broadcast(tb))
+        .withColumn("tot", _idiv(F.col(n) * (F.col(n) - 1), F.lit(2)))
+    )

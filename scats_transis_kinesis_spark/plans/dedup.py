@@ -11,6 +11,10 @@ detector agreement).
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -18,7 +22,20 @@ from pyspark.sql import functions as F
 from ..functions.hashing import duckdb_hash32_sql, portable_hash32, portable_hash64
 from ..functions.pairs import pack_pair, unpack_pair
 from ..operators import dedup as D
-from ..operators.dedup import SHINGLE_N, shingle_sets
+from ..operators.dedup import (
+    CONTAINMENT_THRESHOLD,
+    SHINGLE_N,
+    connected_components,
+    containment_near_dups,
+    containment_prefix_pairs,
+    minhash_lsh_near_dups,
+    semantic_prune_stats,
+    shingle_sets,
+    simhash_near_dup_pairs,
+)
+from ..operators.ml import kmeans_assign
+from ..operators.overlap import run_concurrently
+from ..operators.similarity import _norm, cosine_with_norms, nearest_cross_vectorized
 from ..operators.text import tokens
 from ..sources.loaders import load_table
 from .common import (
@@ -111,8 +128,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint as a recursive CTE over the replayed signature math.""",
 )
 def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components
-
     return connected_components(dedup_minhash_lsh(spark, sf_dir))
 
 
@@ -217,25 +232,41 @@ EMBED_DUP_THRESHOLD = 0.4  # tuned to the synthetic corpus (max pair ≈ 0.51)
     scored.""",
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Norms hoisted to per-row columns before the pair join (round-10,
-    # similarity.cosine_with_norms): the interpreted norm fold runs
-    # once per ROW instead of once per pair per side; bit-identical.
-    from ..operators.similarity import _norm, cosine_with_norms
+    e = load_table(spark, "embeddings", sf_dir).select(
+        "vec_id", F.col("embedding").alias("v")
+    )
+    return _cosine_pairs(
+        e,
+        lambda a, b: a.join(F.broadcast(b), F.col("id_a") < F.col("id_b")),
+        EMBED_DUP_THRESHOLD,
+    )
 
-    e = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-    a = e.select(
+
+def _cosine_pairs(
+    e: DataFrame,
+    pair: Callable[[DataFrame, DataFrame], DataFrame],
+    threshold: float,
+) -> DataFrame:
+    """Exact-cosine scoring of vector pairs at the family's round-6 /
+    ``>= threshold`` contract.  ``e`` is (vec_id, v) with ``v`` typed
+    as the caller's oracle reads it; ``pair`` joins the two sides,
+    (id_a, va, _na) and (id_b, vb, _nb), into the scored pairs.  Norms
+    are hoisted to per-row columns before the pair join
+    (similarity.cosine_with_norms): the interpreted norm fold runs once
+    per ROW instead of once per pair per side; bit-identical."""
+    ea = e.select(
         F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("va"),
-        _norm(F.col("embedding")).alias("_na"),
+        F.col("v").alias("va"),
+        _norm(F.col("v")).alias("_na"),
     )
-    b = e.select(
+    eb = e.select(
         F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("vb"),
-        _norm(F.col("embedding")).alias("_nb"),
+        F.col("v").alias("vb"),
+        _norm(F.col("v")).alias("_nb"),
     )
-    pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
     return (
-        pairs.select(
+        pair(ea, eb)
+        .select(
             "id_a",
             "id_b",
             F.round(
@@ -245,7 +276,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("cosine_sim"),
         )
-        .where(F.col("cosine_sim") >= EMBED_DUP_THRESHOLD)
+        .where(F.col("cosine_sim") >= threshold)
     )
 
 
@@ -311,57 +342,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    bands = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), _sign_bucket(F.col("v"), b).alias("bucket"))
-            for b in range(LSH_BANDS)
-        ]
-    )
-    buckets = e.select(
-        "vec_id", "v", F.explode(bands).alias("bb")
-    ).select("vec_id", "v", "bb.band", "bb.bucket")
-    a = buckets.select(F.col("vec_id").alias("id_a"), "band", "bucket")
-    b = buckets.select(F.col("vec_id").alias("id_b"), "band", "bucket")
-    # candidates stay slim (two ids) through the distinct; vectors join
-    # back by key afterwards — the arrays never ride a shuffle they
-    # don't need (hash joins co-partitioned on vec_id at scale).
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # Norms hoisted to per-row columns before the verify joins
-    # (round-10, similarity.cosine_with_norms): the interpreted norm
-    # fold runs once per ROW instead of once per candidate pair per
-    # side; bit-identical.
-    from ..operators.similarity import _norm, cosine_with_norms
-
-    ea = e.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("v").alias("va"),
-        _norm(F.col("v")).alias("_na"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("v").alias("vb"),
-        _norm(F.col("v")).alias("_nb"),
-    )
-    return (
-        cand.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                cosine_with_norms(
-                    F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim") >= LSH_DUP_THRESHOLD)
-    )
+    return _verified_pairs(_banded_candidates(e, LSH_BANDS, LSH_BITS), e)
 
 
 # The dedup_embedding_lsh pairs as a reusable CTE body (identical SQL to
@@ -423,8 +404,6 @@ _LSH_PAIRS_CTES = f"""
     computes the same fixpoint with a recursive CTE.""",
 )
 def dedup_clusters_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components
-
     return connected_components(dedup_embedding_lsh(spark, sf_dir))
 
 
@@ -664,8 +643,6 @@ def ngram_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata (TESTDATA.md).""",
 )
 def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components
-
     cc = connected_components(dedup_embedding_lsh(spark, sf_dir))
     docs = load_table(spark, "documents", sf_dir)
     joined = cc.join(docs, cc.member_id == docs.doc_id)
@@ -801,18 +778,14 @@ _SPAN_FLAT_CTES = f"""
 """
 
 
-def _repeated_span_flat(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Shared span machinery for the repeated-substring family: returns
-    ``(flat, rep)`` where ``flat`` is one (doc_id, n_toks, pos, g) row
-    per {SPAN_N}-token span and ``rep`` is the set of span texts seen in
-    >= 2 distinct documents.  Extracted verbatim from
-    ``repeated_span_coverage`` (value-neutral) so the round-8 span-merge
-    extension (``repeated_span_islands``) reuses one definition."""
+def _span_flat(docs: DataFrame) -> DataFrame:
+    """Span machinery for the repeated-substring family: one
+    (doc_id, n_toks, pos, g) row per SPAN_N-token span."""
     toks = tokens("text")
     base = docs.select(
         "doc_id", F.size(toks).alias("n_toks"), toks.alias("w")
     )
-    flat = (
+    return (
         base.where(F.col("n_toks") >= SPAN_N)
         .select(
             "doc_id",
@@ -839,19 +812,57 @@ def _repeated_span_flat(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         .select("doc_id", "n_toks", "s.pos", "s.g")
     )
+
+
+def _repeated_spans(flat: DataFrame) -> DataFrame:
+    """The span texts of ``flat`` seen in >= 2 distinct documents."""
     # "Seen in >= 2 distinct documents" as min(doc_id) != max(doc_id) —
     # value-identical to countDistinct(doc_id) >= 2 (doc_id is non-null)
     # but a SINGLE partial-aggregated pass: countDistinct plans as a
     # two-phase distinct expansion (an extra aggregate + exchange over
     # (g, doc_id)) that this span-text-keyed shuffle paid on every
     # consumer (round-11, guide §2.3).
-    rep = (
+    return (
         flat.groupBy("g")
         .agg(F.min("doc_id").alias("_d0"), F.max("doc_id").alias("_d1"))
         .where(F.col("_d0") != F.col("_d1"))
         .select("g")
     )
-    return flat, rep
+
+
+def _covered_positions(flat: DataFrame, rep: DataFrame) -> DataFrame:
+    """Distinct (doc_id, cp) duplicated-token positions: every span of
+    ``flat`` whose text is in ``rep`` covers [pos, pos + SPAN_N - 1]."""
+    return (
+        flat.join(rep, "g", "left_semi")
+        .select(
+            "doc_id",
+            F.explode(
+                F.sequence(F.col("pos"), F.col("pos") + (SPAN_N - 1))
+            ).alias("cp"),
+        )
+        .distinct()
+    )
+
+
+def _doc_coverage(docs: DataFrame, cov: DataFrame) -> DataFrame:
+    """Per document of ``docs``: n_toks, n_covered (its covered
+    positions in ``cov``, 0 when none) and the round-6 coverage share."""
+    n_cov = cov.groupBy("doc_id").agg(F.count("*").alias("n_covered"))
+    return (
+        docs.select(
+            "doc_id", F.size(tokens("text")).cast("long").alias("n_toks")
+        )
+        .join(n_cov, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_toks",
+            F.coalesce("n_covered", F.lit(0)).cast("long").alias("n_covered"),
+            F.round(
+                F.coalesce("n_covered", F.lit(0)) / F.col("n_toks"), 6
+            ).alias("coverage"),
+        )
+    )
 
 
 @register(
@@ -888,37 +899,11 @@ def _repeated_span_flat(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 )
 def repeated_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    flat, rep = _repeated_span_flat(docs)
-    cov = (
-        flat.join(rep, "g", "left_semi")
-        .select(
-            "doc_id",
-            "n_toks",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + (SPAN_N - 1))
-            ).alias("cp"),
-        )
-        .distinct()
-        .groupBy("doc_id", "n_toks")
-        .agg(F.count("*").alias("n_covered"))
-    )
-    return (
-        docs.select("doc_id", F.size(tokens("text")).cast("long").alias("n_toks"))
-        .join(cov.select("doc_id", "n_covered"), "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_toks",
-            F.coalesce("n_covered", F.lit(0)).cast("long").alias("n_covered"),
-            F.round(
-                F.coalesce("n_covered", F.lit(0)) / F.col("n_toks"), 6
-            ).alias("coverage"),
-        )
-    )
+    flat = _span_flat(docs)
+    return _doc_coverage(docs, _covered_positions(flat, _repeated_spans(flat)))
 
 
 def _containment_oracle() -> str:
-    from ..operators.dedup import CONTAINMENT_THRESHOLD
-
     base = _minhash_lsh_oracle()
     # Share the signature/banding/candidate CTEs with the minhash
     # oracle; only the verification metric differs.
@@ -956,14 +941,10 @@ def _containment_oracle() -> str:
     verification touches candidates only.""",
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import containment_near_dups
-
     return containment_near_dups(load_table(spark, "documents", sf_dir))
 
 
 def _containment_banded_oracle() -> str:
-    from ..operators.dedup import CONTAINMENT_THRESHOLD as T
-
     inter = "len(list_intersect(a.toks, b.toks))::DOUBLE"
     return f"""
         WITH sets AS (
@@ -984,7 +965,7 @@ def _containment_banded_oracle() -> str:
                    count(*) OVER (PARTITION BY p.pid) AS n
             FROM posting p JOIN dfreq d USING (sh)
         ), pref AS (
-            SELECT pid, sh FROM ranked WHERE rn <= floor({1.0 - T!r} * n) + 1
+            SELECT pid, sh FROM ranked WHERE rn <= floor({1.0 - CONTAINMENT_THRESHOLD!r} * n) + 1
         ), cand AS (
             SELECT DISTINCT least(p.pid, q.pid) AS id_a,
                             greatest(p.pid, q.pid) AS id_b
@@ -999,7 +980,7 @@ def _containment_banded_oracle() -> str:
             FROM cand c
             JOIN sets a ON a.doc_id = c.id_a
             JOIN sets b ON b.doc_id = c.id_b
-        ) WHERE cmax >= {T}
+        ) WHERE cmax >= {CONTAINMENT_THRESHOLD}
     """
 
 
@@ -1017,8 +998,6 @@ def _containment_banded_oracle() -> str:
     only; exact verification touches candidates only.""",
 )
 def dedup_containment_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import containment_prefix_pairs
-
     return containment_prefix_pairs(load_table(spark, "documents", sf_dir))
 
 
@@ -1119,8 +1098,6 @@ def customer_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE closure.""",
 )
 def entity_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components
-
     return connected_components(customer_match_pairs(spark, sf_dir))
 
 
@@ -1163,8 +1140,6 @@ def entity_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the recursive-closure ground truth and the same rules.""",
 )
 def survivorship_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components
-
     cc = connected_components(customer_match_pairs(spark, sf_dir))
     c = load_table(spark, "customer", sf_dir)
     m = cc.join(c, cc.member_id == c.c_custkey).select(
@@ -1229,9 +1204,6 @@ def survivorship_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     (id_a, id_b) plus scalar counts — bounded single-row output.""",
 )
 def near_dup_agreement_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import minhash_lsh_near_dups, simhash_near_dup_pairs
-    from ..operators.overlap import run_concurrently
-
     docs = load_table(spark, "documents", sf_dir)
     # Round-10 (session 2): the final plan referenced each detector's
     # pair frame TWICE (its own count + the overlap join) with no
@@ -1303,8 +1275,6 @@ CONTAM_EVAL_LABEL = 9
 def cross_source_duplication_matrix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators import dedup as D
-
     docs = load_table(spark, "documents", sf_dir)
     pairs = D.minhash_lsh_near_dups(docs)
     src = docs.select("doc_id", "source")
@@ -1382,8 +1352,6 @@ def cross_source_duplication_matrix(
 def embedding_contamination_check(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.similarity import nearest_cross_vectorized
-
     emb = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1477,16 +1445,12 @@ def _semdedup_oracle() -> str:
     k·dim centroid summaries the k-means loop already pays.""",
 )
 def semdedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ml import kmeans_assign
-
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     asg = kmeans_assign(e, k=KM_K, iters=KM_ITERS, dim=KM_DIM).select(
         "vec_id", F.col("cluster").alias("cid")
     )
-    from ..operators.dedup import semantic_prune_stats
-
     return semantic_prune_stats(asg.join(e, "vec_id"), SEMDEDUP_TAU_PPM)
 
 
@@ -1913,8 +1877,8 @@ def _lsh_verified_sql(cand: str) -> str:
 def _banded_candidates(e: DataFrame, bands: int, bits: int) -> DataFrame:
     """Slim (id_a, id_b) candidate pairs from a banded sign-LSH layout:
     a shuffle-partitioned equi-join on (band, bucket) — never all-pairs.
-    Same plan shape as dedup_embedding_lsh's inline version (vectors do
-    not ride this shuffle; they join back by vec_id afterwards)."""
+    Vectors do not ride this shuffle; they join back by vec_id
+    afterwards."""
     arr = F.array(
         *[
             F.struct(
@@ -1941,36 +1905,10 @@ def _verified_pairs(cand: DataFrame, e: DataFrame) -> DataFrame:
     """Exact-cosine verification of LSH candidates at the family's
     round-6 / >= LSH_DUP_THRESHOLD contract (hash equi-joins on vec_id,
     co-partitioned at scale)."""
-    # Norms hoisted to per-row columns before the verify joins
-    # (round-10, similarity.cosine_with_norms): the interpreted norm
-    # fold runs once per ROW instead of once per candidate pair per
-    # side; bit-identical.
-    from ..operators.similarity import _norm, cosine_with_norms
-
-    ea = e.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("v").alias("va"),
-        _norm(F.col("v")).alias("_na"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("v").alias("vb"),
-        _norm(F.col("v")).alias("_nb"),
-    )
-    return (
-        cand.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                cosine_with_norms(
-                    F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim") >= LSH_DUP_THRESHOLD)
+    return _cosine_pairs(
+        e,
+        lambda a, b: cand.join(a, "id_a").join(b, "id_b"),
+        LSH_DUP_THRESHOLD,
     )
 
 
@@ -2154,7 +2092,8 @@ def lsh_banding_tradeoff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def repeated_span_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    flat, rep = _repeated_span_flat(docs)
+    flat = _span_flat(docs)
+    rep = _repeated_spans(flat)
     # No .distinct(): flat is one row per (doc_id, pos) BY CONSTRUCTION
     # (the span generator emits each position once), so the semi-join
     # output is already unique — the old distinct was a full extra
@@ -2202,36 +2141,16 @@ _COVERED_CTE = f"""cov AS (
         )"""
 
 
-def _covered_positions(docs: DataFrame) -> DataFrame:
-    """Distinct (doc_id, cp) duplicated-token positions: every
-    {SPAN_N}-token span occurring in >= 2 documents covers
-    [pos, pos+{SPAN_N - 1}] (the repeated_span_coverage definition).
+def _corpus_covered_positions(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, cp) duplicated-token positions of the whole
+    corpus (the repeated_span_coverage definition).
 
     The slim span frame is eagerly checkpointed because BOTH the
     repeated-span inventory and the occurrence semi-join consume it —
     without the pin Catalyst shingles the corpus twice (the banding
     audit persist lesson; measured 1.8 -> 1.0 s isolated at sf0.1)."""
-    flat, _ = _repeated_span_flat(docs)
-    flat = flat.localCheckpoint(eager=True)
-    # min != max over non-null doc_id ⟺ countDistinct >= 2, without the
-    # two-phase distinct expansion (the _repeated_span_flat rationale,
-    # round-11) — here over the checkpointed flat.
-    rep = (
-        flat.groupBy("g")
-        .agg(F.min("doc_id").alias("_d0"), F.max("doc_id").alias("_d1"))
-        .where(F.col("_d0") != F.col("_d1"))
-        .select("g")
-    )
-    return (
-        flat.join(rep, "g", "left_semi")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + (SPAN_N - 1))
-            ).alias("cp"),
-        )
-        .distinct()
-    )
+    flat = _span_flat(docs).localCheckpoint(eager=True)
+    return _covered_positions(flat, _repeated_spans(flat))
 
 
 @register(
@@ -2279,7 +2198,7 @@ def _covered_positions(docs: DataFrame) -> DataFrame:
 )
 def exact_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    cov = _covered_positions(docs)
+    cov = _corpus_covered_positions(docs)
     toks = docs.select(
         "doc_id", F.posexplode(tokens("text")).alias("p0", "tok")
     ).select("doc_id", (F.col("p0") + 1).alias("tpos"), "tok")
@@ -2348,7 +2267,7 @@ def exact_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def exact_substring_cut_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    covc = _covered_positions(docs).groupBy("doc_id").agg(
+    covc = _corpus_covered_positions(docs).groupBy("doc_id").agg(
         F.count("*").alias("n_cov")
     )
     j = (
@@ -2445,8 +2364,8 @@ def _span_inventory(flat: DataFrame) -> DataFrame:
 def incremental_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     is_delta = F.col("doc_id") % SPAN_DELTA_MOD == 0
-    base_flat, _ = _repeated_span_flat(docs.where(~is_delta))
-    delta_flat, _ = _repeated_span_flat(docs.where(is_delta))
+    base_flat = _span_flat(docs.where(~is_delta))
+    delta_flat = _span_flat(docs.where(is_delta))
     # Yesterday's materialized state: built once from base positions
     # and pinned — the refresh below never re-reads base_flat.
     base_inv = _span_inventory(base_flat).localCheckpoint(eager=True)
@@ -2461,34 +2380,40 @@ def incremental_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("nd") >= 2)
         .select("g")
     )
-    cov = (
-        delta_flat.join(rep, "g", "left_semi")
-        .select(
-            "doc_id",
-            "n_toks",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + (SPAN_N - 1))
-            ).alias("cp"),
-        )
-        .distinct()
-        .groupBy("doc_id", "n_toks")
-        .agg(F.count("*").alias("n_covered"))
+    return _doc_coverage(
+        docs.where(is_delta), _covered_positions(delta_flat, rep)
     )
-    return (
-        docs.where(is_delta)
-        .select(
-            "doc_id", F.size(tokens("text")).cast("long").alias("n_toks")
+
+
+def _stream_delta(
+    delta: DataFrame,
+    n_batches: int,
+    absorb: Callable[[DataFrame, int], None],
+) -> None:
+    """Replay ``delta`` as ``n_batches`` file-source micro-batches
+    (availableNow, one staged parquet file per trigger) through
+    ``foreachBatch(absorb)`` and wait for the stream to drain.  The
+    staging dir is removed on the way out, error or not: ``absorb``
+    must checkpoint (cut the lineage of) everything the caller reads
+    afterwards."""
+    tmp = tempfile.mkdtemp(prefix="delta_stream_")
+    try:
+        data_dir = f"{tmp}/delta"
+        delta.repartition(n_batches, "doc_id").write.parquet(data_dir)
+        stream = (
+            delta.sparkSession.readStream.schema(delta.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(data_dir)
         )
-        .join(cov.select("doc_id", "n_covered"), "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_toks",
-            F.coalesce("n_covered", F.lit(0)).cast("long").alias("n_covered"),
-            F.round(
-                F.coalesce("n_covered", F.lit(0)) / F.col("n_toks"), 6
-            ).alias("coverage"),
+        query = (
+            stream.writeStream.foreachBatch(absorb)
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
         )
-    )
+        query.awaitTermination()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # Micro-batches the streaming twin splits the delta into; the answer is
@@ -2505,15 +2430,12 @@ def _span_coverage_stream(
     """The foreachBatch state-table maintenance behind
     incremental_span_coverage_stream, with the micro-batch count
     exposed so the split-invariance test can sweep it."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, "documents", sf_dir)
     is_delta = F.col("doc_id") % SPAN_DELTA_MOD == 0
 
     # Yesterday's materialized state: the base corpus's span inventory,
     # built once and pinned — base POSITIONS are never read again.
-    base_flat, _ = _repeated_span_flat(docs.where(~is_delta))
+    base_flat = _span_flat(docs.where(~is_delta))
     state = {
         "inv": _span_inventory(base_flat).localCheckpoint(eager=True),
         "flat": None,
@@ -2531,8 +2453,7 @@ def _span_coverage_stream(
         # pattern): the state-merge job below reads flat through
         # _span_inventory and materializes the checkpoint on the way —
         # one job per batch instead of two, same cut.
-        flat, _ = _repeated_span_flat(batch_df)
-        flat = flat.localCheckpoint(eager=False)
+        flat = _span_flat(batch_df).localCheckpoint(eager=False)
         state["flat"] = (
             flat
             if state["flat"] is None
@@ -2546,66 +2467,17 @@ def _span_coverage_stream(
             .localCheckpoint(eager=True)
         )
 
-    tmp = tempfile.mkdtemp(prefix="span_stream_")
-    try:
-        data_dir = f"{tmp}/delta"
-        (
-            docs.where(is_delta)
-            .select("doc_id", "text")
-            .repartition(n_batches, "doc_id")
-            .write.parquet(data_dir)
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(absorb)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        # Everything the result depends on is checkpointed (lineage
-        # cut), so the staging dir can go before the caller collects.
-        shutil.rmtree(tmp, ignore_errors=True)
+    _stream_delta(
+        docs.where(is_delta).select("doc_id", "text"), n_batches, absorb
+    )
 
     rep = state["inv"].where(F.col("nd") >= 2).select("g")
     delta_flat = state["flat"]
     if delta_flat is None:  # no delta docs at all: all-zero coverage
-        cov = spark.createDataFrame(
-            [], "doc_id long, n_covered long"
-        )
+        cov = spark.createDataFrame([], "doc_id long, cp int")
     else:
-        cov = (
-            delta_flat.join(rep, "g", "left_semi")
-            .select(
-                "doc_id",
-                F.explode(
-                    F.sequence(F.col("pos"), F.col("pos") + (SPAN_N - 1))
-                ).alias("cp"),
-            )
-            .distinct()
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_covered"))
-        )
-    return (
-        docs.where(is_delta)
-        .select(
-            "doc_id", F.size(tokens("text")).cast("long").alias("n_toks")
-        )
-        .join(cov, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_toks",
-            F.coalesce("n_covered", F.lit(0)).cast("long").alias("n_covered"),
-            F.round(
-                F.coalesce("n_covered", F.lit(0)) / F.col("n_toks"), 6
-            ).alias("coverage"),
-        )
-    )
+        cov = _covered_positions(delta_flat, rep)
+    return _doc_coverage(docs.where(is_delta), cov)
 
 
 @register(
@@ -2651,9 +2523,6 @@ def _dedup_state_stream(
     """The foreachBatch state-table maintenance behind
     incremental_exact_dedup_stream, with the micro-batch count exposed
     so the split-invariance test can sweep it."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, "documents", sf_dir)
     is_delta = F.col("doc_id") % SPAN_DELTA_MOD == 0
 
@@ -2699,31 +2568,9 @@ def _dedup_state_stream(
         )
         state["agg"] = merged.localCheckpoint(eager=True)
 
-    tmp = tempfile.mkdtemp(prefix="dedup_stream_")
-    try:
-        data_dir = f"{tmp}/delta"
-        (
-            docs.where(is_delta)
-            .select("doc_id", "text")
-            .repartition(n_batches, "doc_id")
-            .write.parquet(data_dir)
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(absorb)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        # Everything the result depends on is checkpointed (lineage
-        # cut), so the staging dir can go before the caller collects.
-        shutil.rmtree(tmp, ignore_errors=True)
+    _stream_delta(
+        docs.where(is_delta).select("doc_id", "text"), n_batches, absorb
+    )
 
     agg = state["agg"]
     if agg is None:  # no delta docs at all

@@ -20,7 +20,18 @@ from ..operators.ml import kcenter_centroids, kmeans_centroids
 from ..operators.similarity import cosine, hard_negative_topk
 from ..operators.text import tokens
 from ..sources.loaders import load_table
-from .common import HH_THRESHOLD, KM_DIM, KM_ITERS, KM_K, _M, _idiv, _kmeans_ctes
+from .common import (
+    HH_THRESHOLD,
+    KM_DIM,
+    KM_ITERS,
+    KM_K,
+    _M,
+    _class_centroid_fit,
+    _idiv,
+    _kmeans_ctes,
+    _milli_int,
+    _pair_count_sums,
+)
 from .registry import register
 
 
@@ -1163,9 +1174,7 @@ def jl_projection_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFram
     emb = load_table(spark, "embeddings", sf_dir)
     m = emb.select(
         "vec_id",
-        F.transform(
-            "embedding", lambda e: F.round(e.cast("double") * 1000).cast("long")
-        ).alias("mv"),
+        _milli_int("embedding").alias("mv"),
     )
 
     def proj_col(j: int) -> Column:
@@ -1311,10 +1320,7 @@ def _pca_oracle() -> str:
 def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     mv = emb.select(
-        F.transform(
-            "embedding",
-            lambda e: F.round(e.cast("double") * 1000).cast("long"),
-        ).alias("mv")
+        _milli_int("embedding").alias("mv")
     )
     nn = emb.agg(F.count("*").alias("n"))
     # One narrow pass: row-local outer product via nested posexplode
@@ -1468,27 +1474,8 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials.""",
 )
 def nearest_centroid_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, "embeddings", sf_dir)
-    m = emb.select(
-        "vec_id",
-        "label",
-        (F.col("vec_id") % 3).alias("part"),
-        F.posexplode(
-            F.transform(
-                "embedding",
-                lambda e: F.round(e.cast("double") * 1000).cast("long"),
-            )
-        ).alias("pos", "v"),
-    ).select("vec_id", "label", "part", (F.col("pos") + 1).alias("i"), "v")
-    cent = (
-        m.where(F.col("part") == 0)
-        .groupBy(F.col("label").alias("cand"), "i")
-        .agg(
-            F.round(F.sum("v").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("c")
-        )
-    )
+    m, cent = _class_centroid_fit(load_table(spark, "embeddings", sf_dir))
+    cent = cent.withColumnRenamed("label", "cand")
     # Pinned |eval vectors| × |labels| distance frame (change-8 waist):
     # the per-vector min, the argmin join and the majority baseline all
     # read it, and without the cut each re-derived the dimension
@@ -2265,31 +2252,7 @@ def ivf_quantizer_stability_audit(
         .groupBy("ca", "cb")
         .agg(F.count("*").cast("long").alias("nij"))
     )
-
-    def pairs(c: Column) -> Column:
-        return _idiv(c * (c - 1), F.lit(2))
-
-    mt = cells.agg(
-        F.sum(pairs(F.col("nij"))).alias("matched"),
-        F.sum("nij").alias("n_vectors"),
-    )
-    ta = (
-        cells.groupBy("ca")
-        .agg(F.sum("nij").alias("ai"))
-        .agg(F.sum(pairs(F.col("ai"))).alias("full_pairs"))
-    )
-    tb = (
-        cells.groupBy("cb")
-        .agg(F.sum("nij").alias("bj"))
-        .agg(F.sum(pairs(F.col("bj"))).alias("half_pairs"))
-    )
-    z = (
-        mt.crossJoin(F.broadcast(ta))
-        .crossJoin(F.broadcast(tb))
-        .withColumn(
-            "tot", _idiv(F.col("n_vectors") * (F.col("n_vectors") - 1), F.lit(2))
-        )
-    )
+    z = _pair_count_sums(cells, "ca", "cb", "n_vectors", "full_pairs", "half_pairs")
     d = F.col
     exp_idx = d("full_pairs").cast("double") * d("half_pairs") / d("tot")
     ari_den = (d("full_pairs") + d("half_pairs")) / F.lit(2.0) - exp_idx

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import duckdb_hash32_sql, portable_hash32
 from ..operators.relational import bucketed_prefix_sums
 from ..sources.loaders import ensure_parallelism, load_table
-from .common import _STOPLIST_SQL, _idiv
+from .common import _STOPLIST_SQL, _class_centroid_fit, _idiv, _pair_count_sums
 from .probes import probe_min_max
 from .registry import register
 
@@ -2219,28 +2219,8 @@ def lang_id_agreement_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = pred.groupBy("true_lang", "lang_guess").agg(
         F.count("*").alias("nij")
     )
-
-    def pairs(c: Column) -> Column:
-        return _idiv(c * (c - 1), F.lit(2))
-
-    mt = cells.agg(
-        F.sum(pairs(F.col("nij"))).alias("matched"),
-        F.sum("nij").alias("n_docs"),
-    )
-    ta = (
-        cells.groupBy("true_lang")
-        .agg(F.sum("nij").alias("ai"))
-        .agg(F.sum(pairs(F.col("ai"))).alias("true_pairs"))
-    )
-    tb = (
-        cells.groupBy("lang_guess")
-        .agg(F.sum("nij").alias("bj"))
-        .agg(F.sum(pairs(F.col("bj"))).alias("pred_pairs"))
-    )
-    z = (
-        mt.crossJoin(F.broadcast(ta))
-        .crossJoin(F.broadcast(tb))
-        .withColumn("tot", _idiv(F.col("n_docs") * (F.col("n_docs") - 1), F.lit(2)))
+    z = _pair_count_sums(
+        cells, "true_lang", "lang_guess", "n_docs", "true_pairs", "pred_pairs"
     )
     d = F.col
     exp_idx = d("true_pairs").cast("double") * d("pred_pairs") / d("tot")
@@ -2663,27 +2643,7 @@ _CONF_BUCKETS = 32
     the oracle's global row_number states the same semantics.""",
 )
 def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, "embeddings", sf_dir)
-    m = emb.select(
-        "vec_id",
-        "label",
-        (F.col("vec_id") % 3).alias("part"),
-        F.posexplode(
-            F.transform(
-                "embedding",
-                lambda e: F.round(e.cast("double") * 1000).cast("long"),
-            )
-        ).alias("pos", "v"),
-    ).select("vec_id", "label", "part", (F.col("pos") + 1).alias("i"), "v")
-    cent = (
-        m.where(F.col("part") == 0)
-        .groupBy("label", "i")
-        .agg(
-            F.round(F.sum("v").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("c")
-        )
-    )
+    m, cent = _class_centroid_fit(load_table(spark, "embeddings", sf_dir))
     # Pinned per-vector score frame (change-8 waist; 3 slim columns,
     # one row per calibration/test vector): the calibration branch
     # reads it three ways (count/k probe, range probe, in-bucket rank)

@@ -35,6 +35,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 
 DIM = 64
 SPAN_N = 5
@@ -386,3 +387,33 @@ def test_stream_result_is_batch_count_invariant(spark, tmp_path):
         )
     assert results[0] == results[1] == results[2]
     assert len(results[0]) == 4  # all four delta docs reported
+
+
+def test_stream_harness_raises_absorb_errors_and_removes_staging(
+    spark, tmp_path, monkeypatch
+):
+    """The staging harness both state-table streams share: an error
+    raised inside ``absorb`` reaches the caller, and the staged delta
+    and stream checkpoint are removed on the way out."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from scats_transis_kinesis_spark.plans.dedup import _stream_delta
+
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(staging))
+    delta = spark.createDataFrame(
+        [(5, "a b c"), (10, "d e f")], "doc_id long, text string"
+    )
+    seen = []
+
+    def absorb(batch_df, batch_id):
+        seen.append(batch_id)
+        raise ValueError("absorb failed on purpose")
+
+    with pytest.raises(StreamingQueryException, match="absorb failed on purpose"):
+        _stream_delta(delta, 2, absorb)
+    assert seen == [0]
+    assert list(staging.iterdir()) == []
