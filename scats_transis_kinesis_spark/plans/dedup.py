@@ -264,18 +264,19 @@ def _cosine_pairs(
         F.col("v").alias("vb"),
         _norm(F.col("v")).alias("_nb"),
     )
+    score = F.round(
+        cosine_with_norms(F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")), 6
+    )
+    # The score comes out of a generator, so the threshold filter stays
+    # above the pair join and never becomes a join condition.  As one it
+    # would link the two vector sides, and cost-based join reordering
+    # (live whenever every input has row-count stats, e.g. cached or
+    # analyzed) could then join them first, as a nested loop over all
+    # vectors.  It also scores each pair once, not once for the
+    # condition and again for the output column.
     return (
         pair(ea, eb)
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                cosine_with_norms(
-                    F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
+        .select("id_a", "id_b", F.inline(F.array(F.struct(score.alias("cosine_sim")))))
         .where(F.col("cosine_sim") >= threshold)
     )
 

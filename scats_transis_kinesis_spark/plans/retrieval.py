@@ -1172,10 +1172,7 @@ def _jl_oracle() -> str:
 )
 def jl_projection_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    m = emb.select(
-        "vec_id",
-        _milli_int("embedding").alias("mv"),
-    )
+    m = emb.select("vec_id", _milli_int("embedding").alias("mv"))
 
     def proj_col(j: int) -> Column:
         signs = F.array(*[F.lit(s) for s in _JL_SIGNS[j]])
@@ -1319,9 +1316,7 @@ def _pca_oracle() -> str:
 )
 def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    mv = emb.select(
-        _milli_int("embedding").alias("mv")
-    )
+    mv = emb.select(_milli_int("embedding").alias("mv"))
     nn = emb.agg(F.count("*").alias("n"))
     # One narrow pass: row-local outer product via nested posexplode
     # (no self-join shuffle — the oracle's m⋈m on vec_id is row-local

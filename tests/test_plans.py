@@ -449,6 +449,37 @@ def test_no_unbounded_nested_loop_join_anywhere(spark):
     assert not bnl, f"undeclared nested-loop join in: {bnl}"
 
 
+def test_lsh_verify_stays_equi_join_with_cached_inputs(spark):
+    # Cost-based join reordering runs once every join input has
+    # row-count stats, as cached (or analyzed) inputs do.  The cosine
+    # threshold of the LSH verify step must then still not link the two
+    # vector sides: as a join condition it let the optimizer join them
+    # first, a nested loop over all vectors.
+    from scats_transis_kinesis_spark.plans.dedup import (
+        dedup_embedding_lsh,
+        dedup_embedding_lsh_recall,
+        lsh_banding_tradeoff_audit,
+    )
+    from scats_transis_kinesis_spark.sources.loaders import load_table
+
+    jvm = spark.sparkContext._jvm
+    try:
+        load_table(spark, "embeddings", SF_DIR).select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        ).cache().count()
+        # caches and fills both layouts' candidate frames
+        lsh_banding_tradeoff_audit(spark, SF_DIR).collect()
+        for build in (dedup_embedding_lsh, dedup_embedding_lsh_recall):
+            plan = jvm.PythonSQLUtils.explainString(
+                build(spark, SF_DIR)._jdf.queryExecution(), "formatted"
+            )
+            assert "InMemoryRelation" in plan, build.__name__
+            assert "BroadcastNestedLoopJoin" not in plan, build.__name__
+            assert "CartesianProduct" not in plan, build.__name__
+    finally:
+        spark.catalog.clearCache()
+
+
 def test_cbo_consumes_analyzed_table_statistics(spark, tmp_path):
     """Statistics-driven planning (SCALE.md §6.9): with CBO on, ANALYZE
     TABLE feeds exact row counts and column NDVs into Catalyst's
