@@ -15,21 +15,54 @@ which is how production batch PageRank is usually run anyway.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DAMPING = 0.85
+ITERATIONS = 3
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-    iterations: int = 3,
-    damping: float = DAMPING,
-) -> DataFrame:
-    """Weighted PageRank over an edge list, ``iterations`` rounds.
+def _normalized_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The loop invariants of both PageRanks over a ``(src, dst,
+    weight)`` edge list, cached: the node set ``(node)`` and the
+    out-weight-normalized edges ``(_u, _v, _w)``.
+
+    Cached (same pattern as ml.kmeans_assign and
+    dedup.connected_components): every round joins ``norm`` and
+    ``nodes``, so without the cache each round re-scans and
+    re-normalizes the edge list.  The caller unpersists both."""
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .cache()
+    )
+    out_w = edges.groupBy("src").agg(F.sum("weight").alias("_out_total"))
+    norm = (
+        edges.join(out_w, "src")
+        .select(
+            F.col("src").alias("_u"),
+            F.col("dst").alias("_v"),
+            (F.col("weight") / F.col("_out_total")).alias("_w"),
+        )
+        .cache()
+    )
+    return nodes, norm
+
+
+def _contrib(ranks: DataFrame, norm: DataFrame) -> DataFrame:
+    """One round's in-flow ``(node, _in)``: Σ rank(u)·w(u,v)/out(u)
+    over each node's in-edges — one keyed join and one grouped sum."""
+    return (
+        ranks.join(norm, ranks.node == norm._u)
+        .groupBy(F.col("_v").alias("node"))
+        .agg(F.sum(F.col("rank") * F.col("_w")).alias("_in"))
+    )
+
+
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Weighted PageRank over a ``(src, dst, weight)`` edge list,
+    ``ITERATIONS`` rounds with damping ``DAMPING`` → ``(node, rank)``.
 
     rank_{t+1}(v) = (1-d)/N + d * Σ_{(u,v)∈E} rank_t(u) * w(u,v)/out(u)
 
@@ -38,43 +71,18 @@ def pagerank(
     ``dst`` — two keyed exchanges over data partitioned by node id, no
     driver collection, no global ordering anywhere.  At 100 TB the
     edge frame is the big side; it is normalized ONCE up front and
-    re-used every round (cache it for iterative jobs).
+    re-used every round.
     """
-    # Loop invariants cached (same pattern as ml.kmeans_assign and
-    # dedup.connected_components): every iteration joins `norm` and
-    # `nodes`, so without the cache each round re-scans and re-normalizes
-    # the edge list — 3 redundant full scans+joins at 100 TB.
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .cache()
-    )
-    out_w = edges.groupBy(src).agg(F.sum(weight).alias("_out_total"))
-    norm = (
-        edges.join(out_w, src)
-        .select(
-            F.col(src).alias("_u"),
-            F.col(dst).alias("_v"),
-            (F.col(weight) / F.col("_out_total")).alias("_w"),
-        )
-        .cache()
-    )
-
+    nodes, norm = _normalized_edges(edges)
     n_nodes = nodes.count()
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    base = (1.0 - damping) / n_nodes
-    for _ in range(iterations):
-        contrib = (
-            ranks.join(norm, ranks.node == norm._u)
-            .groupBy(F.col("_v").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("_w")).alias("_in"))
-        )
+    base = (1.0 - DAMPING) / n_nodes
+    for _ in range(ITERATIONS):
         ranks = (
-            nodes.join(contrib, "node", "left")
+            nodes.join(_contrib(ranks, norm), "node", "left")
             .select(
                 "node",
-                (F.lit(base) + damping * F.coalesce(F.col("_in"), F.lit(0.0))).alias(
+                (F.lit(base) + DAMPING * F.coalesce(F.col("_in"), F.lit(0.0))).alias(
                     "rank"
                 ),
             )
@@ -89,9 +97,36 @@ def pagerank(
     return ranks
 
 
-def triangle_count(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
-    """Exact triangle count over an undirected edge list → one row
-    ``(n_vertices, n_edges, n_triangles)``.
+def endpoint_degrees(edges: DataFrame) -> DataFrame:
+    """``(vertex, d)``: how many edges of an undirected ``(u, v)`` edge
+    list touch each vertex — one grouped count over both endpoints."""
+    return (
+        edges.select(F.col("u").alias("vertex"))
+        .unionAll(edges.select(F.col("v").alias("vertex")))
+        .groupBy("vertex")
+        .agg(F.count("*").alias("d"))
+    )
+
+
+def both_directions(edges: DataFrame) -> DataFrame:
+    """An undirected ``(u, v)`` edge list as directed ``(src, dst)``
+    edges, each edge once in each direction."""
+    return edges.selectExpr("u AS src", "v AS dst").unionByName(
+        edges.selectExpr("v AS src", "u AS dst")
+    )
+
+
+def top_degree_vertex(bi_edges: DataFrame):
+    """The ``src`` of a directed ``(src, dst, ...)`` edge list with the
+    most edges, the lowest id among ties (``ORDER BY degree DESC, id
+    ASC``), collected to the driver."""
+    deg = bi_edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    return deg.orderBy(F.desc("d"), F.asc("src")).limit(1).collect()[0]["src"]
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Exact triangle count over an undirected ``(u, v)`` edge list →
+    one row ``(n_vertices, n_edges, n_triangles)``.
 
     ``edges`` must carry one row per undirected edge (``u < v``,
     distinct, no self-loops); callers with an expensive edge lineage
@@ -106,17 +141,11 @@ def triangle_count(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     never emits deg² wedge candidates — the skew defense that makes the
     join shape survive power-law graphs at 100 TB.  Each triangle is
     counted exactly once via its unique cyclic orientation."""
-    e = edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
-    deg = (
-        e.select(F.col("u").alias("vertex"))
-        .unionAll(e.select(F.col("v").alias("vertex")))
-        .groupBy("vertex")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = endpoint_degrees(edges)
     du, dv = deg.alias("du"), deg.alias("dv")
     with_deg = (
-        e.join(du, e.u == F.col("du.vertex"))
-        .join(dv, e.v == F.col("dv.vertex"))
+        edges.join(du, edges.u == F.col("du.vertex"))
+        .join(dv, edges.v == F.col("dv.vertex"))
         .select("u", "v", F.col("du.d").alias("d_u"), F.col("dv.d").alias("d_v"))
     )
     u_first = (F.col("d_u") < F.col("d_v")) | (
@@ -146,7 +175,7 @@ def triangle_count(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     )
     tri = closed.agg(F.count("*").alias("n_triangles"))
     nv = deg.agg(F.count("*").alias("n_vertices"))
-    ne = e.agg(F.count("*").alias("n_edges"))
+    ne = edges.agg(F.count("*").alias("n_edges"))
     return (
         F.broadcast(nv)
         .crossJoin(F.broadcast(ne))
@@ -155,12 +184,10 @@ def triangle_count(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     )
 
 
-def lpa_communities(
-    edges: DataFrame, rounds: int = 2, u: str = "u", v: str = "v"
-) -> DataFrame:
+def lpa_communities(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """Synchronous label propagation (Raghavan et al.) over an
-    undirected edge list, a FIXED number of rounds → ``(vertex,
-    community)`` for every vertex with at least one edge.
+    undirected ``(u, v)`` edge list, a FIXED number of rounds →
+    ``(vertex, community)`` for every vertex with at least one edge.
 
     Labels start as vertex ids; each round every vertex adopts the most
     frequent label among its neighbors (ties → smallest label).  The
@@ -173,20 +200,16 @@ def lpa_communities(
     count, one window partitioned by vertex for the argmax.  All
     shuffles are keyed by vertex; a hub receives one row per DISTINCT
     neighbor label (the grouped pre-count), not per neighbor."""
-    from pyspark.sql import Window as W
-
     if rounds < 1:
         raise ValueError(f"lpa_communities needs rounds >= 1, got {rounds}")
-    bi = edges.select(
-        F.col(u).alias("src"), F.col(v).alias("dst")
-    ).unionAll(edges.select(F.col(v).alias("src"), F.col(u).alias("dst")))
+    bi = both_directions(edges)
     # Round 1 from identity labels: neighbor labels ARE the neighbor ids.
     labels = bi.withColumnRenamed("dst", "lbl")
     lab = None
     for _ in range(rounds):
         counted = labels.groupBy("src", "lbl").agg(F.count("*").alias("n"))
         pick = F.row_number().over(
-            W.partitionBy("src").orderBy(F.desc("n"), F.col("lbl"))
+            Window.partitionBy("src").orderBy(F.desc("n"), F.col("lbl"))
         )
         lab = (
             counted.withColumn("rn", pick)
@@ -197,47 +220,34 @@ def lpa_communities(
     return lab.select("vertex", F.col("lbl").alias("community"))
 
 
-def bfs_distances(
-    bi_edges: DataFrame,
-    source,
-    max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Bounded-depth BFS: ``(v, hop)`` with the minimal hop count from
-    ``source`` for every vertex reachable within ``max_hops``.
+def bfs_distances(bi_edges: DataFrame, source, max_hops: int) -> DataFrame:
+    """Bounded-depth BFS over a directed ``(src, dst)`` edge list:
+    ``(v, hop)`` with the minimal hop count from ``source`` for every
+    vertex reachable within ``max_hops``.
 
     Each round is frontier ⋈ adjacency (keyed equi-join — AQE
     broadcasts while the frontier is small), a ``distinct``, and an
-    anti-join against the visited set, eagerly ``localCheckpoint``-ed
-    so the lineage stays one round deep.  Rounds are bounded by
-    ``max_hops``; the per-round emptiness probe is a bounded scalar
-    job.  The anti-join makes the first reach win, so hop IS the BFS
-    distance without any min-aggregation.
+    anti-join against the visited set, lazily ``localCheckpoint``-ed
+    so the lineage stays one round deep; the per-round emptiness probe
+    (a bounded scalar job) materializes the checkpoint, so a round is
+    one job.  The visited set is the lazy union of the per-hop
+    checkpoints.  Rounds are bounded by ``max_hops``.  The anti-join
+    makes the first reach win, so hop IS the BFS distance without any
+    min-aggregation.
     """
     if max_hops < 0:
         raise ValueError(f"bfs_distances needs max_hops >= 0, got {max_hops}")
-    bi = bi_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     visited = (
-        bi.select(F.col("src").alias("v"))
+        bi_edges.select(F.col("src").alias("v"))
         .where(F.col("v") == source)
         .distinct()
         .withColumn("hop", F.lit(0))
         .localCheckpoint(eager=True)
     )
-    # Round-10 optimization (guide §1.2 step 1 — one job per round).
-    # Each round used to pay THREE jobs: an eager checkpoint of the
-    # frontier, the emptiness probe, and an eager re-checkpoint of the
-    # whole visited union (which re-copied every previously visited row
-    # each round — O(|V|·depth) copies over the traversal).  Now the
-    # frontier checkpoint is lazy and the per-round count() is the job
-    # that materializes it, and the visited set stays a lazy union of
-    # the already-checkpointed per-hop frontiers — the anti-join reads
-    # k checkpoint scans instead of a re-materialized copy.
     frontier = visited.select("v")
     for hop in range(1, max_hops + 1):
         nxt = (
-            frontier.join(bi, frontier["v"] == bi["src"])
+            frontier.join(bi_edges, frontier["v"] == bi_edges["src"])
             .select(F.col("dst").alias("v"))
             .distinct()
             .join(visited.select("v"), "v", "left_anti")
@@ -251,17 +261,10 @@ def bfs_distances(
     return visited
 
 
-def pagerank_personalized(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-    iterations: int = 3,
-    damping: float = DAMPING,
-) -> DataFrame:
-    """Personalized PageRank: teleport mass returns to the seed set
-    instead of spreading uniformly —
+def pagerank_personalized(edges: DataFrame, seeds: DataFrame) -> DataFrame:
+    """Personalized PageRank over a ``(src, dst, weight)`` edge list,
+    ``ITERATIONS`` rounds with damping ``DAMPING``: teleport mass
+    returns to the seed set instead of spreading uniformly —
 
     rank_{t+1}(v) = (1-d)·tele(v) + d · Σ_{(u,v)∈E} rank_t(u)·w(u,v)/out(u)
 
@@ -273,22 +276,7 @@ def pagerank_personalized(
     the same node-sized join.  ``seeds`` is a 1-column node frame; the
     only extra driver traffic is its bounded count.
     """
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .cache()
-    )
-    out_w = edges.groupBy(src).agg(F.sum(weight).alias("_out_total"))
-    norm = (
-        edges.join(out_w, src)
-        .select(
-            F.col(src).alias("_u"),
-            F.col(dst).alias("_v"),
-            (F.col(weight) / F.col("_out_total")).alias("_w"),
-        )
-        .cache()
-    )
+    nodes, norm = _normalized_edges(edges)
     # Materialize the loop-invariant caches BEFORE building the lazy
     # 3-round plan (the classic pagerank gets this for free from its
     # n_nodes count): without it the 5-join edge construction under
@@ -311,17 +299,12 @@ def pagerank_personalized(
         .cache()
     )
     ranks = tele.select("node", F.col("_tele").alias("rank"))
-    for _ in range(iterations):
-        contrib = (
-            ranks.join(norm, ranks.node == norm._u)
-            .groupBy(F.col("_v").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("_w")).alias("_in"))
-        )
-        ranks = tele.join(contrib, "node", "left").select(
+    for _ in range(ITERATIONS):
+        ranks = tele.join(_contrib(ranks, norm), "node", "left").select(
             "node",
             (
-                F.lit(1.0 - damping) * F.col("_tele")
-                + damping * F.coalesce(F.col("_in"), F.lit(0.0))
+                F.lit(1.0 - DAMPING) * F.col("_tele")
+                + DAMPING * F.coalesce(F.col("_in"), F.lit(0.0))
             ).alias("rank"),
         )
     ranks = ranks.localCheckpoint(eager=True)
@@ -330,15 +313,13 @@ def pagerank_personalized(
     return ranks
 
 
-def kcore_peel(
-    edges: DataFrame, k: int, rounds: int, u: str = "u", v: str = "v"
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Fixed-round k-core peeling (Seidman '83 coreness, the bounded
-    synchronous variant): each round computes degrees over the
-    surviving subgraph, drops every vertex with degree < ``k``, and
-    restricts the edge list to survivors.  Returns ``(vertex,
-    core_degree)`` — each surviving vertex with its degree INSIDE the
-    round-``rounds`` subgraph.
+    synchronous variant) of an undirected ``(u, v)`` edge list: each
+    round computes degrees over the surviving subgraph, drops every
+    vertex with degree < ``k``, and restricts the edge list to
+    survivors.  Returns ``(vertex, core_degree)`` — each surviving
+    vertex with its degree INSIDE the round-``rounds`` subgraph.
 
     The true k-core is the fixpoint; the fixed round count is the
     deterministic cross-engine contract (the LPA / k-means trick) —
@@ -353,10 +334,10 @@ def kcore_peel(
     stays flat.  All shuffles are keyed by vertex id."""
     if rounds < 1:
         raise ValueError(f"kcore_peel needs rounds >= 1, got {rounds}")
-    alive = edges.select(u, v)
+    alive = edges
     for _ in range(rounds):
-        bi = alive.select(F.col(u).alias("x")).unionAll(
-            alive.select(F.col(v).alias("x"))
+        bi = alive.select(F.col("u").alias("x")).unionAll(
+            alive.select(F.col("v").alias("x"))
         )
         keep = (
             bi.groupBy("x")
@@ -365,13 +346,13 @@ def kcore_peel(
             .select("x")
         )
         alive = (
-            alive.join(keep.withColumnRenamed("x", u), u, "leftsemi")
-            .join(keep.withColumnRenamed("x", v), v, "leftsemi")
+            alive.join(keep.withColumnRenamed("x", "u"), "u", "leftsemi")
+            .join(keep.withColumnRenamed("x", "v"), "v", "leftsemi")
             .localCheckpoint(eager=True)
         )
     return (
-        alive.select(F.col(u).alias("vertex"))
-        .unionAll(alive.select(F.col(v).alias("vertex")))
+        alive.select(F.col("u").alias("vertex"))
+        .unionAll(alive.select(F.col("v").alias("vertex")))
         .groupBy("vertex")
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
     )

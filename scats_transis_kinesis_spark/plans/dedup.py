@@ -1999,18 +1999,23 @@ def lsh_banding_tradeoff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    # Persisted: each verified-pair frame feeds BOTH its per-layout
-    # count and the cross-layout union, and each candidate frame feeds
-    # BOTH its count and the verify join — without the pin Spark
-    # recomputes the banded self-join once per consuming aggregate
-    # (measured 8.6 s → 3.8 s isolated min-of-3 at sf0.1).  Same cache
-    # contract as boilerplate_shingle_prune: one query's lifetime,
-    # cleared by the harnesses between queries; at 100 TB these are
-    # explicit checkpoints of slim id-pair tables.
-    p_cand = _banded_candidates(e, LSH_BANDS, LSH_BITS).persist()
-    r_cand = _banded_candidates(e, R_BANDS, R_BITS).persist()
-    p_ver = _verified_pairs(p_cand, e).select("id_a", "id_b").persist()
-    r_ver = _verified_pairs(r_cand, e).select("id_a", "id_b").persist()
+    # Pinned: each verified-pair frame feeds BOTH its per-layout count
+    # and the cross-layout union, and each candidate frame feeds BOTH
+    # its count and the verify join — without the pin Spark recomputes
+    # the banded self-join once per consuming aggregate (measured
+    # 8.6 s → 3.8 s isolated min-of-3 at sf0.1).  The pins are lazy
+    # localCheckpoints, not caches: the returned frame's action fills
+    # them, and they leave no CacheManager entry behind for a later
+    # query to be planned against.  At 100 TB these are explicit
+    # checkpoints of slim id-pair tables.
+    p_cand = _banded_candidates(e, LSH_BANDS, LSH_BITS).localCheckpoint(eager=False)
+    r_cand = _banded_candidates(e, R_BANDS, R_BITS).localCheckpoint(eager=False)
+    p_ver = (
+        _verified_pairs(p_cand, e).select("id_a", "id_b").localCheckpoint(eager=False)
+    )
+    r_ver = (
+        _verified_pairs(r_cand, e).select("id_a", "id_b").localCheckpoint(eager=False)
+    )
     uni = (
         p_ver.unionByName(r_ver)
         .distinct()

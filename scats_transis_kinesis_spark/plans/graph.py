@@ -10,33 +10,32 @@ fixed number of synchronous rounds in exact integer micros.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.pairs import pack_pair, unpack_pair
-from ..operators.graph import bfs_distances
+from ..operators.graph import (
+    DAMPING,
+    ITERATIONS,
+    bfs_distances,
+    both_directions,
+    endpoint_degrees,
+    kcore_peel,
+    lpa_communities,
+    pagerank,
+    pagerank_personalized,
+    top_degree_vertex,
+    triangle_count,
+)
 from ..sources.loaders import load_table
 from .common import _idiv
 from .registry import register
 
 
-def _pagerank_oracle(iterations: int = 3, d: float = 0.85) -> str:
-    """Unrolled fixed-iteration PageRank (same recurrence as
-    operators/graph.py:pagerank, sink-leak semantics included)."""
-    iters = []
-    for k in range(1, iterations + 1):
-        iters.append(f"""
-        r{k} AS (
-            SELECT n.node,
-                   (1 - {d}) / (SELECT count(*) FROM nodes)
-                   + {d} * coalesce(sum(p.rank * e.wn), 0) AS rank
-            FROM nodes n
-            LEFT JOIN nrm e ON e.v = n.node
-            LEFT JOIN r{k - 1} p ON p.node = e.u
-            GROUP BY n.node
-        )""")
-    return f"""
-        WITH edges AS (
+# The nation-level trade graph (customer nation → supplier nation, edge
+# weight = line count), its node set and its out-weight-normalized
+# edges: the CTEs both PageRank oracles start from.
+_TRADE_GRAPH_CTES = """edges AS (
             SELECT cn.n_name AS src, sn.n_name AS dst, count(*)::DOUBLE AS w
             FROM lineitem l
             JOIN orders o ON o.o_orderkey = l.l_orderkey
@@ -51,18 +50,41 @@ def _pagerank_oracle(iterations: int = 3, d: float = 0.85) -> str:
             SELECT src AS u, dst AS v,
                    w / sum(w) OVER (PARTITION BY src) AS wn
             FROM edges
-        ),
+        )"""
+
+
+def _pagerank_oracle() -> str:
+    """Unrolled fixed-iteration PageRank (same recurrence as
+    operators/graph.py:pagerank, sink-leak semantics included)."""
+    d = DAMPING
+    iters = []
+    for k in range(1, ITERATIONS + 1):
+        iters.append(f"""
+        r{k} AS (
+            SELECT n.node,
+                   (1 - {d}) / (SELECT count(*) FROM nodes)
+                   + {d} * coalesce(sum(p.rank * e.wn), 0) AS rank
+            FROM nodes n
+            LEFT JOIN nrm e ON e.v = n.node
+            LEFT JOIN r{k - 1} p ON p.node = e.u
+            GROUP BY n.node
+        )""")
+    return f"""
+        WITH {_TRADE_GRAPH_CTES},
         r0 AS (
             SELECT node, 1.0 / (SELECT count(*) FROM nodes) AS rank FROM nodes
         ),{','.join(iters)}
-        SELECT node, round(rank, 6) AS rank FROM r{iterations}
+        SELECT node, round(rank, 6) AS rank FROM r{ITERATIONS}
     """
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nation-level trade graph (customer nation → supplier nation,
     edge weight = line count) — shared by the classic and personalized
-    PageRank queries."""
+    PageRank queries.  Pinned with a lazy localCheckpoint: the PageRank
+    operators read it twice (node set and normalized edges), and unlike
+    a cache the pin leaves no entry in the session's CacheManager once
+    the query is done."""
     li = load_table(spark, "lineitem", sf_dir)
     o = load_table(spark, "orders", sf_dir)
     c = load_table(spark, "customer", sf_dir)
@@ -82,7 +104,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sn), s.s_nationkey == F.col("s_nk"))
         .groupBy("src", "dst")
         .agg(F.count("*").cast("double").alias("weight"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
 
 
@@ -100,10 +122,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     with keyed shuffles).""",
 )
 def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import pagerank
-
-    edges = _trade_edges(spark, sf_dir)
-    ranks = pagerank(edges, iterations=3)
+    ranks = pagerank(_trade_edges(spark, sf_dir))
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -113,13 +132,14 @@ def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 PPR_SEEDS = ("NATION_0", "NATION_7", "NATION_13", "NATION_21")
 
 
-def _ppr_oracle(iterations: int = 3, d: float = 0.85) -> str:
+def _ppr_oracle() -> str:
     """Unrolled personalized PageRank — the :func:`_pagerank_oracle`
     recurrence with the uniform base term replaced by the seed-set
     teleport distribution (rank_0 = tele)."""
+    d = DAMPING
     seed_values = ", ".join(f"('{s}')" for s in PPR_SEEDS)
     iters = []
-    for k in range(1, iterations + 1):
+    for k in range(1, ITERATIONS + 1):
         iters.append(f"""
         r{k} AS (
             SELECT t.node,
@@ -131,22 +151,7 @@ def _ppr_oracle(iterations: int = 3, d: float = 0.85) -> str:
             GROUP BY t.node, t.tl
         )""")
     return f"""
-        WITH edges AS (
-            SELECT cn.n_name AS src, sn.n_name AS dst, count(*)::DOUBLE AS w
-            FROM lineitem l
-            JOIN orders o ON o.o_orderkey = l.l_orderkey
-            JOIN customer c ON c.c_custkey = o.o_custkey
-            JOIN supplier s ON s.s_suppkey = l.l_suppkey
-            JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-            JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-            GROUP BY 1, 2
-        ),
-        nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        nrm AS (
-            SELECT src AS u, dst AS v,
-                   w / sum(w) OVER (PARTITION BY src) AS wn
-            FROM edges
-        ),
+        WITH {_TRADE_GRAPH_CTES},
         seeds AS (SELECT node FROM (VALUES {seed_values}) t(node)),
         tele AS (
             SELECT n.node,
@@ -156,7 +161,7 @@ def _ppr_oracle(iterations: int = 3, d: float = 0.85) -> str:
             FROM nodes n LEFT JOIN seeds s ON s.node = n.node
         ),
         r0 AS (SELECT node, tl AS rank FROM tele),{','.join(iters)}
-        SELECT node, round(rank, 6) AS rank FROM r{iterations}
+        SELECT node, round(rank, 6) AS rank FROM r{ITERATIONS}
     """
 
 
@@ -175,18 +180,16 @@ def _ppr_oracle(iterations: int = 3, d: float = 0.85) -> str:
     unrolls the identical recurrence.""",
 )
 def ppr_nation_trade_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import pagerank_personalized
-
     edges = _trade_edges(spark, sf_dir)
     seeds = spark.createDataFrame([(s,) for s in PPR_SEEDS], "node string")
-    ranks = pagerank_personalized(edges, seeds, iterations=3)
+    ranks = pagerank_personalized(edges, seeds)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
 # Shared CTE text for the 1995 co-purchase graph, used by the triangle,
 # community and association-rule oracles (ONE definition of the date
-# window and basket/edge canonicalization — the Spark twin is
-# _copurchase_lines/_copurchase_edges below).
+# window and basket/edge canonicalization — the Spark twins are
+# _copurchase_baskets/_copurchase_edges below).
 _COPURCHASE_LINES_CTE = """lines AS (
             SELECT DISTINCT l.l_orderkey AS ok, l.l_partkey AS pk
             FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -197,16 +200,24 @@ _COPURCHASE_EDGE_CTES = f"""{_COPURCHASE_LINES_CTE}, edges AS (
             SELECT DISTINCT a.pk AS u, b.pk AS v
             FROM lines a JOIN lines b ON a.ok = b.ok AND a.pk < b.pk
         )"""
+# The endpoint degree of every vertex of ``edges`` (the oracle twin of
+# operators/graph.py:endpoint_degrees), and ``edges`` in both directions.
+_DEG_CTE = """deg AS (
+            SELECT x AS vertex, count(*)::BIGINT AS d
+            FROM (SELECT u AS x FROM edges UNION ALL SELECT v FROM edges)
+            GROUP BY x
+        )"""
+_BI_CTE = """bi AS (
+            SELECT u AS src, v AS dst FROM edges
+            UNION ALL
+            SELECT v AS src, u AS dst FROM edges
+        )"""
 
 
 @register(
     "triangle_count_copurchase",
     oracle=f"""
-        WITH {_COPURCHASE_EDGE_CTES}, deg AS (
-            SELECT x AS vertex, count(*)::BIGINT AS d
-            FROM (SELECT u AS x FROM edges UNION ALL SELECT v FROM edges)
-            GROUP BY x
-        ), oriented AS (
+        WITH {_COPURCHASE_EDGE_CTES}, {_DEG_CTE}, oriented AS (
             SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END
                        AS src,
                    CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END
@@ -244,50 +255,54 @@ _COPURCHASE_EDGE_CTES = f"""{_COPURCHASE_LINES_CTE}, edges AS (
     is counted exactly once (its unique cyclic orientation).""",
 )
 def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import triangle_count
-
     return triangle_count(_copurchase_edges(spark, sf_dir))
 
 
 LPA_ROUNDS = 2
 
 
-def _copurchase_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Each 1995 order's SORTED DISTINCT part array ``(ok, ps)`` — the
-    round-10 basket representation behind the co-purchase pair
-    builders (guide §2.4).  One exchange builds it (``collect_set``
-    dedups inside the aggregate); flat basket rows come back with a
-    narrow ``explode``, and within-basket pairs with chained
-    generators (``_basket_pairs``) instead of an ok self-join — which,
-    across a localCheckpoint (whose partitioning AQE forgets), paid
-    TWO more full exchanges.  Eagerly checkpointed for consumers that
-    read it more than once; per-basket memory is |basket| longs, so
-    the whale-basket economics match the flat form."""
-    li = load_table(spark, "lineitem", sf_dir)
-    orders = load_table(spark, "orders", sf_dir)
-    return (
-        li.join(
-            orders.where(
-                (F.col("o_orderdate") >= F.lit("1995-01-01").cast("date"))
-                & (F.col("o_orderdate") < F.lit("1996-01-01").cast("date"))
-            ).select("o_orderkey"),
-            li.l_orderkey == F.col("o_orderkey"),
-        )
-        .groupBy(F.col("l_orderkey").alias("ok"))
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .localCheckpoint(eager=True)
+def _orders_1995(orders: DataFrame) -> DataFrame:
+    """The orders placed in 1995 — the window of every co-purchase and
+    purchase graph of this family."""
+    return orders.where(
+        "o_orderdate >= DATE '1995-01-01' AND o_orderdate < DATE '1996-01-01'"
     )
 
 
-def _basket_pairs(baskets: DataFrame) -> DataFrame:
+def _basket_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each 1995 order's SORTED DISTINCT part array ``(ok, ps)``, lazy —
+    the basket representation behind the co-purchase pair builders
+    (guide §2.4).  One exchange builds it (``collect_set`` dedups
+    inside the aggregate); flat basket rows come back with a narrow
+    ``explode``, and within-basket pairs with chained generators
+    (:func:`_basket_pairs`) instead of an ok self-join, which across a
+    localCheckpoint (whose partitioning AQE forgets) pays two more full
+    exchanges.  Per-basket memory is |basket| longs, so the
+    whale-basket economics match the flat form."""
+    li = load_table(spark, "lineitem", sf_dir)
+    orders = _orders_1995(load_table(spark, "orders", sf_dir))
+    return (
+        li.join(orders.select("o_orderkey"), li.l_orderkey == F.col("o_orderkey"))
+        .groupBy(F.col("l_orderkey").alias("ok"))
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
+    )
+
+
+def _copurchase_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_basket_arrays`, eagerly checkpointed for consumers that
+    read it more than once."""
+    return _basket_arrays(spark, sf_dir).localCheckpoint(eager=True)
+
+
+def _basket_pairs(baskets: DataFrame, *carry: str) -> DataFrame:
     """The ``u < v`` within-basket pairs of a ``(ok, ps)`` basket-array
-    frame, one row per (basket, pair), as a narrow codegen'd
-    generator pipeline: ``posexplode`` picks ``u`` and its position,
-    ``slice(ps, i + 2, ...)`` yields exactly the strictly-greater
-    elements (``ps`` is sorted).  Bit-identical to the old ok
-    self-join's pair multiset (verified value-equal at sf0.1) with no
-    join and no exchange."""
-    return baskets.select("ps", F.posexplode("ps").alias("i", "u")).select(
+    frame, one row per (basket, pair), carrying the ``carry`` columns,
+    as a narrow codegen'd generator pipeline: ``posexplode`` picks
+    ``u`` and its position, ``slice(ps, i + 2, ...)`` yields exactly
+    the strictly-greater elements (``ps`` is sorted).  The pair
+    multiset of an ok self-join with no join and no exchange."""
+    return baskets.select(*carry, "ps", F.posexplode("ps").alias("i", "u")).select(
+        *carry,
         "u",
         F.explode(F.expr("slice(ps, i + 2, size(ps) - i - 1)")).alias("v"),
     )
@@ -298,41 +313,20 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``u < v`` — the shared graph behind the triangle and community
     queries.  Eagerly checkpointed: every consumer reads the edge list
     several times, and at 100 TB this is a written adjacency table, not
-    a recomputed lineage."""
-    # Round-10 optimization (guide §2.4 — remove shuffles outright):
-    # the old shape materialized the distinct basket lines (one
-    # exchange), then self-joined them on ok — and because a
-    # localCheckpoint under AQE forgets its partitioning, the self-join
-    # re-exchanged BOTH sides (verified: no ReusedExchange fires across
-    # the checkpoint scan).  The basket-array build (one exchange) +
-    # generator pair emission replaces all of that; the baskets are
-    # built inline (not checkpointed) since this helper only reads
-    # them once on the way to the edge checkpoint.  2.5 s → 1.5 s
-    # isolated at sf0.1, bit-identical edge set (value-equal checked).
-    li = load_table(spark, "lineitem", sf_dir)
-    orders = load_table(spark, "orders", sf_dir)
-    baskets = (
-        li.join(
-            orders.where(
-                (F.col("o_orderdate") >= F.lit("1995-01-01").cast("date"))
-                & (F.col("o_orderdate") < F.lit("1996-01-01").cast("date"))
-            ).select("o_orderkey"),
-            li.l_orderkey == F.col("o_orderkey"),
-        )
-        .groupBy(F.col("l_orderkey").alias("ok"))
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
+    a recomputed lineage.  The baskets are built inline, not
+    checkpointed: they are read once on the way to the edge
+    checkpoint."""
+    return (
+        _basket_pairs(_basket_arrays(spark, sf_dir))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
-    return _basket_pairs(baskets).distinct().localCheckpoint(eager=True)
 
 
 @register(
     "lpa_community_labels",
     oracle=f"""
-        WITH {_COPURCHASE_EDGE_CTES}, bi AS (
-            SELECT u AS src, v AS dst FROM edges
-            UNION ALL
-            SELECT v AS src, u AS dst FROM edges
-        ), l1 AS (
+        WITH {_COPURCHASE_EDGE_CTES}, {_BI_CTE}, l1 AS (
             SELECT src AS vertex, dst AS lbl
             FROM (
                 SELECT src, dst, count(*) AS n FROM bi GROUP BY src, dst
@@ -366,8 +360,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor).""",
 )
 def lpa_community_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import lpa_communities
-
     return lpa_communities(_copurchase_edges(spark, sf_dir), rounds=LPA_ROUNDS)
 
 
@@ -467,11 +459,7 @@ LINK_TOPK = 20
 @register(
     "link_prediction_scores",
     oracle=f"""
-        WITH {_COPURCHASE_EDGE_CTES}, deg AS (
-            SELECT x AS vertex, count(*)::BIGINT AS d
-            FROM (SELECT u AS x FROM edges UNION ALL SELECT v FROM edges)
-            GROUP BY x
-        ), adj AS (
+        WITH {_COPURCHASE_EDGE_CTES}, {_DEG_CTE}, adj AS (
             SELECT u AS w, v AS n FROM edges
             UNION ALL
             SELECT v AS w, u AS n FROM edges
@@ -693,11 +681,7 @@ def copurchase_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "bfs_hops_from_hub",
     oracle=f"""
-        WITH RECURSIVE {_COPURCHASE_EDGE_CTES}, bi AS (
-            SELECT u AS src, v AS dst FROM edges
-            UNION ALL
-            SELECT v AS src, u AS dst FROM edges
-        ), deg AS (
+        WITH RECURSIVE {_COPURCHASE_EDGE_CTES}, {_BI_CTE}, deg AS (
             SELECT src, count(*)::BIGINT AS d FROM bi GROUP BY src
         ), hub AS (
             SELECT src AS h FROM deg ORDER BY d DESC, src LIMIT 1
@@ -727,15 +711,8 @@ def copurchase_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     |V|·(depth+1) working rows).""",
 )
 def bfs_hops_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _copurchase_edges(spark, sf_dir)
-    bi = (
-        edges.selectExpr("u AS src", "v AS dst")
-        .unionByName(edges.selectExpr("v AS src", "u AS dst"))
-        .localCheckpoint(eager=True)
-    )
-    deg = bi.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    hub = deg.orderBy(F.desc("d"), F.asc("src")).limit(1).collect()[0]["src"]
-    visited = bfs_distances(bi, hub, BFS_MAX_HOPS)
+    bi = both_directions(_copurchase_edges(spark, sf_dir)).localCheckpoint(eager=True)
+    visited = bfs_distances(bi, top_degree_vertex(bi), BFS_MAX_HOPS)
     return visited.groupBy("hop").agg(
         F.count(F.lit(1)).alias("n_vertices"),
         F.sum("v").alias("vertex_checksum"),
@@ -748,7 +725,6 @@ KCORE_ROUNDS = 3
 
 
 def _kcore_oracle() -> str:
-
     ctes = [_COPURCHASE_EDGE_CTES, "e0 AS (SELECT u, v FROM edges)"]
     for r in range(KCORE_ROUNDS):
         ctes.append(
@@ -792,8 +768,6 @@ def _kcore_oracle() -> str:
     {KCORE_ROUNDS} rounds as chained CTEs.""",
 )
 def kcore_peel_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import kcore_peel
-
     return kcore_peel(
         _copurchase_edges(spark, sf_dir), k=KCORE_K, rounds=KCORE_ROUNDS
     )
@@ -880,14 +854,11 @@ def _hits_oracle() -> str:
     on decimal(38).""",
 )
 def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir)
+    orders = _orders_1995(load_table(spark, "orders", sf_dir))
     li = load_table(spark, "lineitem", sf_dir)
     ce = (
         li.join(
-            orders.where(
-                (F.col("o_orderdate") >= F.lit("1995-01-01").cast("date"))
-                & (F.col("o_orderdate") < F.lit("1996-01-01").cast("date"))
-            ).select("o_orderkey", "o_custkey"),
+            orders.select("o_orderkey", "o_custkey"),
             li.l_orderkey == F.col("o_orderkey"),
         )
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
@@ -1007,10 +978,8 @@ def _markov_oracle() -> str:
     frames — driver-size state over arbitrarily large event logs.""",
 )
 def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     events = load_table(spark, "events", sf_dir)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
         "event_type", F.lag("event_type").over(w).alias("prev")
     )
@@ -1197,20 +1166,8 @@ def association_rules_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # factor, and a larger one fails the job).  One
     # generate feeds both the L2 count (pruned to just the packed key —
     # the 13M-row shuffle carries ONE long per pair instead of two) and
-    # the candidate filter (pruned to ok + key).  Round-10 session 2:
-    # the previous shape re-emitted every pair CARRYING the basket
-    # array (ps copied onto 13M rows) just so the few f2 survivors kept
-    # their tail; profiling showed that array traffic + the 2-long
-    # shuffle were the two dominant stages of the whole query.
-    bp = (
-        fb.select("ok", "ps", F.posexplode("ps").alias("i", "u"))
-        .select(
-            "ok",
-            "u",
-            F.explode(F.expr("slice(ps, i + 2, size(ps) - i - 1)")).alias("v"),
-        )
-        .select("ok", pack_pair("u", "v").alias("uv"))
-    )
+    # the candidate filter (pruned to ok + key).
+    bp = _basket_pairs(fb, "ok").select("ok", pack_pair("u", "v").alias("uv"))
     pc = bp.groupBy("uv").agg(
         F.count(F.lit(1)).cast("long").alias("c_ab")
     )
@@ -1314,7 +1271,6 @@ SSSP_TOPK = 50
 
 
 def _sssp_oracle() -> str:
-
     ctes = [
         _COPURCHASE_LINES_CTE,
         """pw AS (
@@ -1368,10 +1324,6 @@ def _sssp_oracle() -> str:
     scalar and the report is TakeOrdered.""",
 )
 def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    # Basket-array pair counts (round-10, guide §2.4): the generator
-    # pipeline replaces the ok self-join and its two post-checkpoint
-    # exchanges; identical (u, v, c) weights by construction.
     baskets = _copurchase_baskets(spark, sf_dir)
     pw = (
         _basket_pairs(baskets)
@@ -1386,8 +1338,7 @@ def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    hub = deg.orderBy(F.desc("d"), F.asc("src")).limit(1).collect()[0]["src"]
+    hub = top_degree_vertex(e)
     d = (
         e.select(F.col("src").alias("v"))
         .where(F.col("v") == hub)
@@ -1418,11 +1369,7 @@ def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "degree_assortativity_copurchase",
     oracle=f"""
-        WITH {_COPURCHASE_EDGE_CTES}, deg AS (
-            SELECT x AS vertex, count(*)::BIGINT AS d
-            FROM (SELECT u AS x FROM edges UNION ALL SELECT v FROM edges)
-            GROUP BY x
-        ), pairs AS (
+        WITH {_COPURCHASE_EDGE_CTES}, {_DEG_CTE}, pairs AS (
             SELECT du.d AS x, dv.d AS y
             FROM edges e
             JOIN deg du ON e.u = du.vertex
@@ -1462,12 +1409,7 @@ def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def degree_assortativity_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _copurchase_edges(spark, sf_dir)
-    deg = (
-        edges.select(F.col("u").alias("vertex"))
-        .unionAll(edges.select(F.col("v").alias("vertex")))
-        .groupBy("vertex")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = endpoint_degrees(edges)
     du, dv = deg.alias("du"), deg.alias("dv")
     both = (
         edges.join(du, edges.u == F.col("du.vertex"))
@@ -1569,12 +1511,7 @@ def local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(tri.select(F.col("c").alias("node")))
     )
     tcnt = membership.groupBy("node").agg(F.count("*").alias("triangles"))
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
+    deg = endpoint_degrees(edges).toDF("node", "degree")
     out = (
         deg.where(F.col("degree") >= _LCC_MIN_DEG)
         .join(tcnt, "node", "left")
@@ -1601,11 +1538,7 @@ def local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH {_COPURCHASE_EDGE_CTES}, lbl AS (
             SELECT p_partkey AS pk, p_brand AS c FROM part
-        ), deg AS (
-            SELECT x AS vertex, count(*)::BIGINT AS d
-            FROM (SELECT u AS x FROM edges UNION ALL SELECT v FROM edges)
-            GROUP BY x
-        ), dc AS (
+        ), {_DEG_CTE}, dc AS (
             SELECT lbl.c, (sum(deg.d))::BIGINT AS d_c
             FROM deg JOIN lbl ON deg.vertex = lbl.pk GROUP BY lbl.c
         ), agg AS (
@@ -1644,12 +1577,7 @@ def modularity_brand_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         part.select(F.col("p_partkey").alias("pk"), F.col("p_brand").alias("c"))
     )
     edges = _copurchase_edges(spark, sf_dir)
-    deg = (
-        edges.select(F.col("u").alias("vertex"))
-        .unionAll(edges.select(F.col("v").alias("vertex")))
-        .groupBy("vertex")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = endpoint_degrees(edges)
     dc = (
         deg.join(lbl, deg.vertex == lbl.pk)
         .groupBy("c")

@@ -105,7 +105,7 @@ def test_pagerank_matches_replay_including_sink_leak(spark):
     # A's out-weights 1:3 pin the weighted normalization.
     edges = [("A", "B", 1.0), ("A", "C", 3.0), ("B", "C", 2.0), ("C", "D", 1.0)]
     df = spark.createDataFrame(edges, "src string, dst string, weight double")
-    got = {r["node"]: r["rank"] for r in pagerank(df, iterations=3).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
 
     want = _replay_pagerank(edges)
     assert set(got) == set(want) == {"A", "B", "C", "D"}
@@ -130,7 +130,7 @@ def test_personalized_pagerank_matches_replay(spark):
     seeds = spark.createDataFrame([("A",), ("C",)], "node string")
     got = {
         r["node"]: r["rank"]
-        for r in pagerank_personalized(df, seeds, iterations=3).collect()
+        for r in pagerank_personalized(df, seeds).collect()
     }
 
     want = _replay_pagerank(edges, tele={"A": 0.5, "C": 0.5})

@@ -14,6 +14,7 @@ import datetime
 import math
 
 import numpy as np
+import pytest
 
 
 def _replay_kcore(edges, k, rounds):
@@ -135,6 +136,46 @@ def test_sssp_matches_bellman_ford_replay(spark, tmp_path):
     assert 8 not in dict(want)
     assert 7 in dict(want)  # exactly 4 hops -> reached in round 4
 
+
+
+@pytest.mark.parametrize(
+    "name, want",
+    [
+        # hop 0 is the hub alone; hop 1 its three neighbors 9, 10, 11.
+        ("bfs_hops_from_hub", {(0, 1, 3), (1, 3, 30)}),
+        # the hub at distance 0, each neighbor one single-basket edge away.
+        (
+            "sssp_weighted_copurchase",
+            {(3, 0), (9, 1_000_001), (10, 1_000_001), (11, 1_000_001)},
+        ),
+    ],
+)
+def test_hub_tie_breaks_on_lower_part_id(spark, tmp_path, name, want):
+    # Parts 3 and 5 tie on degree 3 (two disjoint stars; part 1 sits in
+    # a lone pair).  The hub is the highest degree, then the LOWER id:
+    # part 3, although part 5's baskets come first.
+    baskets = {
+        10: [5, 6],
+        20: [5, 7],
+        30: [5, 8],
+        40: [3, 9],
+        50: [3, 10],
+        60: [3, 11],
+        70: [1, 2],
+    }
+    orders = [(ok, datetime.datetime(1995, 4, 1)) for ok in baskets]
+    lines = [(ok, pk) for ok, pks in baskets.items() for pk in pks]
+    spark.createDataFrame(
+        orders, "o_orderkey long, o_orderdate timestamp"
+    ).write.parquet(f"{tmp_path}/orders.parquet")
+    spark.createDataFrame(
+        lines, "l_orderkey long, l_partkey long"
+    ).write.parquet(f"{tmp_path}/lineitem.parquet")
+
+    from scats_transis_kinesis_spark.plans.registry import REGISTRY
+
+    got = {tuple(r) for r in REGISTRY[name].fn(spark, str(tmp_path)).collect()}
+    assert got == want
 
 def _round_half(x: float) -> int:
     return math.floor(x + 0.5) if x >= 0 else math.ceil(x - 0.5)

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from scats_transis_kinesis_spark.plans.registry import REGISTRY
@@ -456,19 +457,25 @@ def test_lsh_verify_stays_equi_join_with_cached_inputs(spark):
     # vector sides: as a join condition it let the optimizer join them
     # first, a nested loop over all vectors.
     from scats_transis_kinesis_spark.plans.dedup import (
+        LSH_BANDS,
+        LSH_BITS,
+        R_BANDS,
+        R_BITS,
+        _banded_candidates,
         dedup_embedding_lsh,
         dedup_embedding_lsh_recall,
-        lsh_banding_tradeoff_audit,
     )
     from scats_transis_kinesis_spark.sources.loaders import load_table
 
     jvm = spark.sparkContext._jvm
     try:
-        load_table(spark, "embeddings", SF_DIR).select(
+        e = load_table(spark, "embeddings", SF_DIR).select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        ).cache().count()
+        ).cache()
+        e.count()
         # caches and fills both layouts' candidate frames
-        lsh_banding_tradeoff_audit(spark, SF_DIR).collect()
+        for bands, bits in ((LSH_BANDS, LSH_BITS), (R_BANDS, R_BITS)):
+            _banded_candidates(e, bands, bits).cache().count()
         for build in (dedup_embedding_lsh, dedup_embedding_lsh_recall):
             plan = jvm.PythonSQLUtils.explainString(
                 build(spark, SF_DIR)._jdf.queryExecution(), "formatted"
@@ -507,3 +514,17 @@ def test_cbo_consumes_analyzed_table_statistics(spark, tmp_path):
         assert int(str(stats.rowCount().get())) == t.count()
     finally:
         spark.sql("DROP DATABASE IF EXISTS statsdb CASCADE")
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["pagerank_nation_trade", "ppr_nation_trade_seeds", "lsh_banding_tradeoff_audit"],
+)
+def test_query_leaves_no_cached_frame(spark, name):
+    # A frame a query caches and leaves behind outlives the query: a
+    # later query whose subplan matches it is planned against an
+    # InMemoryRelation with row-count stats, which cost-based join
+    # reordering then acts on, and its blocks hold executor memory.
+    spark.catalog.clearCache()
+    REGISTRY[name].fn(spark, SF_DIR).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
